@@ -21,12 +21,12 @@ import os
 import sys
 import time
 
-from keywords4cv_spark.session import get_spark
+from keywords4cv_spark.session import get_spark, host_cpus
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     reps = int(os.environ.get("SPARK_GRAFT_REPEATS", "2"))
     spark = get_spark(
         master=f"local[{cpus}]", app_name="k4cv-profile", shuffle_partitions=cpus

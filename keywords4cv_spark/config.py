@@ -29,14 +29,6 @@ class EngineConfig:
     # --- corpus selection ---
     lang_filter: str | None = "en"
 
-    # --- tokenizer execution engine ---
-    # "pandas": Arrow-batched Python-process UDF (default — scales
-    # linearly across cores; JDK-17's lambda-based regex engine serializes
-    # badly inside one shared JVM, measured 1.7x at 16 threads vs 3.2x for
-    # Python workers). "jvm": pure column expressions (no Python workers;
-    # byte-identical output, parity-tested).
-    tokenizer: str = "pandas"
-
     # --- scoring extras (reference O2/O3, keywords4cv.py:3207-3221) ---
     whitelist_boost: float = 1.6
     default_section_weight: float = 1.0
@@ -65,8 +57,6 @@ class EngineConfig:
             raise ValueError("block_size must be >= 2")
         if self.n_salts < 1 or self.n_term_buckets < 1:
             raise ValueError("n_salts / n_term_buckets must be >= 1")
-        if self.tokenizer not in ("pandas", "jvm"):
-            raise ValueError(f"unknown tokenizer engine {self.tokenizer!r}")
 
 
 DEFAULT_CONFIG = EngineConfig()

@@ -43,12 +43,7 @@ from keywords4cv_spark.index.build import (
     tokenized_docs,
 )
 from keywords4cv_spark.oracle import tokens_sql
-from keywords4cv_spark.query.bm25 import (
-    bm25_brute_force,
-    bm25_collapse,
-    bm25_explain,
-    more_like_this,
-)
+from keywords4cv_spark.query.bm25 import bm25_brute_force
 from keywords4cv_spark.query.fixtures import QUERY_SET, TOP_K, query_term_pairs
 from keywords4cv_spark.query.wand import bm25_wand
 
@@ -3724,8 +3719,7 @@ def q_bm25_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score decomposition for the top-k hits — served from the
     committed index (query/indexed.py:bm25_explain_indexed: memoized
     dictionary probe + query-term postings decode; no corpus scan, no
-    tokenizer stage). The corpus-scan twin
-    (query/bm25.py:bm25_explain) stays as the rank-identity pin."""
+    tokenizer stage). The DuckDB oracle above is its reference."""
     from keywords4cv_spark.query.indexed import bm25_explain_indexed
 
     index, _icfg = _index_for(spark, sf_dir)
@@ -3779,8 +3773,8 @@ def q_mlt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query/indexed.py:more_like_this_indexed: probes from docmeta,
     driver-side interesting-term ranking over the n_probes texts, one
     postings decode of the selected term_ids; the probe doc itself is
-    excluded from its hit list). The corpus-scan twin
-    (query/bm25.py:more_like_this) stays as the rank-identity pin."""
+    excluded from its hit list). The DuckDB oracle above is its
+    reference."""
     from keywords4cv_spark.query.indexed import more_like_this_indexed
 
     index, _icfg = _index_for(spark, sf_dir)
@@ -3829,9 +3823,8 @@ def q_bm25_collapsed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query/indexed.py:bm25_collapse_indexed: query-term postings decode
     for the scored stream, collapse keys from the slim docmeta table;
     exact collapse over the full scored stream via a
-    (query, key)-partitioned window, then the usual top-k). The
-    corpus-scan twin (query/bm25.py:bm25_collapse) stays as the
-    rank-identity pin."""
+    (query, key)-partitioned window, then the usual top-k). The DuckDB
+    oracle above is its reference."""
     from keywords4cv_spark.query.indexed import bm25_collapse_indexed
 
     index, _icfg = _index_for(spark, sf_dir)
@@ -4189,10 +4182,9 @@ def q_query_string_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     compressed postings, positional phrase chains, pure-disjunctive
     queries routed through Block-Max WAND — the plan a production
     search tier serves; it answers from the shared cached index instead
-    of re-tokenizing the corpus per call. The index-free twin
-    (`search_query_strings`) computes the same result from raw docs and
-    stays pinned rank-identical in tests/test_query_parse.py; both
-    satisfy the same generated DuckDB oracle."""
+    of re-tokenizing the corpus per call. The generated DuckDB oracle
+    (query/parse.py:query_string_oracle) is its reference, here and for
+    the extended grammar in tests/test_query_parse.py."""
     from keywords4cv_spark.query.parse import search_query_strings_indexed
 
     index, icfg = _index_for(spark, sf_dir)

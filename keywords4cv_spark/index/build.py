@@ -5,8 +5,8 @@ Generalizes the reference's chunked extract→vectorize→score pipeline
 DTM build) into a distributed Spark build:
 
   documents scan (lang filter pushed to parquet)
-   → tokens (JVM expr chain, textprep.spark_exprs)
-   → explode → groupBy(doc_id, term).count() = tf       [shuffle 1]
+   → tokenize + per-doc tf in one Arrow pass (term_frequencies_fused;
+     no shuffle — every (doc_id, term) group lives in one input row)
    → dictionary: groupBy(term) df/cf + deterministic term_id
    → doc-band split: EVERY term's postings are segmented by
      segment = pmod(doc_id, n_salts). This (a) bounds the encode group
@@ -28,8 +28,8 @@ verify-then-load checkpoint gate (keywords4cv.py:2821-2895,
 :3336-3339) with Iceberg-snapshot-style semantics at sandbox scale.
 
 Scale notes (1000-executor / 10^12-doc design point):
-- tf aggregation is one hash-partial + final agg shuffle on
-  (doc_id, term); no collect anywhere.
+- tf is computed row-locally inside the tokenize batch (no shuffle);
+  no collect anywhere.
 - dictionary term_id is assigned by a PARALLEL range-partitioned
   scheme (assign_term_ids): repartitionByRange(term) → per-partition
   counts (driver-small collect) → broadcast cumulative offsets →
@@ -59,7 +59,7 @@ from pyspark.sql.window import Window
 
 from keywords4cv_spark.config import DEFAULT_CONFIG, EngineConfig
 from keywords4cv_spark.index.codec import encode_postings
-from keywords4cv_spark.textprep.spark_exprs import ngrams_col, tokens_col
+from keywords4cv_spark.textprep.spark_exprs import ngrams_col
 
 POSTINGS_SCHEMA = T.StructType(
     [
@@ -143,25 +143,20 @@ def tokenized_docs(
 ) -> DataFrame:
     """documents → (doc_id, tokens, dl); lang filter pushed into the scan.
 
-    Tokenizer engine per cfg.tokenizer: both are parity-tested
-    byte-identical; "pandas" (Arrow UDF in Python worker processes) is
-    the default because JDK-17 regex doesn't scale across threads of one
-    JVM (see config.py) — the reference's own multiprocessing fan-out
-    (keywords4cv.py:1673-1692), re-learned the Spark way.
+    Tokenizes with the Arrow-batched Python UDF in worker processes:
+    JDK-17 regex runs one thread at a time inside a JVM, so Python
+    workers scale across cores where JVM regex expressions do not — the
+    reference's own multiprocessing fan-out (keywords4cv.py:1673-1692),
+    re-learned the Spark way.
     """
+    from keywords4cv_spark.deploy import ensure_py_files
+    from keywords4cv_spark.textprep.udfs import make_tokenize_udf
+
     if cfg.lang_filter and "lang" in docs.columns:
         docs = docs.filter(F.col("lang") == cfg.lang_filter)
-    if cfg.tokenizer == "pandas":
-        from keywords4cv_spark.deploy import ensure_py_files
-        from keywords4cv_spark.textprep.udfs import make_tokenize_udf
-
-        ensure_py_files(docs.sparkSession)
-        tok = make_tokenize_udf(cfg.min_token_len, cfg.stopwords)
-        out = docs.withColumn("tokens", tok(F.col(text_col)))
-    else:
-        out = docs.withColumn(
-            "tokens", tokens_col(F.col(text_col), cfg.min_token_len, cfg.stopwords)
-        )
+    ensure_py_files(docs.sparkSession)
+    tok = make_tokenize_udf(cfg.min_token_len, cfg.stopwords)
+    out = docs.withColumn("tokens", tok(F.col(text_col)))
     if cfg.ngram_hi > 1:
         out = out.withColumn("terms", ngrams_col(F.col("tokens"), cfg.ngram_lo, cfg.ngram_hi))
     else:
@@ -414,17 +409,12 @@ def build_index(
     # Caching the tokenized terms arrays as well (a second corpus-sized
     # cache) is pure memory-bus traffic that serializes the build as
     # thread count grows — docmeta/stats are recoverable from tf plus a
-    # slim column-pruned scan of the source table instead. With the
-    # pandas tokenizer the tf rows come out of the tokenize batch itself
-    # (term_frequencies_fused): no explode, no corpus-sized tf shuffle.
-    if cfg.tokenizer == "pandas":
-        tf_df = term_frequencies_fused(
-            docs, cfg, with_positions=cfg.store_positions
-        ).persist()
-    else:
-        tf_df = term_frequencies(
-            tokenized_docs(docs, cfg), with_positions=cfg.store_positions
-        ).persist()
+    # slim column-pruned scan of the source table instead. The tf rows
+    # come out of the tokenize batch itself (term_frequencies_fused): no
+    # explode, no corpus-sized tf shuffle.
+    tf_df = term_frequencies_fused(
+        docs, cfg, with_positions=cfg.store_positions
+    ).persist()
     dictionary = build_dictionary(tf_df).persist()
 
     # --- postings per term bucket, with lineage + verified resume ---

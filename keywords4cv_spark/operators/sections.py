@@ -16,7 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from keywords4cv_spark.config import EngineConfig
-from keywords4cv_spark.textprep.spark_exprs import tokens_col
+from keywords4cv_spark.deploy import ensure_py_files
+from keywords4cv_spark.textprep.udfs import make_tokenize_udf
 
 HEADINGS = ["requirements", "education", "experience"]
 SECTION_WEIGHTS = {"requirements": 1.8, "education": 1.2}
@@ -39,8 +40,10 @@ def section_weight_col(section: Column) -> Column:
 def section_stats(docs: DataFrame, cfg: EngineConfig | None = None) -> DataFrame:
     """(section, n_docs, total_tokens, section_weight) over the corpus."""
     cfg = cfg or EngineConfig(lang_filter=None)
+    ensure_py_files(docs.sparkSession)
+    tok = make_tokenize_udf(cfg.min_token_len, cfg.stopwords)
     d = docs.withColumn("section", leading_section_col(F.col("text"))).withColumn(
-        "n_tokens", F.size(tokens_col(F.col("text"), cfg.min_token_len, cfg.stopwords))
+        "n_tokens", F.size(tok(F.col("text")))
     )
     return (
         d.groupBy("section")

@@ -30,8 +30,10 @@ deterministic, engine-portable rule set:
 
 Scale: everything is split → posexplode → windowed aggregation. The
 sentence/segment relations are per-doc local (windows partition by
-doc_id), so there is no global shuffle beyond the initial explode, and
-no UDF anywhere.
+doc_id), so there is no global shuffle beyond the initial explode.
+Tokens come from the engine's Arrow pandas UDF tokenizer (JDK-17
+regex runs one thread at a time inside a JVM; Python workers scale
+across cores).
 """
 
 from __future__ import annotations
@@ -44,7 +46,8 @@ from keywords4cv_spark import vocab
 from keywords4cv_spark.config import DEFAULT_CONFIG, EngineConfig
 from keywords4cv_spark.session import local_rows
 from keywords4cv_spark.operators.sections import HEADINGS
-from keywords4cv_spark.textprep.spark_exprs import tokens_col
+from keywords4cv_spark.deploy import ensure_py_files
+from keywords4cv_spark.textprep.udfs import make_tokenize_udf
 
 # sentence boundary: runs of ./!/? or bullet (reference custom rule)
 SENT_SPLIT = "[.!?•]+"
@@ -53,6 +56,13 @@ _SENTINEL = "\x01"
 HEAD_RE = "(" + "|".join(HEADINGS) + "):"
 CONTEXT_WINDOW = 1  # reference default context_window_size
 MIN_CONTEXT_HITS = 1
+
+
+def _tokenizer(docs: DataFrame, cfg: EngineConfig):
+    """The engine tokenizer as an Arrow pandas UDF, shipped to the
+    executors of ``docs``' session."""
+    ensure_py_files(docs.sparkSession)
+    return make_tokenize_udf(cfg.min_token_len, cfg.stopwords)
 
 
 def sentences(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -70,12 +80,11 @@ def sentences(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def sentence_stats(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     """(doc_id, sent_idx, n_tokens): per-sentence token counts."""
     s = sentences(docs)
+    tok = _tokenizer(docs, cfg)
     return s.select(
         "doc_id",
         "sent_idx",
-        F.size(tokens_col(F.col("sentence"), cfg.min_token_len, cfg.stopwords))
-        .cast("long")
-        .alias("n_tokens"),
+        F.size(tok(F.col("sentence"))).cast("long").alias("n_tokens"),
     )
 
 
@@ -106,13 +115,12 @@ def term_sections(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFr
     """(doc_id, term, section): nearest-preceding heading at the FIRST
     occurrence of EVERY distinct term in each document."""
     segs = _heading_segments(docs)
+    tok = _tokenizer(docs, cfg)
     toks = segs.select(
         "doc_id",
         "seg_idx",
         "section",
-        F.explode(
-            tokens_col(F.col("body"), cfg.min_token_len, cfg.stopwords)
-        ).alias("term"),
+        F.explode(tok(F.col("body"))).alias("term"),
     )
     w = Window.partitionBy("doc_id", "term").orderBy("seg_idx")
     return (
@@ -143,19 +151,23 @@ def _sentence_skill_hits(
 ) -> DataFrame:
     """(doc_id, sent_idx, term, cnt) for whitelist terms per sentence."""
     s = sentences(docs)
+    tok = _tokenizer(docs, cfg)
     toks = s.select(
         "doc_id",
         "sent_idx",
-        F.explode(
-            tokens_col(F.col("sentence"), cfg.min_token_len, cfg.stopwords)
-        ).alias("term"),
+        F.explode(tok(F.col("sentence"))).alias("term"),
     )
     skills = local_rows(
         spark,
         [(s_,) for s_ in sorted({s_ for _, s_ in vocab.SKILLS})], "term string"
     )
+    # the Python tokenizer stage drops the doc_id partitioning of the
+    # sentence window; restoring it on the (whitelist-sized) hit rows
+    # lets this aggregate and the consumers' per-doc windows share one
+    # exchange instead of paying one each
     return (
         toks.join(F.broadcast(skills), "term", "left_semi")
+        .repartition("doc_id")
         .groupBy("doc_id", "sent_idx", "term")
         .agg(F.count("*").alias("cnt"))
     )

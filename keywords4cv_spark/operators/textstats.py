@@ -89,11 +89,14 @@ def quality_scores(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+    # the divisions guard themselves: a caller's filter on these
+    # columns is pushed below the size > 0 filter, and Catalyst may
+    # evaluate it first (DIVIDE_BY_ZERO on a doc with no tokens)
     out = toks.filter(F.size("tokens") > 0).select(
         "doc_id",
         F.size("tokens").cast("long").alias("n_tokens"),
-        F.round(stops / n, 6).alias("stop_ratio"),
-        F.round(tot_len / n, 6).alias("mean_token_len"),
+        F.round(F.when(n > 0, stops / n), 6).alias("stop_ratio"),
+        F.round(F.when(n > 0, tot_len / n), 6).alias("mean_token_len"),
     )
     q = (
         F.lit(QUALITY_WEIGHTS["len"]) * F.least(F.col("n_tokens") / 100.0, F.lit(1.0))

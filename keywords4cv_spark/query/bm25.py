@@ -96,189 +96,6 @@ def bm25_brute_force(
     return rank_topk(scored, k)
 
 
-def bm25_explain(
-    spark: SparkSession,
-    docs: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    k: int = TOP_K,
-    queries: list[tuple[int, str]] | None = None,
-) -> DataFrame:
-    """Score decomposition for the top-k hits (the Lucene/Elasticsearch
-    ``explain`` API): one row per (query, hit, matched term) carrying
-    tf, df, idf, the k1/b saturation factor, the term's contribution
-    (idf·tf_norm) and the hit's total score + rank — the relevance
-    debugging surface every search engine exposes next to its ranker.
-
-    Each output row is a product of scalars (no float summation), so
-    engine/oracle parity is exact after round(·, 6); the total score
-    uses the engine-wide round-then-rank rule. Scale posture: the top-k
-    relation is |Q|·k rows and is BROADCAST back into the per-term
-    contribution relation, so the explain join adds no shuffle; output
-    is bounded by |Q|·k·|query terms| regardless of corpus size.
-    """
-    toks = tokenized_docs(docs, cfg)
-    tf_df = term_frequencies(toks)
-    dict_df = tf_df.groupBy("term").agg(F.count("*").alias("df"))
-    stats = corpus_stats(toks)
-
-    pairs = queries if queries is not None else query_term_pairs()
-    qdf = local_rows(spark, pairs, "query_id long, term string")
-    qterms = qdf.join(dict_df, "term")
-
-    per_term = (
-        tf_df.join(F.broadcast(qterms), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("idf", bm25_idf_col())
-        .withColumn("tf_norm", bm25_tf_norm_col(cfg))
-    )
-    topk = rank_topk(
-        per_term.groupBy("query_id", "doc_id").agg(
-            F.sum(F.col("idf") * F.col("tf_norm")).alias("score")
-        ),
-        k,
-    )
-    return per_term.join(F.broadcast(topk), ["query_id", "doc_id"]).select(
-        "query_id",
-        "rank",
-        "doc_id",
-        "term",
-        "tf",
-        "df",
-        F.round("idf", SCORE_DECIMALS).alias("idf"),
-        F.round("tf_norm", SCORE_DECIMALS).alias("tf_norm"),
-        F.round(F.col("idf") * F.col("tf_norm"), SCORE_DECIMALS).alias(
-            "contribution"
-        ),
-        "score",
-    )
-
-
-def more_like_this(
-    spark: SparkSession,
-    docs: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    k: int = TOP_K,
-    n_probes: int = 5,
-    n_terms: int = 10,
-) -> DataFrame:
-    """"Find documents like this one" (the Lucene MoreLikeThis query):
-    for each probe document, select its ``n_terms`` most
-    characteristic terms by tf·idf (round-then-rank, term asc
-    tie-break — Lucene's interestingTerms), then rank the rest of the
-    corpus by BM25 over that derived query, excluding the probe
-    itself. Probes are the ``n_probes`` lowest doc_ids of the filtered
-    corpus (deterministic at any sf). Terms are unweighted in the
-    scoring stage (Lucene MLT boost=false default).
-
-    Scale posture: the probe tf relation is |probes|·terms-per-doc
-    rows and every derived relation up to the selected query terms is
-    probe-bounded, so selection windows run over tiny broadcast-side
-    data; the corpus-sized work is exactly one pass over the tf
-    relation with the (|probes|·n_terms)-row term set broadcast into
-    it — the same shape as ``bm25_brute_force``. At serving scale the
-    selected terms would feed the WAND index path unchanged
-    (bm25_wand accepts (query_id, term, weight) triples).
-    """
-    toks = tokenized_docs(docs, cfg)
-    tf_df = term_frequencies(toks)
-    dict_df = tf_df.groupBy("term").agg(F.count("*").alias("df"))
-    stats = corpus_stats(toks)
-
-    probes = (
-        toks.select(F.col("doc_id").alias("query_id"))
-        .orderBy("query_id")
-        .limit(n_probes)
-    )
-    probe_tf = (
-        tf_df.join(
-            F.broadcast(probes), tf_df["doc_id"] == probes["query_id"]
-        )
-        .join(dict_df, "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("tfidf", F.col("tf").cast("double") * bm25_idf_col())
-    )
-    w_sel = Window.partitionBy("query_id").orderBy(
-        F.round("tfidf", SCORE_DECIMALS).desc(), F.col("term")
-    )
-    selected = (
-        probe_tf.withColumn("rn", F.row_number().over(w_sel))
-        .filter(F.col("rn") <= n_terms)
-        .select("query_id", "term", "df")
-    )
-
-    scored = (
-        tf_df.join(F.broadcast(selected), "term")
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .crossJoin(F.broadcast(stats))
-        .withColumn("contrib", bm25_score_col(cfg))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    return rank_topk(scored, k)
-
-
-def bm25_collapse(
-    spark: SparkSession,
-    docs: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    k: int = TOP_K,
-    collapse_col: str = "source",
-    queries: list[tuple[int, str]] | None = None,
-) -> DataFrame:
-    """Field collapsing (the Elasticsearch ``collapse`` API / Google
-    site-clustering): at most ONE hit per (query, collapse key) — the
-    group's best-scoring doc — then the usual top-k over the collapsed
-    list. Exact semantics (collapse over the full scored stream, not a
-    depth-bounded approximation): per (query, key) the argmax doc by
-    the engine-wide round-then-rank rule, then rank.
-
-    Scale posture: collapse is one extra window over the scored
-    relation partitioned by (query, key) — same key space as a
-    groupBy-argmax, shuffle-partitioned by millions of (query, host)
-    groups, no single-partition window anywhere. The metadata join
-    brings in only the collapse column (column-pruned scan).
-    """
-    toks = tokenized_docs(docs, cfg)
-    tf_df = term_frequencies(toks)
-    dict_df = tf_df.groupBy("term").agg(F.count("*").alias("df"))
-    stats = corpus_stats(toks)
-
-    pairs = queries if queries is not None else query_term_pairs()
-    qdf = local_rows(spark, pairs, "query_id long, term string")
-    qterms = qdf.join(dict_df, "term")
-    scored = (
-        tf_df.join(F.broadcast(qterms), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("contrib", bm25_score_col(cfg))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-        .withColumn("score", F.round(F.col("score"), SCORE_DECIMALS))
-    )
-    meta = docs.select("doc_id", F.col(collapse_col).alias("ckey"))
-    w_grp = Window.partitionBy("query_id", "ckey").orderBy(
-        F.col("score").desc(), F.col("doc_id")
-    )
-    best = (
-        scored.join(meta, "doc_id")
-        .withColumn("rn", F.row_number().over(w_grp))
-        .filter(F.col("rn") == 1)
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id")
-    )
-    return (
-        best.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            "doc_id",
-            F.col("ckey").alias(collapse_col),
-            "score",
-        )
-    )
-
-
 # BM25F field weights. Deliberately NOT the section-scoring weights
 # (operators/sections.py SECTION_WEIGHTS, 1.8/1.2): quarters are exact
 # binary fractions, so weighted tf/dl sums are order-independent in

@@ -1,12 +1,9 @@
-"""Index-served twins of the corpus-scan search APIs (explain /
-more-like-this / field collapsing).
+"""Index-served search APIs: score explanation, more-like-this and
+field collapsing.
 
-The corpus-scan originals in ``query/bm25.py`` rebuild
-``tokenized_docs → term_frequencies`` per call — the right shape for a
-rank-identity oracle twin, the wrong one for serving: at crawl scale
-you do not re-tokenize the corpus to answer one MoreLikeThis request.
-These versions answer from the committed ``IndexTables`` exactly like
-``search_query_strings_indexed`` does:
+Each answers from the committed ``IndexTables`` exactly like
+``search_query_strings_indexed`` does — at crawl scale you do not
+re-tokenize the corpus to answer one MoreLikeThis request:
 
 - the dictionary probe is the driver-memoized ``lookup_terms`` (zero
   Spark jobs when warm),
@@ -17,9 +14,9 @@ These versions answer from the committed ``IndexTables`` exactly like
 
 Parity: the index stores the same (term, doc, tf, dl, df, n_docs,
 avgdl) relation the tokenize pass produces (build_index's single
-tokenize pass), so every score is bit-identical to the corpus-scan
-twin before the engine-wide round(·, 6) — pinned per query in
-tests/test_indexed_serving.py.
+tokenize pass), so every score matches the DuckDB oracles of the
+``bm25_explain``, ``mlt_topk`` and ``bm25_collapsed_topk`` registry
+entries after the engine-wide round(·, 6) (tests/test_driver_contract.py).
 """
 
 from __future__ import annotations
@@ -84,7 +81,8 @@ def bm25_explain_indexed(
     k: int = TOP_K,
     queries: list[tuple[int, str]] | None = None,
 ) -> DataFrame:
-    """Index-served ``bm25_explain``: one postings decode for the query
+    """Score decomposition for the top-k hits (the Lucene/Elasticsearch
+    ``explain`` API): one postings decode for the query
     terms; the |Q|·k top-k relation is broadcast back into the per-term
     contribution rows (no shuffle added by the explain join)."""
     pairs = queries if queries is not None else query_term_pairs()
@@ -133,7 +131,7 @@ def more_like_this_indexed(
     n_probes: int = 5,
     n_terms: int = 10,
 ) -> DataFrame:
-    """Index-served ``more_like_this``: probe selection is driver-side
+    """More-like-this (the Lucene MoreLikeThis query): probe selection is driver-side
     (probe docs are the ``n_probes`` lowest doc_ids of docmeta; their
     texts come from a doc_id-pushdown scan of ``n_probes`` rows and are
     tokenized with the parity-pinned Python twin), interesting-term
@@ -203,7 +201,8 @@ def bm25_collapse_indexed(
     collapse_col: str = "source",
     queries: list[tuple[int, str]] | None = None,
 ) -> DataFrame:
-    """Index-served ``bm25_collapse``: the scored stream comes from a
+    """Field collapsing (the Elasticsearch ``collapse`` API), at most one
+    hit per (query, collapse key): the scored stream comes from a
     query-term postings decode and the collapse key from the slim
     docmeta table (its ``url`` column is the source url the index was
     built with) — the documents table is never scanned."""

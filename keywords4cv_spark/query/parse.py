@@ -44,7 +44,7 @@ scoring terms (should + must literals plus every expanded dictionary
 term, deduplicated per query — Lucene's scoring-BooleanQuery
 rewrite), ranked by the engine-wide (round(score, 6) DESC, doc_id)
 rule. Phrases are filter-only (constant-score) BY DEFAULT; passing
-``score_phrases=True`` to either executor (and the oracle generator)
+``score_phrases=True`` to the executor (and the oracle generator)
 scores each non-negated phrase clause as a synthetic term — BM25 with
 tf = its occurrence count (distinct reachable chain END positions,
 proximity_search's n_occurrences semantics) and df = docs containing
@@ -54,15 +54,15 @@ divergence (documented; an exact count is reproducible in SQL, the
 reciprocal-distance sum is not order-free under round(·,6)).
 
 Scale shape: the parsed clause set is query-bounded and broadcast
-everywhere; the corpus is touched by ONE tokenize pass (persisted and
-shared by the tf, dictionary and positional branches) and one
-broadcast-hash join of tf against the expanded clause-term table.
+everywhere; the executor reads the committed index, never the corpus
+text — postings are decoded only for the clause terms, and one
+broadcast-hash join keys them to the expanded clause-term table.
 Prefix/wildcard/regexp/fuzzy expansion is dictionary work only (|V|-bounded range /
 length-band scans — never a postings pass), identical to
-``prefix_query`` / ``term_suggest_fuzzy``. Phrase chains are one
-pushed-down position filter per phrase term, bounded by the query
-set, matching `query/phrase.py`'s indexed twin which answers the
-same plan from compressed positional postings.
+``prefix_query`` / ``term_suggest_fuzzy``. Phrase clauses run on the
+positional index through `query/phrase.py`'s reachability DP.
+The generated DuckDB oracle (``query_string_oracle``) is the one
+reference the executor is tested against.
 
 Semantic lineage: generalizes the reference's whitelist/boolean term
 filtering (/root/reference/keywords4cv.py:962-997) and fuzzy
@@ -81,11 +81,6 @@ from pyspark.sql.window import Window
 
 from keywords4cv_spark.config import DEFAULT_CONFIG, EngineConfig
 from keywords4cv_spark.session import local_rows
-from keywords4cv_spark.index.build import (
-    corpus_stats,
-    term_frequencies,
-    tokenized_docs,
-)
 from keywords4cv_spark.query.bm25 import bm25_score_col, rank_topk
 from keywords4cv_spark.query.fixtures import TOP_K
 from keywords4cv_spark.textprep.normalize import normalize_text, tokenize
@@ -120,10 +115,12 @@ _CLAUSE_RE = re.compile(
 )
 _FUZZY_RE = re.compile(r"^(.*?)~(\d*)$")
 # constructs outside the java.util.regex ∩ RE2 common subset: an
-# unescaped backreference (\1..\9) or a (?...) group that is not the
-# plain non-capturing (?:...) — covers lookaround (?= (?! (?<= (?<!,
+# unescaped backreference (\1..\9) or an unescaped (?...) group that is
+# not the plain non-capturing (?:...) — covers lookaround (?= (?! (?<= (?<!,
 # named groups (?P<x>/(?<x>), flags, conditionals, atomic groups
-_NON_PORTABLE_RE = re.compile(r"(?<!\\)(?:\\\\)*\\[1-9]|\(\?(?!:)")
+_NON_PORTABLE_RE = re.compile(
+    r"(?<!\\)(?:\\\\)*\\[1-9]|(?<!\\)(?:\\\\)*\(\?(?!:)"
+)
 _BOOST_RE = re.compile(r"^(.*?)\^(\d+(?:\.\d+)?)$")
 _FIELD_RE = re.compile(r"^(\w+):(\S+)$")
 
@@ -140,7 +137,7 @@ def _wildcard_pattern(raw: str) -> str:
     `*`/`?` pattern is Lucene's MatchAll/ambiguous case, out of scope.
     Dictionary terms never contain SQL-LIKE metacharacters (`%`/`_`
     are outside the tokenizer alphabet), so the LIKE translation in
-    the executors needs no escape handling."""
+    the executor needs no escape handling."""
     parts = re.split(r"([*?])", raw)
     folded = [
         p if p in ("*", "?") else normalize_text(p).replace(" ", "")
@@ -162,21 +159,32 @@ def _regexp_literal_prefix(pat: str) -> str:
     (at-least-once). A top-level unescaped ``|`` anywhere makes ANY
     prefix unsound (``merge|join`` also matches "join…"), so the
     prefix collapses to "" — alternations inside groups already stop
-    the scan at the ``(``. Used ONLY to prune the dictionary scan; the
-    anchored pattern still decides membership."""
-    depth, esc = 0, False
-    for ch in pat:
-        if esc:
-            esc = False
-            continue
+    the scan at the ``(``. Inside a character class ``(`` and ``|`` are
+    literals, so classes are skipped, not counted as group depth. Used
+    ONLY to prune the dictionary scan; the anchored pattern still
+    decides membership."""
+    depth, i = 0, 0
+    while i < len(pat):
+        ch = pat[i]
         if ch == "\\":
-            esc = True
-        elif ch in "([":
+            i += 1  # the escaped char is a literal
+        elif ch == "[":
+            # a leading ^ and a ] right after it are literals; the class
+            # ends at the next unescaped ]
+            i += 1
+            if pat[i : i + 1] == "^":
+                i += 1
+            if pat[i : i + 1] == "]":
+                i += 1
+            while i < len(pat) and pat[i] != "]":
+                i += 2 if pat[i] == "\\" else 1
+        elif ch == "(":
             depth += 1
-        elif ch in ")]":
+        elif ch == ")":
             depth = max(0, depth - 1)
         elif ch == "|" and depth == 0:
             return ""
+        i += 1
     i = 0
     while i < len(pat) and pat[i] not in _REGEX_METAS:
         i += 1
@@ -294,38 +302,6 @@ def parse_query(q: str) -> list[Clause]:
     return clauses
 
 
-def _phrase_hit_docs(
-    pos: DataFrame, terms: tuple[str, ...], slop: int, counts: bool = False
-) -> DataFrame:
-    """Docs containing the ordered phrase within slop — reachability DP
-    as a chain of equi-joins on doc_id with pushed-down term filters
-    (the index-free twin of query/phrase.py:proximity_search). With
-    ``counts``, returns (doc_id, ptf) where ptf counts the distinct END
-    positions reachable by a valid chain — the same occurrence
-    semantics as proximity_search's n_occurrences."""
-    gap = 1 + slop
-    cur = (
-        pos.filter(F.col("term") == terms[0]).select("doc_id", "p").distinct()
-    )
-    for t in terms[1:]:
-        nxt = pos.filter(F.col("term") == t).select(
-            F.col("doc_id").alias("d2"), F.col("p").alias("p2")
-        )
-        cur = (
-            cur.join(
-                nxt,
-                (F.col("d2") == F.col("doc_id"))
-                & (F.col("p2") > F.col("p"))
-                & (F.col("p2") <= F.col("p") + gap),
-            )
-            .select("doc_id", F.col("p2").alias("p"))
-            .distinct()
-        )
-    if counts:
-        return cur.groupBy("doc_id").agg(F.count("*").cast("long").alias("ptf"))
-    return cur.select("doc_id").distinct()
-
-
 def wand_eligible_qids(parsed: dict[int, list[Clause]]) -> list[int]:
     """Queries whose every clause is a scoring SHOULD term/prefix/fuzzy
     — the pure-disjunctive shape Block-Max WAND answers directly."""
@@ -349,8 +325,8 @@ def _clause_terms(
     fuzzy_max_expansions: int,
     skip_literals: bool = False,
 ) -> DataFrame | None:
-    """Literal + dictionary-expanded clause terms, shared by both
-    executors: (query_id, clause_id, occur, term, *dictionary columns).
+    """Literal + dictionary-expanded clause terms: (query_id,
+    clause_id, occur, term, *dictionary columns).
 
     ``dictionary`` must carry (term, df) and may carry more (term_id in
     the indexed path); extra columns ride through. Literal terms are
@@ -507,8 +483,8 @@ def _boolean_rank(
     attrs: DataFrame | None = None,
     min_should_match: int = 0,
 ) -> DataFrame:
-    """Lucene BooleanQuery candidate algebra + final ranking, shared by
-    both executors. ``hits`` is (query_id, clause_id, occur, doc_id)
+    """Lucene BooleanQuery candidate algebra + final ranking.
+    ``hits`` is (query_id, clause_id, occur, doc_id)
     for TERM-LIKE clauses (term/phrase/prefix/fuzzy); ``scored`` is
     (query_id, doc_id, score); ``attrs`` is the doc-attribute relation
     (doc_id + attribute columns — the doc-values analog) required when
@@ -713,152 +689,6 @@ def _boolean_rank(
     return rank_topk(final, k)
 
 
-def search_query_strings(
-    spark: SparkSession,
-    docs: DataFrame,
-    queries: list[tuple[int, str]],
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    k: int = TOP_K,
-    max_expansions: int = MAX_EXPANSIONS,
-    fuzzy_max_expansions: int = FUZZY_MAX_EXPANSIONS,
-    score_phrases: bool = False,
-    min_should_match: int = 0,
-) -> DataFrame:
-    """Parse + execute query strings → (query_id, rank, doc_id, score).
-
-    Index-free path (the oracle twin): one tokenize pass over the
-    corpus feeds tf, dictionary, stats and the positional phrase
-    chains; all clause tables are broadcast.
-
-    ``score_phrases`` lifts the filter-only phrase simplification:
-    each non-negated phrase clause contributes BM25 with tf = its
-    occurrence count (distinct chain END positions, the
-    proximity_search semantics) and df = the number of docs containing
-    the phrase, scaled by the clause boost — Lucene PhraseQuery
-    scoring with an exact occurrence count in place of sloppyFreq's
-    1/(distance+1) weighting. Default off: the gated
-    query_string_search result is unchanged.
-    """
-    parsed = {qid: parse_query(s) for qid, s in queries}
-
-    toks = tokenized_docs(docs, cfg).select("doc_id", "tokens", "dl").persist()
-    toks = toks.withColumn("terms", F.col("tokens"))
-    tf_df = term_frequencies(toks)
-    dict_df = tf_df.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-
-    empty_hits = spark.createDataFrame(
-        [], "query_id long, clause_id long, occur string, doc_id long"
-    )
-    cterm = _clause_terms(
-        spark, dict_df, parsed, max_expansions, fuzzy_max_expansions
-    )
-    if cterm is not None:
-        # ONE broadcast-hash join of tf against every clause term; all
-        # scoring and filtering relations derive from this hit table
-        joined = tf_df.join(F.broadcast(cterm), "term").persist()
-        scored = (
-            joined.filter(F.col("occur") != MUST_NOT)
-            # a term reached via two clauses scores once, at its max boost
-            .groupBy("query_id", "term", "doc_id", "tf", "dl", "df")
-            .agg(F.max("boost").alias("boost"))
-            .crossJoin(F.broadcast(corpus_stats(toks).drop("sum_dl")))
-            .withColumn("contrib", bm25_score_col(cfg) * F.col("boost"))
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum("contrib").alias("score"))
-        )
-        thits = joined.select(
-            "query_id", "clause_id", "occur", "doc_id"
-        ).distinct()
-    else:
-        scored = spark.createDataFrame([], "query_id long, doc_id long, score double")
-        thits = empty_hits
-
-    # ---- phrase clauses: positional reachability chains -------------
-    phrase_clauses = [
-        (qid, cid, c)
-        for qid, cs in parsed.items()
-        for cid, c in enumerate(cs)
-        if c.kind == "phrase"
-    ]
-    phits = empty_hits
-    pscored = None
-    if phrase_clauses:
-        pos = toks.select(
-            "doc_id", F.posexplode("tokens").alias("p", "term")
-        )
-        for qid, cid, c in phrase_clauses:
-            if score_phrases and c.occur != MUST_NOT:
-                pc = _phrase_hit_docs(
-                    pos, c.terms, c.slop, counts=True
-                ).localCheckpoint()
-                h = pc.select(
-                    F.lit(qid).cast("long").alias("query_id"),
-                    F.lit(cid).cast("long").alias("clause_id"),
-                    F.lit(c.occur).alias("occur"),
-                    "doc_id",
-                )
-                contrib = _phrase_bm25_contrib(
-                    pc,
-                    toks.select("doc_id", "dl"),
-                    corpus_stats(toks).drop("sum_dl"),
-                    cfg,
-                    qid,
-                    c.boost,
-                )
-                pscored = (
-                    contrib if pscored is None else pscored.unionByName(contrib)
-                )
-            else:
-                h = _phrase_hit_docs(pos, c.terms, c.slop).select(
-                    F.lit(qid).cast("long").alias("query_id"),
-                    F.lit(cid).cast("long").alias("clause_id"),
-                    F.lit(c.occur).alias("occur"),
-                    "doc_id",
-                )
-            phits = phits.unionByName(h)
-    if pscored is not None:
-        scored = (
-            scored.unionByName(pscored)
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum("score").alias("score"))
-        )
-
-    hits = thits.unionByName(phits)
-    attrs = docs
-    if cfg.lang_filter and "lang" in docs.columns:
-        attrs = docs.filter(F.col("lang") == cfg.lang_filter)
-    return _boolean_rank(
-        spark, parsed, hits, scored, k, attrs=attrs,
-        min_should_match=min_should_match,
-    )
-
-
-def _phrase_bm25_contrib(
-    pcounts: DataFrame,
-    dls: DataFrame,
-    stats: DataFrame,
-    cfg: EngineConfig,
-    qid: int,
-    boost: float,
-) -> DataFrame:
-    """(query_id, doc_id, score): one phrase clause's BM25 contribution
-    from its per-doc occurrence counts — the phrase is treated as a
-    single synthetic term with tf = ptf and df = |docs containing it|
-    (Lucene PhraseQuery's idf-of-the-phrase reading)."""
-    pdf = pcounts.agg(F.count("*").cast("long").alias("df"))
-    return (
-        pcounts.join(dls, "doc_id")
-        .crossJoin(F.broadcast(pdf))
-        .crossJoin(F.broadcast(stats))
-        .withColumn("tf", F.col("ptf"))
-        .select(
-            F.lit(qid).cast("long").alias("query_id"),
-            "doc_id",
-            (bm25_score_col(cfg) * F.lit(boost)).alias("score"),
-        )
-    )
-
-
 def _decode_postings(spark, index, wanted) -> DataFrame:
     """Decode the posting blocks of the requested term_ids →
     (term_id, doc_id, tf, dl). ``wanted`` is a (term_id) DataFrame or a
@@ -1051,19 +881,25 @@ def search_query_strings_indexed(
     score_phrases: bool = False,
     min_should_match: int = 0,
 ) -> DataFrame:
-    """The indexed twin of `search_query_strings` — same parse tree,
-    same clause algebra, but every leaf relation reads the compressed
-    index: clause expansion probes the dictionary table, scoring/filter
-    hits come from a bucket-pruned posting-block decode of ONLY the
-    clause terms (dl rides in the payload, df in the dictionary,
-    n_docs/avgdl from the one-row stats), and phrase clauses run
-    against the positional index via the reachability DP in
-    query/phrase.py (whose n_occurrences feeds BM25 phrase scoring
-    when ``score_phrases`` is on — same opt-in as the index-free
-    twin). Rank-identical to the index-free path by construction
-    (pinned in tests/test_query_parse.py); query cost scales with the
-    postings of the query terms, never the corpus — this is the plan
-    that serves at 10^12 docs.
+    """Parse + execute query strings → (query_id, rank, doc_id, score).
+
+    Every leaf relation reads the compressed index: clause expansion
+    probes the dictionary table, scoring/filter hits come from a
+    bucket-pruned posting-block decode of ONLY the clause terms (dl
+    rides in the payload, df in the dictionary, n_docs/avgdl from the
+    one-row stats), and phrase clauses run against the positional
+    index via the reachability DP in query/phrase.py.
+
+    ``score_phrases`` lifts the filter-only phrase simplification:
+    each non-negated phrase clause contributes BM25 with tf = its
+    occurrence count (proximity_search's n_occurrences) and df = the
+    number of docs containing the phrase, scaled by the clause boost.
+    Default off: the gated query_string_search result is unchanged.
+    ``doc_attrs`` is the doc-attribute relation filter/range clauses
+    probe (default: the index's docmeta). Value-level equal to the
+    generated DuckDB oracle (pinned in tests/test_query_parse.py);
+    query cost scales with the postings of the query terms, never the
+    corpus.
     """
     return _indexed_search(
         spark,
@@ -1404,7 +1240,7 @@ def explain_query_strings(
 
 
 # ---------------------------------------------------------------------------
-# DuckDB oracle generator — the SQL twin of search_query_strings
+# DuckDB oracle generator — the SQL reference for search_query_strings_indexed
 # ---------------------------------------------------------------------------
 
 
@@ -1414,7 +1250,7 @@ def _phrase_chain_sql(
     """Chained DISTINCT-join reachability SQL over a `pos(doc_id, term,
     p)` CTE (same shape as driver_queries._proximity_oracle). With
     ``counts``, yields (doc_id, ptf) — distinct chain END positions per
-    doc, the _phrase_hit_docs/proximity_search occurrence count."""
+    doc, the proximity_search occurrence count."""
     gap = 1 + slop
     cur = f"SELECT DISTINCT doc_id, p FROM pos WHERE term = '{terms[0]}'"
     for t in terms[1:]:
@@ -1473,7 +1309,7 @@ def query_string_oracle(
     oracle scores the exact corpus the Spark side tokenizes;
     ``attr_sql`` the doc-attribute relation filter/range clauses probe
     (the same corpus restriction as the tokenize CTE).
-    ``score_phrases`` mirrors the executors' opt-in phrase-frequency
+    ``score_phrases`` mirrors the executor's opt-in phrase-frequency
     BM25 scoring (synthetic-term tf = chain END-position count, df =
     docs containing the phrase, clause boost applied);
     ``min_should_match`` mirrors the Lucene candidacy knob.

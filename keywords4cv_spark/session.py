@@ -1,10 +1,12 @@
 """SparkSession factory with the engine's standard knobs.
 
-Local-mode defaults are tuned for the sandbox (single JVM,
-``local[$SPARK_GRAFT_CPUS]``); on a real cluster the same config keys
-apply, minus master. AQE is on so runtime stats re-plan joins and
-coalesce post-shuffle partitions (replaces the reference's Q-learning
-chunk-size tuner, keywords4cv.py:1823-1891).
+Local-mode defaults fit the host (single JVM, ``local[N]`` with N the
+CPUs this process may run on, heap half of physical RAM; the env vars
+``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` override them); on
+a real cluster the same config keys apply, minus master. AQE is on so
+runtime stats re-plan joins and coalesce post-shuffle partitions
+(replaces the reference's Q-learning chunk-size tuner,
+keywords4cv.py:1823-1891).
 """
 
 from __future__ import annotations
@@ -14,15 +16,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """Local-mode parallelism: ``SPARK_GRAFT_CPUS``, else the CPUs this
+    process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half of physical RAM. A heap
+    larger than the host never fills, so the JVM neither collects nor
+    spills before the kernel's OOM killer ends it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{ram // 2 >> 20}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "keywords4cv_spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(cpus)
+    shuffle_partitions = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -43,7 +62,7 @@ def get_spark(
         # relation × concurrent tasks, or cache eviction serializes the
         # build (measured: 500k-doc build at local[16] SLOWER than
         # local[4] on an 8g heap)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_mem())
         # NB: spark.cleaner.periodicGC.interval was tried at 5min for
         # long benches (200 query invocations leak out-of-scope cached
         # blocks until a driver GC runs) and REVERTED: the forced full

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from keywords4cv_spark.config import DEFAULT_CONFIG, EngineConfig
 from keywords4cv_spark.index.build import (
-    term_frequencies,
     term_frequencies_fused,
     tokenized_docs,
 )
@@ -71,10 +70,7 @@ def stage_postings_stream(
         # each micro-batch stages as scan → mapInPandas → append, with
         # no shuffle at all — the identical relation the classic
         # explode+groupBy path produces (parity-pinned in pytest)
-        if cfg.tokenizer == "pandas":
-            tf = term_frequencies_fused(batch_df, cfg)
-        else:
-            tf = term_frequencies(tokenized_docs(batch_df, cfg))
+        tf = term_frequencies_fused(batch_df, cfg)
         tf.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
             staging_dir
         )

@@ -7,10 +7,9 @@ with the parity-pinned Python twin and emits ONE partial-count row per
 (width, gram) per Arrow batch — the map-side pre-aggregation the
 window path denies Spark (the window forces a corpus-wide shuffle+sort
 BEFORE any aggregation; here the only exchange carries gram-vocabulary
-partials). The JDK-17 regex engine also serializes under threads
-(config.EngineConfig.tokenizer), so moving tokenize into the Python
-workers is itself a throughput win — the same reasoning as the index
-build's term_frequencies_fused.
+partials). JDK-17 regex runs one thread at a time inside a JVM, so
+tokenizing in the Python workers is itself a throughput win — the
+same reasoning as the index build's term_frequencies_fused.
 """
 
 from __future__ import annotations

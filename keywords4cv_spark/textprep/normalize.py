@@ -17,8 +17,8 @@ rules (no spaCy model drift):
 - n-grams: contiguous space-joined n-grams for n in [lo, hi]
   (/root/reference/_generate_ngrams.py:1-33).
 
-Every other implementation (Spark column expressions in
-``spark_exprs``, pandas UDFs in ``udfs``, DuckDB SQL in
+Every other implementation (pandas UDFs in ``udfs``, n-gram column
+expressions in ``spark_exprs``, DuckDB SQL in
 ``keywords4cv_spark.oracle``) MUST reproduce these functions
 byte-identically per input string — enforced by
 tests/test_tokenizer_parity.py.

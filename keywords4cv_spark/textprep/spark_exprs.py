@@ -1,60 +1,18 @@
-"""Spark column-expression twins of the frozen tokenizer.
+"""Spark column-expression n-grams over a tokenized array column.
 
-This is the production hot path: pure `pyspark.sql.functions`
-expressions, so normalization/tokenization stays JVM-side inside
-whole-stage codegen — no Python in the loop at all. The pandas-UDF
-variant (``udfs.py``) exists for the Arrow-UDF contract and as a
-second parity witness; both must equal ``normalize.py`` output
-byte-for-byte.
+``ngrams_col`` builds contiguous n-grams with higher-order functions
+(transform/slice/sequence), so it stays JVM-side inside whole-stage
+codegen with no UDF. Tokenization itself runs in the Arrow pandas UDF
+(``udfs.make_tokenize_udf``): JDK-17 regex runs one thread at a time
+inside a JVM, so JVM regex tokenize expressions do not scale across
+cores. Output must equal ``normalize.generate_ngrams`` element for
+element (parity-tested).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from keywords4cv_spark.textprep.normalize import (
-    EMAIL_PATTERN,
-    LEMMA_EXCEPTIONS,
-    NON_ALNUM_PATTERN,
-    SEP_PATTERN,
-    URL_PATTERN,
-)
-
-
-def normalized_col(col: Column) -> Column:
-    """JVM twin of normalize.normalize_text (same regex order)."""
-    c = F.lower(col)
-    c = F.regexp_replace(c, URL_PATTERN, " ")
-    c = F.regexp_replace(c, EMAIL_PATTERN, " ")
-    c = F.regexp_replace(c, NON_ALNUM_PATTERN, " ")
-    c = F.regexp_replace(c, SEP_PATTERN, " ")
-    return F.trim(c)
-
-
-def tokens_col(
-    col: Column,
-    min_token_len: int = 2,
-    stopwords: frozenset[str] = frozenset(),
-) -> Column:
-    """array<string> of kept tokens. NB: F.filter (not array_except,
-    which would dedup and break term frequencies). The lemma fold is a
-    constant map literal lookup (element_at on a literal map → NULL for
-    non-exceptions → coalesce) — stays in codegen, no UDF."""
-    arr = F.split(normalized_col(col), " ")
-    stop = sorted(stopwords)
-
-    def keep(x: Column) -> Column:
-        cond = F.length(x) >= min_token_len
-        if stop:
-            cond = cond & ~x.isin(*stop)
-        return cond
-
-    kept = F.filter(arr, keep)
-    lemma_map = F.create_map(
-        *[F.lit(x) for kv in sorted(LEMMA_EXCEPTIONS.items()) for x in kv]
-    )
-    return F.transform(kept, lambda t: F.coalesce(F.element_at(lemma_map, t), t))
 
 
 def ngrams_col(tokens: Column, lo: int = 1, hi: int = 3) -> Column:

@@ -872,15 +872,3 @@ def test_fused_tf_has_no_shuffle(spark, docs):
         plan = explain_str(term_frequencies_fused(docs, EngineConfig()), mode="simple")
     assert "Exchange" not in plan, plan
 
-
-def test_fused_build_fingerprint_matches_classic(spark, docs, tmp_path):
-    """Whole-corpus input_hash is computed from (term, doc_id, tf) — a
-    fused and a classic build over the same corpus must agree on it,
-    which pins the entire tf relation byte-for-byte."""
-    cfg_f = EngineConfig(n_term_buckets=2, shuffle_partitions=8, tokenizer="pandas")
-    cfg_c = EngineConfig(n_term_buckets=2, shuffle_partitions=8, tokenizer="jvm")
-    ix_f = build_index(spark, docs, str(tmp_path / "f"), cfg_f, url_col="source")
-    ix_c = build_index(spark, docs, str(tmp_path / "c"), cfg_c, url_col="source")
-    hf = int(ix_f.stats.collect()[0]["input_hash"])
-    hc = int(ix_c.stats.collect()[0]["input_hash"])
-    assert hf == hc, (hf, hc)

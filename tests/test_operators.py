@@ -432,3 +432,16 @@ def test_audio_stats_distributed(spark, docs):
         assert row.sum_sq == int((x * x).sum())
         assert row.zero_crossings == int(np.count_nonzero(x[:-1] * x[1:] < 0))
         assert abs(row.mean_amp - x.sum() / len(x)) < 1e-12
+
+
+def test_quality_scores_filter_over_tokenless_docs(spark):
+    """A caller's filter on quality is pushed below the no-token filter;
+    a doc that tokenizes to nothing must not raise DIVIDE_BY_ZERO."""
+    from keywords4cv_spark.operators import textstats
+
+    docs = spark.createDataFrame(
+        [(1, "!!! ??", "en"), (2, "the data pipeline runs every night", "en")],
+        "doc_id long, text string, lang string",
+    )
+    rows = textstats.quality_scores(docs).filter(F.col("quality") >= 0.1).collect()
+    assert [r.doc_id for r in rows] == [2]

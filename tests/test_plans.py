@@ -287,36 +287,6 @@ def test_bucket_encode_reuses_cached_partitioning(spark, sf_dir):
     assert "Exchange" not in above_cache, above_cache
 
 
-def test_query_string_search_single_tokenize_no_shuffled_hash(spark, sf_dir):
-    """The index-free query-string executor's docstring claims: the
-    corpus is tokenized ONCE (persisted toks feed tf, dictionary, stats
-    and every phrase chain) and nothing clause-sized falls back to a
-    shuffled join. In the plan: every tokenizer stage (ArrowEvalPython)
-    must sit inside an InMemoryRelation cached-plan recipe — its near
-    context shows the cache node — and no ShuffledHashJoin appears
-    anywhere. (The REGISTRY entry runs the indexed executor, asserted
-    separately below.)"""
-    from keywords4cv_spark.driver_queries import _QS_QUERIES, _docs, CFG, TOP_K
-    from keywords4cv_spark.query.parse import search_query_strings
-
-    df = search_query_strings(spark, _docs(spark, sf_dir), _QS_QUERIES, CFG, TOP_K)
-    # tree form, not formatted explain: the formatted renderer flattens
-    # InMemoryRelation recipes into numbered top-level nodes, losing the
-    # containment this test asserts
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan, plan
-    assert "ShuffledHashJoin" not in plan, plan
-    lines = plan.splitlines()
-    for i, ln in enumerate(lines):
-        if "ArrowEvalPython" in ln:
-            ctx = "\n".join(lines[max(0, i - 6) : i])
-            assert "InMemoryRelation" in ctx or "InMemoryTableScan" in ctx, (
-                "live tokenize stage outside the cache:\n" + "\n".join(
-                    lines[max(0, i - 8) : i + 2]
-                )
-            )
-
-
 def test_query_string_indexed_reads_postings_not_corpus(spark, sf_dir):
     """The registry's query_string_search (indexed executor) must never
     touch the corpus text: no documents-parquet scan, no tokenizer

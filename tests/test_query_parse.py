@@ -1,21 +1,159 @@
 """Query-string parser unit tests + executor semantics pins.
 
-The full engine-vs-DuckDB value parity of `query_string_search` is
-covered by tests/test_driver_contract.py (registry-wide); these pin
-the parser grammar and the Lucene BooleanQuery candidate algebra on a
-tiny in-memory corpus where expected hits are hand-checkable.
+The executor under test is the indexed one
+(`search_query_strings_indexed`); its reference is the generated
+DuckDB oracle (`query_string_oracle`), compared value by value on the
+gate corpus for every query set below. The Lucene BooleanQuery
+candidate algebra is also pinned on a tiny in-memory corpus where
+expected hits are hand-checkable.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from keywords4cv_spark.config import EngineConfig
 from keywords4cv_spark.query.parse import (
     FUZZY_MAX_DIST,
     Clause,
     parse_query,
-    search_query_strings,
+    search_query_strings_indexed,
 )
+
+# Hand-checkable docs, one group per semantic pinned below. The groups
+# share no token any of their queries reads, so one small positional
+# index serves every tiny-corpus test.
+_TINY_DOCS = [
+    # boolean algebra
+    (1, "merge join fast"),
+    (2, "merge only here"),
+    (3, "join slow merge"),
+    (4, "table scan merge join"),
+    # dictionary expansion
+    (11, "quorum ledger quorumset"),
+    (12, "stream window"),
+    # phrase occurrence scoring (equal doc lengths)
+    (21, "alpha beta alpha beta xx"),
+    (22, "alpha beta zz yy ww"),
+    (23, "alpha zz beta yy ww"),
+    # min_should_match
+    (31, "aa bb cc dd"),
+    (32, "aa pp qq rr"),
+    (33, "aa bb pp qq"),
+]
+_TINY_CFG = EngineConfig(
+    store_positions=True, n_term_buckets=1, n_salts=1, shuffle_partitions=4
+)
+
+
+@pytest.fixture(scope="module")
+def tiny_index(spark, tmp_path_factory):
+    """One positional index over `_TINY_DOCS`; it serves as both the
+    postings and the positional index of the executor."""
+    from keywords4cv_spark.index.build import build_index
+
+    docs = spark.createDataFrame(
+        [(d, t, "en") for d, t in _TINY_DOCS],
+        "doc_id long, text string, lang string",
+    )
+    return build_index(
+        spark, docs, str(tmp_path_factory.mktemp("tiny_index")), _TINY_CFG
+    )
+
+
+def _tiny_search(spark, index, queries, **kw):
+    return search_query_strings_indexed(
+        spark, index, index, queries, _TINY_CFG, **kw
+    ).collect()
+
+
+def _indexed_vs_oracle(spark, sf_dir, name, queries, **kw):
+    """Indexed executor vs the generated DuckDB oracle on the gate
+    corpus, value by value; returns the engine frame. Filter/range
+    clauses probe the lang-filtered documents table on both sides."""
+    import duckdb
+
+    from test_driver_contract import _assert_frames_match
+
+    from keywords4cv_spark.driver_queries import (
+        _TF_CTES,
+        _docs,
+        _index_for,
+        _pos_index_for,
+    )
+    from keywords4cv_spark.query.parse import query_string_oracle
+
+    index, icfg = _index_for(spark, sf_dir)
+    attrs = (
+        _docs(spark, sf_dir)
+        .filter(F.col("lang") == "en")
+        .select("doc_id", "source", "n_chars")
+    )
+    got = search_query_strings_indexed(
+        spark, index, _pos_index_for(spark, sf_dir), queries, icfg,
+        doc_attrs=attrs, **kw,
+    ).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
+    )
+    want = con.execute(query_string_oracle(queries, _TF_CTES, **kw)).fetchdf()
+    assert len(got) > 0
+    _assert_frames_match(name, got, want)
+    return got
+
+
+# A second physical layout of the gate corpus: one term bucket and one
+# salt (the cached gate indexes use 4 × 4), positions stored, so the
+# one index serves as both postings and positional index.
+_RELAYOUT_CFG = EngineConfig(n_term_buckets=1, n_salts=1, store_positions=True)
+
+
+@pytest.fixture(scope="module")
+def relayout_index(spark, sf_dir, tmp_path_factory):
+    from keywords4cv_spark.driver_queries import _docs
+    from keywords4cv_spark.index.build import build_index
+
+    return build_index(
+        spark,
+        _docs(spark, sf_dir),
+        str(tmp_path_factory.mktemp("relayout_index")),
+        _RELAYOUT_CFG,
+        url_col="source",
+    )
+
+
+def _indexed_rank_identical(spark, sf_dir, relayout, queries, **kw):
+    """The indexed executor ranks and scores (round(·,6)) identically
+    on the cached 4-bucket/4-salt gate indexes and on the 1-bucket,
+    1-salt positional index: bucket pruning, salt merge and the
+    positions payload never change an answer."""
+    from keywords4cv_spark.driver_queries import (
+        _docs,
+        _index_for,
+        _pos_index_for,
+    )
+
+    index, icfg = _index_for(spark, sf_dir)
+    attrs = (
+        _docs(spark, sf_dir)
+        .filter(F.col("lang") == "en")
+        .select("doc_id", "source", "n_chars")
+    )
+
+    def ranked(idx, pos, cfg):
+        return {
+            (r.query_id, r.rank): (r.doc_id, round(r.score, 6))
+            for r in search_query_strings_indexed(
+                spark, idx, pos, queries, cfg, doc_attrs=attrs, **kw
+            ).collect()
+        }
+
+    want = ranked(index, _pos_index_for(spark, sf_dir), icfg)
+    got = ranked(relayout, relayout, _RELAYOUT_CFG)
+    assert want  # non-degenerate
+    assert got == want
 
 
 def test_parse_occurs_and_kinds():
@@ -45,19 +183,10 @@ def test_parse_normalization_and_degenerate():
     assert parse_query('"" * ~ + -') == []
 
 
-def test_executor_boolean_algebra(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "merge join fast", "en"),
-            (2, "merge only here", "en"),
-            (3, "join slow merge", "en"),
-            (4, "table scan merge join", "en"),
-        ],
-        "doc_id long, text string, lang string",
+def test_executor_boolean_algebra(spark, tiny_index):
+    rows = _tiny_search(
+        spark, tiny_index, [(0, "merge +join -slow"), (1, '+"table scan"')]
     )
-    rows = search_query_strings(
-        spark, docs, [(0, "merge +join -slow"), (1, '+"table scan"')]
-    ).collect()
     by_q = {}
     for r in rows:
         by_q.setdefault(r.query_id, []).append(r)
@@ -68,55 +197,27 @@ def test_executor_boolean_algebra(spark):
     assert [(r.doc_id, r.score) for r in by_q[1]] == [(4, 0.0)]
 
 
-def test_executor_expansion_and_empty(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "merge table mergesort", "en"),
-            (2, "stream window", "en"),
-        ],
-        "doc_id long, text string, lang string",
+def test_executor_expansion_and_empty(spark, tiny_index):
+    rows = _tiny_search(
+        spark, tiny_index, [(0, "quo*"), (1, "ledgr~"), (2, "zzznope")]
     )
-    rows = search_query_strings(
-        spark, docs, [(0, "mer*"), (1, "tble~"), (2, "zzznope")]
-    ).collect()
     by_q = {}
     for r in rows:
         by_q.setdefault(r.query_id, []).append(r)
-    assert sorted(r.doc_id for r in by_q[0]) == [1]  # merge + mergesort
-    assert sorted(r.doc_id for r in by_q[1]) == [1]  # tble~ → table
+    assert sorted(r.doc_id for r in by_q[0]) == [11]  # quorum + quorumset
+    assert sorted(r.doc_id for r in by_q[1]) == [11]  # ledgr~ → ledger
     assert 2 not in by_q  # absent term → no candidates
 
 
 def test_indexed_executor_rank_identical(spark, sf_dir):
-    """The index-backed executor must reproduce the oracle-gated
-    index-free path exactly — same candidates, ranks and round(·,6)
-    scores — on the full gated query-string set (every construct:
-    must/should/not literals, must-phrase, prefix, fuzzy, sloppy
-    phrase, absent term)."""
-    from keywords4cv_spark.driver_queries import (
-        _QS_QUERIES,
-        _docs,
-        _index_for,
-        _pos_index_for,
-    )
-    from keywords4cv_spark.query.parse import search_query_strings_indexed
+    """The indexed executor reproduces the generated DuckDB oracle
+    exactly — same candidates, ranks and round(·,6) scores — on the
+    full gated query-string set (every construct: must/should/not
+    literals, must-phrase, prefix, fuzzy, sloppy phrase, absent
+    term)."""
+    from keywords4cv_spark.driver_queries import _QS_QUERIES
 
-    index, icfg = _index_for(spark, sf_dir)
-    pos_index = _pos_index_for(spark, sf_dir)
-    want = {
-        (r.query_id, r.rank): (r.doc_id, round(r.score, 6))
-        for r in search_query_strings(
-            spark, _docs(spark, sf_dir), _QS_QUERIES, icfg
-        ).collect()
-    }
-    got = {
-        (r.query_id, r.rank): (r.doc_id, round(r.score, 6))
-        for r in search_query_strings_indexed(
-            spark, index, pos_index, _QS_QUERIES, icfg
-        ).collect()
-    }
-    assert want  # non-degenerate
-    assert got == want
+    _indexed_vs_oracle(spark, sf_dir, "query_string_search", _QS_QUERIES)
 
 
 def test_search_with_snippets_windows_exact(spark, sf_dir):
@@ -244,6 +345,9 @@ def test_parse_regexp():
     assert parse_query("/[a-/") == []
     assert parse_query("//") == []
     assert parse_query("/.*/") == []
+    # an escaped paren before ? is a literal, not a (?...) group
+    assert parse_query(r"/a\(?b/") == [Clause("should", "regexp", (r"a\(?b",))]
+    assert parse_query(r"/a\\(?=b)/") == []
     # a URL-shaped bare token is NOT a regexp clause (no leading slash;
     # it parses as a field filter, Lucene's reading of `http:...`)
     assert parse_query("http://foo/bar")[0].kind == "filter"
@@ -255,76 +359,33 @@ def test_parse_regexp():
     assert _regexp_literal_prefix("ab?c") == "a"
     assert _regexp_literal_prefix(".*x") == ""
     assert _regexp_literal_prefix("m[ae]rge") == "m"
+    # inside a class, ( and | are literals: the top-level | still voids
+    # the prefix
+    assert _regexp_literal_prefix("a[(]|b") == ""
+    assert _regexp_literal_prefix("x[](]|y") == ""
+    assert _regexp_literal_prefix("a[|]b") == "a"
 
 
 def test_extended_grammar_matches_generated_oracle(spark, sf_dir):
     """The oracle generator covers the FULL grammar (boost, filter,
-    range): the index-free executor and the generated DuckDB SQL must
-    agree value-level on a query set exercising every extension."""
-    import duckdb
-
-    from test_driver_contract import _assert_frames_match
-
-    from keywords4cv_spark.driver_queries import _TF_CTES, _docs
-    from keywords4cv_spark.query.parse import query_string_oracle
-
-    got = search_query_strings(
-        spark, _docs(spark, sf_dir), _EXT_QUERIES
-    ).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
-    want = con.execute(query_string_oracle(_EXT_QUERIES, _TF_CTES)).fetchdf()
-    assert len(got) > 0
-    _assert_frames_match("extended_grammar", got, want)
+    range, wildcard, regexp): the indexed executor, given the
+    doc-attribute relation explicitly (docmeta carries no source/n_chars
+    — attributes are the doc-values analog, a pruned scan of the source
+    table), and the generated DuckDB SQL agree value by value."""
+    _indexed_vs_oracle(spark, sf_dir, "extended_grammar", _EXT_QUERIES)
 
 
-def test_extended_grammar_indexed_rank_identical(spark, sf_dir):
-    """tf-path ↔ indexed-path rank identity for filter/range/boost
-    clauses; the indexed path takes the doc-attribute relation
-    explicitly (docmeta carries no source/n_chars — attributes are the
-    doc-values analog, a pruned scan of the source table)."""
-    from keywords4cv_spark.driver_queries import (
-        _docs,
-        _index_for,
-        _pos_index_for,
-    )
-    from keywords4cv_spark.query.parse import search_query_strings_indexed
-
-    index, icfg = _index_for(spark, sf_dir)
-    pos_index = _pos_index_for(spark, sf_dir)
-    docs = _docs(spark, sf_dir)
-    attrs = docs.filter(F.col("lang") == "en").select(
-        "doc_id", "source", "n_chars"
-    )
-    want = {
-        (r.query_id, r.rank): (r.doc_id, round(r.score, 6))
-        for r in search_query_strings(spark, docs, _EXT_QUERIES, icfg).collect()
-    }
-    got = {
-        (r.query_id, r.rank): (r.doc_id, round(r.score, 6))
-        for r in search_query_strings_indexed(
-            spark, index, pos_index, _EXT_QUERIES, icfg, doc_attrs=attrs
-        ).collect()
-    }
-    assert want
-    assert got == want
+def test_extended_grammar_indexed_rank_identical(spark, sf_dir, relayout_index):
+    """Index-layout rank identity for filter/range/boost/wildcard/regexp
+    clauses."""
+    _indexed_rank_identical(spark, sf_dir, relayout_index, _EXT_QUERIES)
 
 
 def test_wand_fast_path_routing_and_identity(spark, sf_dir):
     """Pure-disjunctive query strings route to Block-Max WAND (unit:
-    eligibility predicate) and stay rank-identical to the index-free
-    executor across boosts and dictionary expansions."""
-    from keywords4cv_spark.driver_queries import (
-        _docs,
-        _index_for,
-        _pos_index_for,
-    )
-    from keywords4cv_spark.query.parse import (
-        search_query_strings_indexed,
-        wand_eligible_qids,
-    )
+    eligibility predicate) and stay equal to the generated DuckDB
+    oracle across boosts and dictionary expansions."""
+    from keywords4cv_spark.query.parse import wand_eligible_qids
 
     qs = [
         (0, "merge join"),          # plain disjunction
@@ -340,20 +401,7 @@ def test_wand_fast_path_routing_and_identity(spark, sf_dir):
     for bad in ["+merge join", "merge -slow", '"merge join"', "source:src1 merge"]:
         assert wand_eligible_qids({9: parse_query(bad)}) == []
 
-    index, icfg = _index_for(spark, sf_dir)
-    pos_index = _pos_index_for(spark, sf_dir)
-    want = {
-        (r.query_id, r.rank): (r.doc_id, round(r.score, 6))
-        for r in search_query_strings(spark, _docs(spark, sf_dir), qs, icfg).collect()
-    }
-    got = {
-        (r.query_id, r.rank): (r.doc_id, round(r.score, 6))
-        for r in search_query_strings_indexed(
-            spark, index, pos_index, qs, icfg
-        ).collect()
-    }
-    assert want
-    assert got == want
+    _indexed_vs_oracle(spark, sf_dir, "wand_fast_path", qs)
 
 
 def test_explain_query_strings_decomposes_scores(spark, sf_dir):
@@ -444,7 +492,9 @@ def test_regexp_prefix_pruning_is_sound_fuzz():
 
     atom = st.one_of(
         st.text(alphabet="abcdxyz", min_size=1, max_size=3),
-        st.sampled_from(["[ab]", "[a-d]", ".", "(a|b)", "(merge|join)"]),
+        st.sampled_from(
+            ["[ab]", "[a-d]", ".", "(a|b)", "(merge|join)", "[(]", "[|(]", "[](]"]
+        ),
     )
     piece = st.tuples(atom, st.sampled_from(["", "*", "+", "?", "{1,2}"])).map(
         lambda t: t[0] + t[1]
@@ -472,38 +522,30 @@ def test_regexp_prefix_pruning_is_sound_fuzz():
     _check()
 
 
-def test_phrase_scoring_counts_occurrences(spark):
+def test_phrase_scoring_counts_occurrences(spark, tiny_index):
     """Opt-in phrase-frequency scoring: BM25 over the occurrence count
     (distinct chain END positions). Two docs of equal length, one with
     the phrase twice, one once → the double-occurrence doc ranks first
     with a strictly higher score; a non-adjacent doc only matches (and
     scores) once slop allows the gap. Default stays constant-score 0."""
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta alpha beta xx", "en"),
-            (2, "alpha beta zz yy ww", "en"),
-            (3, "alpha zz beta yy ww", "en"),
-        ],
-        "doc_id long, text string, lang string",
+    rows = _tiny_search(
+        spark, tiny_index, [(0, '"alpha beta"')], score_phrases=True
     )
-    rows = search_query_strings(
-        spark, docs, [(0, '"alpha beta"')], score_phrases=True
-    ).collect()
     by_doc = {r.doc_id: r for r in rows}
-    assert set(by_doc) == {1, 2}
-    assert by_doc[1].rank == 1 and by_doc[2].rank == 2
-    assert by_doc[1].score > by_doc[2].score > 0.0
+    assert set(by_doc) == {21, 22}
+    assert by_doc[21].rank == 1 and by_doc[22].rank == 2
+    assert by_doc[21].score > by_doc[22].score > 0.0
 
-    # slop=1 admits the gapped doc 3, at the lowest score (ptf 1, dl 5)
-    rows = search_query_strings(
-        spark, docs, [(0, '"alpha beta"~1')], score_phrases=True
-    ).collect()
-    assert {r.doc_id for r in rows} == {1, 2, 3}
+    # slop=1 admits the gapped doc 23, at the lowest score (ptf 1, dl 5)
+    rows = _tiny_search(
+        spark, tiny_index, [(0, '"alpha beta"~1')], score_phrases=True
+    )
+    assert {r.doc_id for r in rows} == {21, 22, 23}
     assert all(r.score > 0.0 for r in rows)
 
     # default: filter-only phrases, constant score 0 (the gated shape)
-    rows = search_query_strings(spark, docs, [(0, '"alpha beta"')]).collect()
-    assert {r.doc_id for r in rows} == {1, 2}
+    rows = _tiny_search(spark, tiny_index, [(0, '"alpha beta"')])
+    assert {r.doc_id for r in rows} == {21, 22}
     assert all(r.score == 0.0 for r in rows)
 
 
@@ -517,59 +559,23 @@ _PH_QUERIES = [
 
 
 def test_phrase_scoring_matches_generated_oracle(spark, sf_dir):
-    """Engine (index-free, score_phrases=True) vs the generated DuckDB
-    oracle (score_phrases=True): value-level agreement across must /
-    should / boosted / sloppy phrase clauses on the gate corpus."""
-    import duckdb
-
-    from test_driver_contract import _assert_frames_match
-
-    from keywords4cv_spark.driver_queries import _TF_CTES, _docs
-    from keywords4cv_spark.query.parse import query_string_oracle
-
-    got = search_query_strings(
-        spark, _docs(spark, sf_dir), _PH_QUERIES, score_phrases=True
-    ).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
+    """Indexed executor (score_phrases=True: proximity_search
+    n_occurrences feeding BM25) vs the generated DuckDB oracle
+    (score_phrases=True): value-level agreement across must / should /
+    boosted / sloppy phrase clauses on the gate corpus."""
+    got = _indexed_vs_oracle(
+        spark, sf_dir, "phrase_scoring", _PH_QUERIES, score_phrases=True
     )
-    want = con.execute(
-        query_string_oracle(_PH_QUERIES, _TF_CTES, score_phrases=True)
-    ).fetchdf()
-    assert len(got) > 0
     # phrase scoring must actually engage: scored phrase-only hits
     assert (got[got.query_id == 2].score > 0).any()
-    _assert_frames_match("phrase_scoring", got, want)
 
 
-def test_phrase_scoring_indexed_rank_identical(spark, sf_dir):
-    """Indexed executor with score_phrases=True (proximity_search
-    n_occurrences feeding BM25) reproduces the index-free path exactly
-    — ranks and round(·,6) scores."""
-    from keywords4cv_spark.driver_queries import (
-        _docs,
-        _index_for,
-        _pos_index_for,
+def test_phrase_scoring_indexed_rank_identical(spark, sf_dir, relayout_index):
+    """Index-layout rank identity with score_phrases=True (phrase
+    occurrence counts from the positional index feeding BM25)."""
+    _indexed_rank_identical(
+        spark, sf_dir, relayout_index, _PH_QUERIES, score_phrases=True
     )
-    from keywords4cv_spark.query.parse import search_query_strings_indexed
-
-    index, icfg = _index_for(spark, sf_dir)
-    pos_index = _pos_index_for(spark, sf_dir)
-    want = {
-        (r.query_id, r.rank): (r.doc_id, round(r.score, 6))
-        for r in search_query_strings(
-            spark, _docs(spark, sf_dir), _PH_QUERIES, icfg, score_phrases=True
-        ).collect()
-    }
-    got = {
-        (r.query_id, r.rank): (r.doc_id, round(r.score, 6))
-        for r in search_query_strings_indexed(
-            spark, index, pos_index, _PH_QUERIES, icfg, score_phrases=True
-        ).collect()
-    }
-    assert want
-    assert got == want
 
 
 def test_explain_includes_scored_phrases(spark, sf_dir):
@@ -607,42 +613,27 @@ def test_explain_includes_scored_phrases(spark, sf_dir):
         assert abs(sum(p.contribution for p in parts) - h.score) < 1e-4, h
 
 
-def test_min_should_match(spark):
+def test_min_should_match(spark, tiny_index):
     """Lucene minimumShouldMatch: candidacy requires >= msm distinct
     should clauses (on top of musts); scoring is untouched for the
     docs that survive; an unsatisfiable threshold matches nothing."""
-    docs = spark.createDataFrame(
-        [
-            (1, "aa bb cc dd", "en"),
-            (2, "aa xx yy zz", "en"),
-            (3, "aa bb xx yy", "en"),
-        ],
-        "doc_id long, text string, lang string",
-    )
     q = [(0, "aa bb cc")]
-    base = {
-        r.doc_id: r.score
-        for r in search_query_strings(spark, docs, q).collect()
-    }
-    assert set(base) == {1, 2, 3}
-    for msm, expect in [(2, {1, 3}), (3, {1}), (4, set())]:
-        rows = search_query_strings(
-            spark, docs, q, min_should_match=msm
-        ).collect()
+    base = {r.doc_id: r.score for r in _tiny_search(spark, tiny_index, q)}
+    assert set(base) == {31, 32, 33}
+    for msm, expect in [(2, {31, 33}), (3, {31}), (4, set())]:
+        rows = _tiny_search(spark, tiny_index, q, min_should_match=msm)
         assert {r.doc_id for r in rows} == expect, msm
         # survivors keep their unfiltered scores: candidacy only
         assert all(r.score == base[r.doc_id] for r in rows), msm
     # msm applies ON TOP of musts: must 'aa' AND >= 2 of the shoulds
-    rows = search_query_strings(
-        spark, docs, [(0, "+aa bb cc dd")], min_should_match=2
-    ).collect()
-    assert {r.doc_id for r in rows} == {1}
+    rows = _tiny_search(
+        spark, tiny_index, [(0, "+aa bb cc dd")], min_should_match=2
+    )
+    assert {r.doc_id for r in rows} == {31}
     # Lucene MatchNoDocs rewrite: a must-only query (ZERO should
     # clauses) under msm > 0 matches nothing — msm exceeds the
     # optional-clause count
-    rows = search_query_strings(
-        spark, docs, [(0, "+aa")], min_should_match=2
-    ).collect()
+    rows = _tiny_search(spark, tiny_index, [(0, "+aa")], min_should_match=2)
     assert rows == []
 
 
@@ -656,52 +647,18 @@ _MSM_QUERIES = [
 
 
 def test_min_should_match_matches_generated_oracle(spark, sf_dir):
-    import duckdb
-
-    from test_driver_contract import _assert_frames_match
-
-    from keywords4cv_spark.driver_queries import _TF_CTES, _docs
-    from keywords4cv_spark.query.parse import query_string_oracle
-
-    got = search_query_strings(
-        spark, _docs(spark, sf_dir), _MSM_QUERIES, min_should_match=2
-    ).toPandas()
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
+    """Indexed executor under msm=2 (WAND fast path bypassed — WAND
+    answers the msm<=1 disjunction) vs the generated DuckDB oracle."""
+    got = _indexed_vs_oracle(
+        spark, sf_dir, "min_should_match", _MSM_QUERIES, min_should_match=2
     )
-    want = con.execute(
-        query_string_oracle(_MSM_QUERIES, _TF_CTES, min_should_match=2)
-    ).fetchdf()
-    assert len(got) > 0
     assert not (got.query_id == 3).any()  # unsatisfiable → no rows
     assert not (got.query_id == 4).any()  # must-only + msm → MatchNoDocs
-    _assert_frames_match("min_should_match", got, want)
 
 
-def test_min_should_match_indexed_rank_identical(spark, sf_dir):
-    """Indexed executor under msm=2 (WAND fast path bypassed — WAND
-    answers the msm<=1 disjunction) reproduces the index-free path."""
-    from keywords4cv_spark.driver_queries import (
-        _docs,
-        _index_for,
-        _pos_index_for,
+def test_min_should_match_indexed_rank_identical(spark, sf_dir, relayout_index):
+    """Index-layout rank identity under msm=2 (WAND fast path bypassed
+    — WAND answers the msm<=1 disjunction)."""
+    _indexed_rank_identical(
+        spark, sf_dir, relayout_index, _MSM_QUERIES, min_should_match=2
     )
-    from keywords4cv_spark.query.parse import search_query_strings_indexed
-
-    index, icfg = _index_for(spark, sf_dir)
-    pos_index = _pos_index_for(spark, sf_dir)
-    want = {
-        (r.query_id, r.rank): (r.doc_id, round(r.score, 6))
-        for r in search_query_strings(
-            spark, _docs(spark, sf_dir), _MSM_QUERIES, icfg, min_should_match=2
-        ).collect()
-    }
-    got = {
-        (r.query_id, r.rank): (r.doc_id, round(r.score, 6))
-        for r in search_query_strings_indexed(
-            spark, index, pos_index, _MSM_QUERIES, icfg, min_should_match=2
-        ).collect()
-    }
-    assert want
-    assert got == want

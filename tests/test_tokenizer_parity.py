@@ -1,4 +1,4 @@
-"""Tokenizer parity: pure Python == Spark exprs == pandas UDF == DuckDB SQL.
+"""Tokenizer parity: pure Python == pandas UDF == DuckDB SQL.
 
 This is the byte-identical-per-url invariant from BASELINE.json
 input_hint, enforced across every implementation of the frozen
@@ -19,12 +19,12 @@ from keywords4cv_spark.textprep.normalize import (
     normalize_text,
     tokenize,
 )
-from keywords4cv_spark.textprep.spark_exprs import (
-    ngrams_col,
-    normalized_col,
-    tokens_col,
+from keywords4cv_spark.textprep.spark_exprs import ngrams_col
+from keywords4cv_spark.textprep.udfs import (
+    make_ngrams_udf,
+    make_normalize_udf,
+    make_tokenize_udf,
 )
-from keywords4cv_spark.textprep.udfs import make_ngrams_udf, make_tokenize_udf
 
 TRICKY = [
     "",
@@ -60,28 +60,34 @@ def test_pure_python_golden():
     assert generate_ngrams(["a"], 2, 3) == []
 
 
-def _spark_tokenize(spark, texts, via_udf=False):
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, text string")
-    if via_udf:
-        tok = make_tokenize_udf()(F.col("text"))
-    else:
-        tok = tokens_col(F.col("text"))
-    rows = df.select("i", F.coalesce(normalized_col(F.col("text")), F.lit("")).alias("norm"),
-                     tok.alias("toks")).orderBy("i").collect()
-    return [(r.norm, list(r.toks)) for r in rows]
+def _tricky_tokens(spark):
+    """TRICKY as (i, text, toks) with toks from the engine tokenizer."""
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(TRICKY)], "i long, text string")
+    return df.withColumn("toks", make_tokenize_udf()(F.col("text")))
 
 
 def test_spark_exprs_match_python(spark):
-    got = _spark_tokenize(spark, TRICKY, via_udf=False)
-    for text, (norm, toks) in zip(TRICKY, got):
-        assert norm == normalize_text(text), repr(text)
-        assert toks == tokenize(text), repr(text)
+    """The JVM-side expression (`ngrams_col`) on Python-tokenized
+    arrays equals `generate_ngrams` for every n-gram width range."""
+    df = spark.createDataFrame(
+        [(i, tokenize(t)) for i, t in enumerate(TRICKY)], "i long, toks array<string>"
+    )
+    for lo, hi in [(1, 1), (1, 2), (2, 2), (2, 3), (1, 3), (3, 3)]:
+        rows = df.select("i", ngrams_col(F.col("toks"), lo, hi).alias("g")).orderBy("i").collect()
+        for text, r in zip(TRICKY, rows):
+            assert list(r.g) == generate_ngrams(tokenize(text), lo, hi), (lo, hi, repr(text))
 
 
 def test_pandas_udf_matches_python(spark):
-    got = _spark_tokenize(spark, TRICKY, via_udf=True)
-    for text, (_, toks) in zip(TRICKY, got):
-        assert toks == tokenize(text), repr(text)
+    rows = (
+        _tricky_tokens(spark)
+        .select("i", make_normalize_udf()(F.col("text")).alias("norm"), "toks")
+        .orderBy("i")
+        .collect()
+    )
+    for text, r in zip(TRICKY, rows):
+        assert r.norm == normalize_text(text), repr(text)
+        assert list(r.toks) == tokenize(text), repr(text)
 
 
 def test_duckdb_sql_matches_python():
@@ -96,9 +102,8 @@ def test_duckdb_sql_matches_python():
 
 
 def test_ngrams_exprs_match_python(spark):
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(TRICKY)], "i long, text string")
     rows = (
-        df.withColumn("toks", tokens_col(F.col("text")))
+        _tricky_tokens(spark)
         .select("i", ngrams_col(F.col("toks"), 1, 3).alias("g"))
         .orderBy("i")
         .collect()
@@ -108,10 +113,9 @@ def test_ngrams_exprs_match_python(spark):
 
 
 def test_ngrams_udf_matches_python(spark):
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(TRICKY)], "i long, text string")
     g = make_ngrams_udf(1, 3)(F.col("toks"))
     rows = (
-        df.withColumn("toks", tokens_col(F.col("text")))
+        _tricky_tokens(spark)
         .select("i", g.alias("g"))
         .orderBy("i")
         .collect()
@@ -132,12 +136,14 @@ def test_duckdb_parity_property(text):
 
 
 def test_real_corpus_parity(spark):
-    """Full sf0.001 documents table: Spark exprs == DuckDB SQL == Python."""
+    """Full sf0.001 documents table: pandas UDF == DuckDB SQL == Python."""
     path = "/root/testdata/sf0.001/documents.parquet"
     sdf = spark.read.parquet(path)
     got = {
         r.doc_id: list(r.toks)
-        for r in sdf.select("doc_id", tokens_col(F.col("text")).alias("toks")).collect()
+        for r in sdf.select(
+            "doc_id", make_tokenize_udf()(F.col("text")).alias("toks")
+        ).collect()
     }
     con = duckdb.connect()
     oracle = dict(
@@ -153,7 +159,7 @@ def test_real_corpus_parity(spark):
 
 def test_lemma_exception_fold(spark):
     """The deterministic lemma pass (plural/irregular exception
-    dictionary) folds identically in all four twins and only AFTER
+    dictionary) folds identically in every implementation and only AFTER
     length/stopword filtering."""
     from keywords4cv_spark.textprep.normalize import LEMMA_EXCEPTIONS
 
@@ -164,7 +170,7 @@ def test_lemma_exception_fold(spark):
     assert not any(t in LEMMA_EXCEPTIONS for t in want)
     got_spark = (
         spark.createDataFrame([(text,)], "text string")
-        .select(tokens_col(F.col("text")).alias("t"))
+        .select(make_tokenize_udf()(F.col("text")).alias("t"))
         .collect()[0]["t"]
     )
     con = duckdb.connect()
