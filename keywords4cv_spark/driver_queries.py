@@ -2642,7 +2642,7 @@ def q_segment_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # positional index: phrase search from compressed postings
 # ---------------------------------------------------------------------------
 
-from keywords4cv_spark.query.phrase import phrase_search  # noqa: E402
+from keywords4cv_spark.query.phrase import proximity_search  # noqa: E402
 
 _POS_INDEX_CACHE: dict[str, object] = {}
 
@@ -2668,7 +2668,7 @@ def q_phrase_query_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same results as phrase_query (shared oracle), but answered from the
     positional compressed index instead of re-scanning text."""
     index = _pos_index_for(spark, sf_dir)
-    return phrase_search(spark, index, _PHRASES)
+    return proximity_search(spark, index, _PHRASES, slop=0)
 
 
 # prefix (wildcard) retrieval: (query_id, prefix)
@@ -2714,26 +2714,11 @@ def q_prefix_query(
             .filter(F.col("_rk") <= max_expansions)
             .drop("_rk")
         )
-    expanded = expanded.drop("term")
-    srow = index.stats_row()
-    scan = index.postings
-    if "bucket" in scan.columns and "n_term_buckets" in index.stats.columns:
-        nb = int(srow["n_term_buckets"])
-        # bounded by n_term_buckets regardless of expansion width
-        buckets = sorted(
-            int(r["bucket"])
-            for r in expanded.select(
-                (F.col("term_id") % F.lit(nb)).alias("bucket")
-            )
-            .distinct()
-            .collect()
+    blocks = index.postings_for(spark, expanded.drop("term"))
+    if blocks is None:
+        return spark.createDataFrame(
+            [], "query_id long, doc_id long, n_terms long, total_tf long"
         )
-        if not buckets:
-            return spark.createDataFrame(
-                [], "query_id long, doc_id long, n_terms long, total_tf long"
-            )
-        scan = scan.filter(F.col("bucket").isin(buckets))
-    blocks = scan.join(F.broadcast(expanded), "term_id")
     from keywords4cv_spark.index.codec import decode_block
 
     def explode_counts(batches):
@@ -2825,8 +2810,6 @@ def q_proximity_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sloppy-phrase (ordered proximity) retrieval from the positional
     index — Lucene PhraseQuery-with-slop analog; reachability DP over
     position lists, exact for any term count."""
-    from keywords4cv_spark.query.phrase import proximity_search
-
     return proximity_search(
         spark, _pos_index_for(spark, sf_dir), _PROX_PHRASES, slop=_PROX_SLOP
     )
@@ -2940,7 +2923,7 @@ def q_phrase_query_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         _POS_COMPACT_CACHE[sf_dir] = compact_generations(
             spark, gens, f"{base}/compacted", cfg
         )
-    return phrase_search(spark, _POS_COMPACT_CACHE[sf_dir], _PHRASES)
+    return proximity_search(spark, _POS_COMPACT_CACHE[sf_dir], _PHRASES, slop=0)
 
 
 # ---------------------------------------------------------------------------
@@ -3174,7 +3157,7 @@ def q_phrase_query_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     no ranking interplay, so dropping tombstones after matching is
     exact (query/phrase.py)."""
     idx, _cfg, tombs = _pos_recrawl_index(spark, sf_dir)
-    return phrase_search(spark, idx, _PHRASES, exclude=tombs)
+    return proximity_search(spark, idx, _PHRASES, slop=0, exclude=tombs)
 
 
 @register(

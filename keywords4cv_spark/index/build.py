@@ -52,13 +52,14 @@ import time
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from keywords4cv_spark.config import DEFAULT_CONFIG, EngineConfig
 from keywords4cv_spark.index.codec import encode_postings
+from keywords4cv_spark.session import local_rows
 from keywords4cv_spark.textprep.spark_exprs import ngrams_col
 
 POSTINGS_SCHEMA = T.StructType(
@@ -92,6 +93,15 @@ LINEAGE_SCHEMA = (
     "status string, rows long, n_blocks long, n_terms long, "
     "payload_bytes long, input_hash long, started_ts double, finished_ts double"
 )
+
+
+def term_bucket(term_id, n_term_buckets: int):
+    """The postings layout's bucket rule, pmod(term_id, n_term_buckets):
+    a Column for the build and compaction writers, an int for query-time
+    directory pruning (Python's % is pmod for a positive modulus)."""
+    if isinstance(term_id, Column):
+        return F.pmod(term_id, F.lit(n_term_buckets)).cast("int")
+    return term_id % n_term_buckets
 
 
 @dataclass
@@ -136,6 +146,51 @@ class IndexTables:
             for t in missing:
                 self._term_cache[t] = found.get(t)
         return {t: v for t in set(terms) if (v := self._term_cache[t]) is not None}
+
+    def postings_for(
+        self, spark: SparkSession, wanted, schema: str = "term_id long"
+    ) -> DataFrame | None:
+        """The one postings reader: the posting blocks of the wanted
+        terms, broadcast-joined to the wanted rows and pruned by bucket
+        directory (a partition filter, so other buckets' files are never
+        listed) and by term_id. None when no term resolves.
+
+        ``wanted`` is driver-local rows matching ``schema``. A leading
+        ``term string`` column resolves through ``lookup_terms``: rows
+        of unknown terms drop and ``term_id`` is prepended. Otherwise
+        the first column is the ``term_id`` itself. ``wanted`` may also
+        be a DataFrame with a ``term_id`` column, for term sets too wide
+        for a literal IN list (a prefix expansion): its distinct bucket
+        set is collected, bounded by n_term_buckets, and the broadcast
+        join alone prunes term ids.
+        """
+        nb = int(self.stats_row()["n_term_buckets"])
+        scan = self.postings
+        if isinstance(wanted, DataFrame):
+            keys = wanted
+            buckets = sorted(
+                int(r[0])
+                for r in wanted.select(term_bucket(F.col("term_id"), nb))
+                .distinct()
+                .collect()
+            )
+        else:
+            rows = list(wanted)
+            if schema.split()[0] == "term":
+                lut = self.lookup_terms([r[0] for r in rows])
+                rows = [(lut[r[0]][0], *r) for r in rows if r[0] in lut]
+                schema = "term_id long, " + schema
+            if not rows:
+                return None
+            term_ids = sorted({r[0] for r in rows})
+            buckets = sorted({term_bucket(t, nb) for t in term_ids})
+            keys = local_rows(spark, rows, schema)
+            scan = scan.filter(F.col("term_id").isin(term_ids))
+        if not buckets:
+            return None
+        return scan.filter(F.col("bucket").isin(buckets)).join(
+            F.broadcast(keys), "term_id"
+        )
 
 
 def tokenized_docs(
@@ -448,7 +503,7 @@ def build_index(
     posted = (
         tf_df.join(dict_side, "term")
         .withColumn("segment", F.pmod(F.col("doc_id"), F.lit(cfg.n_salts)).cast("int"))
-        .withColumn("bucket", F.pmod(F.col("term_id"), F.lit(cfg.n_term_buckets)).cast("int"))
+        .withColumn("bucket", term_bucket(F.col("term_id"), cfg.n_term_buckets))
         .select("segment", "bucket", *posted_cols)
         .repartition(cfg.shuffle_partitions, "term_id", "segment")
         .persist()
@@ -469,10 +524,7 @@ def build_index(
     hashes: dict[int, int] = {
         int(r["b"]): int(r["h"])
         for r in dictionary.select(
-            F.pmod(F.col("term_id"), F.lit(cfg.n_term_buckets))
-            .cast("int")
-            .alias("b"),
-            "h",
+            term_bucket(F.col("term_id"), cfg.n_term_buckets).alias("b"), "h"
         )
         .groupBy("b")
         .agg(F.expr("bit_xor(h)").alias("h"))

@@ -14,12 +14,13 @@ generations pile up this operator compacts them:
 - postings: per (term, doc-band) group across all generations, decode
   the blocks, concatenate (disjoint doc ids, sorted), re-encode with
   the COMBINED statistics — block-max scores are exact again, not the
-  conservative tf-only bounds bm25_wand_multi must use. Positional
-  payloads (store_positions generations) merge too: the per-doc
-  position streams are decoded, carried through the doc-id sort and
-  re-encoded, so phrase search works unchanged on the compacted index;
+  conservative tf-only bounds a multi-generation WAND query must use.
+  Positional payloads (store_positions generations) merge too: the
+  per-doc position streams are decoded, carried through the doc-id sort
+  and re-encoded, so phrase search works unchanged on the compacted
+  index;
 - the compacted tree is written in the same layout build_index
-  produces, so load_index / bm25_wand / phrase_search work unchanged.
+  produces, so load_index / bm25_wand / proximity_search work unchanged.
   The commit unit is the whole compaction (one _SUCCESS per table) —
   the Iceberg-snapshot analog for a one-shot rewrite.
 
@@ -45,6 +46,7 @@ from keywords4cv_spark.index.build import (
     IndexTables,
     assign_term_ids,
     load_index,
+    term_bucket,
 )
 from keywords4cv_spark.index.codec import (
     decode_block,
@@ -77,11 +79,7 @@ def compact_generations(
     # frames positions by tf, codec.py decode_block_positions), but a
     # MIX of positional and non-positional generations can't produce a
     # consistent index: refuse that, not positions themselves
-    pos_flags = [
-        "store_positions" in idx.stats.columns
-        and bool(idx.stats_row()["store_positions"])
-        for idx in indexes
-    ]
+    pos_flags = [bool(idx.stats_row()["store_positions"]) for idx in indexes]
     store_positions = all(pos_flags)
     if any(pos_flags) and not store_positions:
         raise ValueError(
@@ -200,9 +198,7 @@ def compact_generations(
         joined.repartition(cfg.shuffle_partitions, "new_term_id", "segment")
         .groupBy("new_term_id", "segment")
         .applyInPandas(merge_group, POSTINGS_SCHEMA)
-        .withColumn(
-            "bucket", F.pmod(F.col("term_id"), F.lit(cfg.n_term_buckets)).cast("int")
-        )
+        .withColumn("bucket", term_bucket(F.col("term_id"), cfg.n_term_buckets))
     )
     merged.sortWithinPartitions("term_id", "segment", "block_id").write.mode(
         "overwrite"
@@ -348,9 +344,7 @@ def _compact_purging(
         posted.repartition(cfg.shuffle_partitions, "term_id", "segment")
         .groupBy("term_id", "segment")
         .applyInPandas(encoder, POSTINGS_SCHEMA)
-        .withColumn(
-            "bucket", F.pmod(F.col("term_id"), F.lit(cfg.n_term_buckets)).cast("int")
-        )
+        .withColumn("bucket", term_bucket(F.col("term_id"), cfg.n_term_buckets))
     )
     merged.sortWithinPartitions("term_id", "segment", "block_id").write.mode(
         "overwrite"

@@ -114,13 +114,6 @@ _CLAUSE_RE = re.compile(
     r"|(\S+))"  #                                        bare token
 )
 _FUZZY_RE = re.compile(r"^(.*?)~(\d*)$")
-# constructs outside the java.util.regex ∩ RE2 common subset: an
-# unescaped backreference (\1..\9) or an unescaped (?...) group that is
-# not the plain non-capturing (?:...) — covers lookaround (?= (?! (?<= (?<!,
-# named groups (?P<x>/(?<x>), flags, conditionals, atomic groups
-_NON_PORTABLE_RE = re.compile(
-    r"(?<!\\)(?:\\\\)*\\[1-9]|(?<!\\)(?:\\\\)*\(\?(?!:)"
-)
 _BOOST_RE = re.compile(r"^(.*?)\^(\d+(?:\.\d+)?)$")
 _FIELD_RE = re.compile(r"^(\w+):(\S+)$")
 
@@ -150,6 +143,51 @@ def _wildcard_pattern(raw: str) -> str:
 _REGEX_METAS = set(".^$*+?{}[]|()\\")
 
 
+def _regex_atoms(pat: str):
+    """The atoms of a regex: every escape (inside character classes
+    too) as its two characters, each whole character class as "[]",
+    any other character as itself. Inside a class ``(``, ``|`` and
+    ``?`` are literals, so classes are one atom, not group syntax. A
+    leading ``^`` and a ``]`` right after it are class literals; the
+    class ends at the next unescaped ``]``."""
+    i = 0
+    while i < len(pat):
+        if pat[i] == "\\":
+            yield pat[i : i + 2]
+            i += 2
+        elif pat[i] == "[":
+            i += 1
+            if pat[i : i + 1] == "^":
+                i += 1
+            if pat[i : i + 1] == "]":
+                i += 1
+            while i < len(pat) and pat[i] != "]":
+                if pat[i] == "\\":
+                    yield pat[i : i + 2]
+                    i += 1
+                i += 1
+            yield "[]"
+            i += 1
+        else:
+            yield pat[i]
+            i += 1
+
+
+def _non_portable(pat: str) -> bool:
+    """Constructs outside the java.util.regex ∩ RE2 common subset: a
+    backreference (\\1..\\9) or a (?...) group that is not the plain
+    non-capturing (?:...) — covers lookaround (?= (?! (?<= (?<!, named
+    groups (?P<x>/(?<x>), flags, conditionals, atomic groups."""
+    atoms = list(_regex_atoms(pat))
+    for i, a in enumerate(atoms):
+        if len(a) == 2 and a[0] == "\\" and a[1] in "123456789":
+            return True
+        nxt = atoms[i + 1 : i + 3]
+        if a == "(" and nxt[:1] == ["?"] and nxt[1:] != [":"]:
+            return True
+    return False
+
+
 def _regexp_literal_prefix(pat: str) -> str:
     """Longest prefix of ``pat`` every match must start with: the run
     of literal characters before the first regex metacharacter. The
@@ -159,32 +197,18 @@ def _regexp_literal_prefix(pat: str) -> str:
     (at-least-once). A top-level unescaped ``|`` anywhere makes ANY
     prefix unsound (``merge|join`` also matches "join…"), so the
     prefix collapses to "" — alternations inside groups already stop
-    the scan at the ``(``. Inside a character class ``(`` and ``|`` are
-    literals, so classes are skipped, not counted as group depth. Used
+    the scan at the ``(``. Character classes are one atom
+    (``_regex_atoms``), not counted as group depth. Used
     ONLY to prune the dictionary scan; the anchored pattern still
     decides membership."""
-    depth, i = 0, 0
-    while i < len(pat):
-        ch = pat[i]
-        if ch == "\\":
-            i += 1  # the escaped char is a literal
-        elif ch == "[":
-            # a leading ^ and a ] right after it are literals; the class
-            # ends at the next unescaped ]
-            i += 1
-            if pat[i : i + 1] == "^":
-                i += 1
-            if pat[i : i + 1] == "]":
-                i += 1
-            while i < len(pat) and pat[i] != "]":
-                i += 2 if pat[i] == "\\" else 1
-        elif ch == "(":
+    depth = 0
+    for a in _regex_atoms(pat):
+        if a == "(":
             depth += 1
-        elif ch == ")":
+        elif a == ")":
             depth = max(0, depth - 1)
-        elif ch == "|" and depth == 0:
+        elif a == "|" and depth == 0:
             return ""
-        i += 1
     i = 0
     while i < len(pat) and pat[i] not in _REGEX_METAS:
         i += 1
@@ -251,7 +275,7 @@ def parse_query(q: str) -> list[Clause]:
             # named groups — would throw at JOB time on one engine
             # instead of parse time; drop them like other malformed
             # clauses (Lucene RegexpQuery supports none of these either)
-            if _NON_PORTABLE_RE.search(pat):
+            if _non_portable(pat):
                 continue
             if pat and pat.strip(".*?+()"):
                 clauses.append(Clause(occur, "regexp", (pat,), boost=boost))
@@ -323,51 +347,26 @@ def _clause_terms(
     parsed: dict[int, list[Clause]],
     max_expansions: int,
     fuzzy_max_expansions: int,
-    skip_literals: bool = False,
 ) -> DataFrame | None:
-    """Literal + dictionary-expanded clause terms: (query_id,
-    clause_id, occur, term, *dictionary columns).
+    """Dictionary-expanded clause terms of the prefix/wildcard/regexp/
+    fuzzy clauses: (query_id, clause_id, occur, term, *dictionary
+    columns, boost); None when no clause expands. Literal term clauses
+    resolve through the driver-memoized ``lookup_terms`` probe instead.
 
     ``dictionary`` must carry (term, df) and may carry more (term_id in
-    the indexed path); extra columns ride through. Literal terms are
-    resolved against the dictionary too — a term absent from the corpus
-    vocabulary has no postings either way, so dropping it here changes
-    no result while letting every downstream join key on resolved
-    terms (``skip_literals`` lets the indexed executor resolve them
-    through the driver-memoized ``lookup_terms`` probe instead — zero
-    Spark jobs once warm). Expansion windows are per-clause and capped:
-    prefix/wildcard/regexp by lexicographic term order, fuzzy by
-    (distance, df desc, term) — Lucene's maxExpansions discipline,
-    dictionary work only. All four expansion kinds share ONE dictionary
-    scan and ONE ranking window (a kind-tagged broadcast join whose
-    sort key degenerates to plain term order for non-fuzzy rows); the
-    per-kind shape this replaces paid a dictionary scan + window
-    exchange PER KIND per call, which at the local-mode scheduling
-    floor was the bulk of the query-string probe cost.
+    the indexed path); extra columns ride through. Expansion windows
+    are per-clause and capped: prefix/wildcard/regexp by lexicographic
+    term order, fuzzy by (distance, df desc, term) — Lucene's
+    maxExpansions discipline, dictionary work only. All four expansion
+    kinds share ONE dictionary scan and ONE ranking window (a
+    kind-tagged broadcast join whose sort key degenerates to plain term
+    order for non-fuzzy rows); the per-kind shape this replaces paid a
+    dictionary scan + window exchange PER KIND per call, which at the
+    local-mode scheduling floor was the bulk of the query-string probe
+    cost.
     """
     extra = [c for c in dictionary.columns if c != "term"]
-    out_cols = ["query_id", "clause_id", "occur", "term", *extra]
-    parts: list[DataFrame] = []
-
-    out_cols.append("boost")
-
-    lit_rows = (
-        []
-        if skip_literals
-        else [
-            (qid, cid, c.occur, c.terms[0], c.boost)
-            for qid, cs in parsed.items()
-            for cid, c in enumerate(cs)
-            if c.kind == "term"
-        ]
-    )
-    if lit_rows:
-        ldf = local_rows(
-            spark,
-            lit_rows,
-            "query_id long, clause_id long, occur string, term string, boost double",
-        )
-        parts.append(dictionary.join(F.broadcast(ldf), "term").select(*out_cols))
+    out_cols = ["query_id", "clause_id", "occur", "term", *extra, "boost"]
 
     exp_rows = []
     for qid, cs in parsed.items():
@@ -413,65 +412,59 @@ def _clause_terms(
                 exp_rows.append(
                     (qid, cid, c.occur, "fuzzy", c.terms[0], None, None, c.dist, c.boost)
                 )
-    if exp_rows:
-        edf = local_rows(
-            spark,
-            exp_rows,
-            "query_id long, clause_id long, occur string, kind string,"
-            " probe string, pre string, pat string, dist int, boost double",
-        )
-        kind = F.col("kind")
-        cond = (
-            ((kind == "prefix") & F.col("term").startswith(F.col("pre")))
-            | (
-                (kind == "wildcard")
-                & F.col("term").startswith(F.col("pre"))
-                & F.expr("term LIKE pat")
-            )
-            | (
-                (kind == "regexp")
-                & F.col("term").startswith(F.col("pre"))
-                & F.expr("term RLIKE pat")
-            )
-            | (
-                (kind == "fuzzy")
-                & (F.abs(F.length("term") - F.length("probe")) <= F.col("dist"))
-            )
-        )
-        j = (
-            dictionary.join(F.broadcast(edf), cond)
-            .withColumn(
-                "_dist",
-                F.when(kind == "fuzzy", F.levenshtein("probe", "term")).otherwise(
-                    F.lit(0)
-                ),
-            )
-            .filter((kind != "fuzzy") | (F.col("_dist") <= F.col("dist")))
-        )
-        # one window for every kind: non-fuzzy rows sort (0, 0, term) ==
-        # plain term order; fuzzy rows sort (distance, -df, term) — the
-        # exact per-kind orders (and caps) of the per-kind windows this
-        # folds together
-        w = Window.partitionBy("query_id", "clause_id").orderBy(
-            F.when(kind == "fuzzy", F.col("_dist")).otherwise(F.lit(0)).asc(),
-            F.when(kind == "fuzzy", -F.col("df")).otherwise(F.lit(0)).asc(),
-            F.col("term").asc(),
-        )
-        cap = F.when(kind == "fuzzy", F.lit(fuzzy_max_expansions)).otherwise(
-            F.lit(max_expansions)
-        )
-        parts.append(
-            j.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= cap)
-            .select(*out_cols)
-        )
-
-    if not parts:
+    if not exp_rows:
         return None
-    cterm = parts[0]
-    for p in parts[1:]:
-        cterm = cterm.unionByName(p)
-    return cterm
+    edf = local_rows(
+        spark,
+        exp_rows,
+        "query_id long, clause_id long, occur string, kind string,"
+        " probe string, pre string, pat string, dist int, boost double",
+    )
+    kind = F.col("kind")
+    cond = (
+        ((kind == "prefix") & F.col("term").startswith(F.col("pre")))
+        | (
+            (kind == "wildcard")
+            & F.col("term").startswith(F.col("pre"))
+            & F.expr("term LIKE pat")
+        )
+        | (
+            (kind == "regexp")
+            & F.col("term").startswith(F.col("pre"))
+            & F.expr("term RLIKE pat")
+        )
+        | (
+            (kind == "fuzzy")
+            & (F.abs(F.length("term") - F.length("probe")) <= F.col("dist"))
+        )
+    )
+    j = (
+        dictionary.join(F.broadcast(edf), cond)
+        .withColumn(
+            "_dist",
+            F.when(kind == "fuzzy", F.levenshtein("probe", "term")).otherwise(
+                F.lit(0)
+            ),
+        )
+        .filter((kind != "fuzzy") | (F.col("_dist") <= F.col("dist")))
+    )
+    # one window for every kind: non-fuzzy rows sort (0, 0, term) ==
+    # plain term order; fuzzy rows sort (distance, -df, term) — the
+    # exact per-kind orders (and caps) of the per-kind windows this
+    # folds together
+    w = Window.partitionBy("query_id", "clause_id").orderBy(
+        F.when(kind == "fuzzy", F.col("_dist")).otherwise(F.lit(0)).asc(),
+        F.when(kind == "fuzzy", -F.col("df")).otherwise(F.lit(0)).asc(),
+        F.col("term").asc(),
+    )
+    cap = F.when(kind == "fuzzy", F.lit(fuzzy_max_expansions)).otherwise(
+        F.lit(max_expansions)
+    )
+    return (
+        j.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= cap)
+        .select(*out_cols)
+    )
 
 
 def _boolean_rank(
@@ -689,50 +682,20 @@ def _boolean_rank(
     return rank_topk(final, k)
 
 
-def _decode_postings(spark, index, wanted) -> DataFrame:
-    """Decode the posting blocks of the requested term_ids →
-    (term_id, doc_id, tf, dl). ``wanted`` is a (term_id) DataFrame or a
-    plain list of term_ids — the indexed executor resolves clause terms
-    driver-side, so passing the list skips the distinct-bucket collect
-    job entirely (the bucket set is computed in Python for free).
-
-    The prefix_query decode discipline: bucket-partition pruning from
-    the (n_term_buckets-bounded) distinct bucket set, then one
+def _decode_postings(spark, index, term_ids) -> DataFrame:
+    """Decode the posting blocks of the given term_ids → (term_id,
+    doc_id, tf, dl): the IndexTables postings reader, then one
     mapInPandas pass that decodes payloads per block but emits ONE
     concatenated frame per Arrow batch — no per-row Python. Cost
     scales with the postings of the requested terms, never the corpus.
     """
     from keywords4cv_spark.index.codec import decode_block
 
-    srow = index.stats_row()
-    term_ids = None
-    if not isinstance(wanted, DataFrame):
-        term_ids = sorted({int(t) for t in wanted})
-        if not term_ids:
-            return spark.createDataFrame(
-                [], "term_id long, doc_id long, tf long, dl long"
-            )
-        wanted = local_rows(spark, [(t,) for t in term_ids], "term_id long")
-    scan = index.postings
-    if "bucket" in scan.columns and "n_term_buckets" in index.stats.columns:
-        nb = int(srow["n_term_buckets"])
-        if term_ids is not None:
-            buckets = sorted({t % nb for t in term_ids})
-        else:
-            buckets = sorted(
-                int(r["bucket"])
-                for r in wanted.select((F.col("term_id") % F.lit(nb)).alias("bucket"))
-                .distinct()
-                .collect()
-            )
-        if not buckets:
-            return spark.createDataFrame(
-                [], "term_id long, doc_id long, tf long, dl long"
-            )
-        scan = scan.filter(F.col("bucket").isin(buckets))
-    if term_ids is not None:
-        scan = scan.filter(F.col("term_id").isin(term_ids))
-    blocks = scan.join(F.broadcast(wanted), "term_id")
+    blocks = index.postings_for(spark, [(t,) for t in sorted({int(t) for t in term_ids})])
+    if blocks is None:
+        return spark.createDataFrame(
+            [], "term_id long, doc_id long, tf long, dl long"
+        )
 
     def explode(batches):
         import numpy as np
@@ -943,7 +906,7 @@ def search_with_snippets(
     """
     from keywords4cv_spark.query.snippets import snippet_windows_for_hits
 
-    ranked, cterm, _pdetail = _indexed_search(
+    ranked, cterm_rows, _pdetail = _indexed_search(
         spark,
         index,
         pos_index,
@@ -956,18 +919,22 @@ def search_with_snippets(
         score_phrases,
         min_should_match,
     )
-    if cterm is None:
+    if not cterm_rows:
         return (
             ranked.withColumn("win_start", F.lit(None).cast("long"))
             .withColumn("n_terms", F.lit(None).cast("int"))
         )
-    qterms = (
-        cterm.filter(F.col("occur") != MUST_NOT)
-        .select("query_id", "term")
-        .distinct()
-    )
+    qterms = [
+        (int(r["query_id"]), r["term"]) for r in cterm_rows if r["occur"] != MUST_NOT
+    ]
     snips = snippet_windows_for_hits(spark, pos_index, ranked, qterms, width=width)
     return ranked.join(snips, ["query_id", "doc_id"], "left")
+
+
+_CTERM_SCHEMA = (
+    "query_id long, clause_id long, occur string, term string,"
+    " term_id long, df long, boost double"
+)
 
 
 def _indexed_search(
@@ -982,7 +949,7 @@ def _indexed_search(
     doc_attrs: DataFrame | None = None,
     score_phrases: bool = False,
     min_should_match: int = 0,
-) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
+) -> tuple[DataFrame, list, DataFrame | None]:
     from keywords4cv_spark.query.wand import bm25_wand
 
     parsed = {qid: parse_query(s) for qid, s in queries}
@@ -1003,10 +970,6 @@ def _indexed_search(
     # lookup_terms probe (ZERO Spark jobs once warm — Lucene's
     # in-memory term dictionary); only expansion kinds (prefix/
     # wildcard/regexp/fuzzy) run the one-scan dictionary probe.
-    CTERM_SCHEMA = (
-        "query_id long, clause_id long, occur string, term string,"
-        " term_id long, df long, boost double"
-    )
     CTermRow = Row(
         "query_id", "clause_id", "occur", "term", "term_id", "df", "boost"
     )
@@ -1023,18 +986,10 @@ def _indexed_search(
         if t in lut
     ]
     exp = _clause_terms(
-        spark,
-        dictionary,
-        parsed,
-        max_expansions,
-        fuzzy_max_expansions,
-        skip_literals=True,
+        spark, dictionary, parsed, max_expansions, fuzzy_max_expansions
     )
     if exp is not None:
         cterm_rows.extend(exp.collect())
-    cterm = (
-        local_rows(spark, cterm_rows, CTERM_SCHEMA) if cterm_rows else None
-    )
 
     # ---- WAND fast path: pure-disjunctive queries -------------------
     # A query whose every clause is a scoring SHOULD (term/prefix/fuzzy
@@ -1044,7 +999,7 @@ def _indexed_search(
     # boosts map to WAND term weights (both scale idf, and the weight
     # scales the stored block-max bound, so pruning stays exact).
     wand_qids = wand_eligible_qids(parsed) if min_should_match <= 1 else []
-    if wand_qids and cterm is not None:
+    if wand_qids and cterm_rows:
         wand_set = set(wand_qids)
         best: dict[tuple[int, str], float] = {}
         for r in cterm_rows:
@@ -1057,20 +1012,17 @@ def _indexed_search(
         ranked_w = bm25_wand(spark, index, cfg, k, queries=triples) if triples else None
         parsed_gen = {q: cs for q, cs in parsed.items() if q not in wand_set}
         gen_rows = [r for r in cterm_rows if int(r["query_id"]) not in wand_set]
-        cterm_gen = (
-            local_rows(spark, gen_rows, CTERM_SCHEMA) if gen_rows else None
-        )
         if not any(
             c.kind in ("term", "prefix", "wildcard", "regexp", "fuzzy")
             for cs in parsed_gen.values()
             for c in cs
         ):
-            cterm_gen, gen_rows = None, []
+            gen_rows = []
     else:
         ranked_w = None
-        parsed_gen, cterm_gen, gen_rows = parsed, cterm, cterm_rows
+        parsed_gen, gen_rows = parsed, cterm_rows
 
-    if cterm_gen is not None:
+    if gen_rows:
         # persist the DECODED postings (they feed both the hit relation
         # and the scoring aggregate); the clause joins against them are
         # broadcast map-side and need no materialization of their own
@@ -1114,6 +1066,7 @@ def _indexed_search(
         # doc) and every consumer in _boolean_rank aggregates with
         # countDistinct / distinct anyway — the dedup was a pure extra
         # shuffle of the hit relation
+        cterm_gen = local_rows(spark, gen_rows, _CTERM_SCHEMA)
         thits = posts.join(F.broadcast(cterm_gen), "term_id").select(
             "query_id", "clause_id", "occur", "doc_id"
         )
@@ -1140,7 +1093,7 @@ def _indexed_search(
     )
     if ranked_w is not None:
         ranked = ranked.unionByName(ranked_w)
-    return ranked, cterm, pdetail
+    return ranked, cterm_rows, pdetail
 
 
 def explain_query_strings(
@@ -1173,7 +1126,7 @@ def explain_query_strings(
     """
     from keywords4cv_spark.query.bm25 import SCORE_DECIMALS
 
-    ranked, cterm, pdetail = _indexed_search(
+    ranked, cterm_rows, pdetail = _indexed_search(
         spark,
         index,
         pos_index,
@@ -1191,10 +1144,11 @@ def explain_query_strings(
         " df long, boost double, contribution double, score double"
     )
     parts: list[DataFrame] = []
-    if cterm is not None:
-        scoring = cterm.filter(F.col("occur") != MUST_NOT)
+    scoring_rows = [r for r in cterm_rows if r["occur"] != MUST_NOT]
+    if scoring_rows:
+        scoring = local_rows(spark, scoring_rows, _CTERM_SCHEMA)
         posts = _decode_postings(
-            spark, index, scoring.select("term_id").distinct()
+            spark, index, [int(r["term_id"]) for r in scoring_rows]
         )
         srow = index.stats_row()
         parts.append(

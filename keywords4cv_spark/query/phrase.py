@@ -1,15 +1,15 @@
-"""Index-backed phrase search over positional postings.
+"""Index-backed phrase and proximity search over positional postings.
 
-Exact n-term phrase matching from the compressed index: for phrase
-t₀ t₁ … tₖ, a doc matches at position p iff t₀@p, t₁@p+1, …, tₖ@p+k.
-The candidate set shrinks by positional intersection term by term —
+One positional kernel: ordered proximity matching, of which the exact
+phrase is slop=0 — for phrase t₀ t₁ … tₖ, a doc matches at position p
+iff t₀@p, t₁@p+1, …, tₖ@p+k. The candidate set shrinks term by term —
 the positional-postings generalization of the reference's exact
 keyword match (SURVEY.md T4/G1 family).
 
 Spark shape mirrors wand.py: phrase terms ⋈ dictionary (broadcast) →
 postings pruned by bucket + term_id →
 ``groupBy(phrase, segment).applyInPandas`` decoding only the matched
-terms' blocks; numpy set intersection inside. Segments are doc bands
+terms' blocks; a numpy reachability DP inside. Segments are doc bands
 (segment = doc_id % n_salts for every term), so a doc's positions for
 ALL phrase terms live in one (phrase, segment) group — the per-band
 outputs are disjoint per doc and their union is the exact answer,
@@ -21,121 +21,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from keywords4cv_spark.index.build import IndexTables
-from keywords4cv_spark.session import local_rows
 from keywords4cv_spark.index.codec import decode_block_positions
 from keywords4cv_spark.textprep.normalize import tokenize
-
-
-def phrase_search(
-    spark: SparkSession,
-    index: IndexTables,
-    phrases: list[str],
-    exclude: DataFrame | None = None,
-) -> DataFrame:
-    """(phrase, doc_id, n_occurrences) for every exact phrase match.
-
-    Requires an index built with ``store_positions=True``.
-
-    ``exclude``: optional (doc_id) tombstone frame (superseded recrawl
-    versions, index/upsert.py). Phrase matching is per-doc with no
-    cross-doc ranking, so dropping tombstoned docs AFTER matching is
-    exact — one anti-join on the (small) match result, no change to the
-    decode path.
-    """
-    from keywords4cv_spark.deploy import ensure_py_files
-
-    ensure_py_files(spark)
-    rows = []
-    n_terms: dict[str, int] = {}
-    for phrase in phrases:
-        terms = tokenize(phrase)
-        n_terms[phrase] = len(terms)
-        rows.extend((phrase, i, t) for i, t in enumerate(terms))
-    # driver-memoized dictionary probe (IndexTables.lookup_terms):
-    # replaces a per-call qdf ⋈ dictionary + distinct().collect() pair —
-    # repeated phrase batches resolve term_ids with ZERO Spark jobs, and
-    # the bucket pruning predicate is known driver-side for free
-    lut = index.lookup_terms([t for _, _, t in rows])
-    qrows = [(ph, i, lut[t][0]) for ph, i, t in rows if t in lut]
-    term_ids = sorted({tid for _, _, tid in qrows})
-    if not term_ids:
-        return spark.createDataFrame(
-            [], "phrase string, doc_id long, n_occurrences long"
-        )
-    qterms = local_rows(spark, qrows, "phrase string, ord int, term_id long")
-    srow = index.stats_row()
-    scan = index.postings
-    if "bucket" in scan.columns and "n_term_buckets" in index.stats.columns:
-        nb = int(srow["n_term_buckets"])
-        scan = scan.filter(
-            F.col("bucket").isin(sorted({tid % nb for tid in term_ids}))
-        )
-    blocks = scan.filter(F.col("term_id").isin(term_ids)).join(
-        F.broadcast(qterms), "term_id"
-    )
-    n_terms_b = spark.sparkContext.broadcast(n_terms)
-
-    def match(pdf: pd.DataFrame) -> pd.DataFrame:
-        phrase = pdf["phrase"].iloc[0]
-        want = n_terms_b.value[phrase]
-        per_ord: dict[int, dict[int, np.ndarray]] = {}
-        # column zip, not iterrows: each "row" is a 128-posting block,
-        # but per-row Series construction still costs; zipping the four
-        # needed columns keeps the decode loop allocation-free
-        for payload, n, first_doc, o in zip(
-            pdf["payload"], pdf["n"], pdf["first_doc"], pdf["ord"]
-        ):
-            docs, _tfs, _dls, pos = decode_block_positions(
-                payload, int(n), int(first_doc)
-            )
-            bucket = per_ord.setdefault(int(o), {})
-            for d, p in zip(docs, pos):
-                bucket[int(d)] = p
-        empty = pd.DataFrame(
-            {
-                "phrase": pd.Series([], dtype="object"),
-                "doc_id": pd.Series([], dtype="int64"),
-                "n_occurrences": pd.Series([], dtype="int64"),
-            }
-        )
-        if sorted(per_ord) != list(range(want)):
-            return empty  # some phrase term absent from the corpus
-        cand = per_ord[0]
-        for i in range(1, want):
-            nxt: dict[int, np.ndarray] = {}
-            cur = per_ord[i]
-            for d, p in cand.items():
-                q = cur.get(d)
-                if q is None:
-                    continue
-                m = np.intersect1d(p + 1, q)
-                if m.size:
-                    nxt[d] = m
-            cand = nxt
-            if not cand:
-                return empty
-        docs_sorted = sorted(cand)
-        return pd.DataFrame(
-            {
-                "phrase": phrase,
-                "doc_id": pd.Series(docs_sorted, dtype="int64"),
-                "n_occurrences": pd.Series(
-                    [int(cand[d].size) for d in docs_sorted], dtype="int64"
-                ),
-            }
-        )
-
-    out = blocks.groupBy("phrase", "segment").applyInPandas(
-        match, "phrase string, doc_id long, n_occurrences long"
-    )
-    if exclude is not None:
-        out = out.join(exclude.select("doc_id"), "doc_id", "left_anti").select(
-            "phrase", "doc_id", "n_occurrences"
-        )
-    return out
 
 
 def proximity_search(
@@ -144,6 +33,7 @@ def proximity_search(
     phrases: list[str],
     slop: int = 0,
     slops: dict[str, int] | None = None,
+    exclude: DataFrame | None = None,
 ) -> DataFrame:
     """(phrase, doc_id, n_occurrences): ordered proximity match — the
     Lucene sloppy-PhraseQuery analog. Terms must appear IN ORDER with
@@ -154,15 +44,19 @@ def proximity_search(
     lists: R₀ = positions of t₀; Rᵢ = {q ∈ posᵢ : ∃ r ∈ Rᵢ₋₁,
     r < q ≤ r + 1 + slop}) — well-defined for any term count, unlike
     greedy earliest-extension which misses chains at n ≥ 3. For
-    slop=0 this equals phrase_search's adjacency count.
+    slop=0 this is the exact phrase's adjacency count.
 
     ``slops`` optionally overrides the slop PER PHRASE (phrase → slop),
     so a caller with mixed-slop clause groups runs ONE decode pass and
     one applyInPandas stage instead of one per distinct slop; phrases
     absent from the dict use the scalar ``slop``.
 
-    Same Spark shape as phrase_search: pruned positional blocks →
-    (phrase, doc-band) groups → numpy DP per doc.
+    ``exclude``: optional (doc_id) tombstone frame (superseded recrawl
+    versions, index/upsert.py). Matching is per-doc with no cross-doc
+    ranking, so dropping tombstoned docs AFTER matching is exact — one
+    anti-join on the (small) match result, no change to the decode path.
+
+    Requires an index built with ``store_positions=True``.
     """
     from keywords4cv_spark.deploy import ensure_py_files
 
@@ -176,26 +70,16 @@ def proximity_search(
         gap_by_phrase[phrase] = 1 + (
             slops.get(phrase, slop) if slops is not None else slop
         )
-        rows.extend((phrase, i, t) for i, t in enumerate(terms))
-    # driver-memoized dictionary probe — see phrase_search
-    lut = index.lookup_terms([t for _, _, t in rows])
-    qrows = [(ph, i, lut[t][0]) for ph, i, t in rows if t in lut]
-    term_ids = sorted({tid for _, _, tid in qrows})
-    if not term_ids:
+        rows.extend((t, phrase, i) for i, t in enumerate(terms))
+    # pruned positional blocks → (phrase, doc-band) groups → numpy DP
+    # per doc; terms resolve through the driver-memoized dictionary probe
+    blocks = index.postings_for(
+        spark, rows, "term string, phrase string, ord int"
+    )
+    if blocks is None:
         return spark.createDataFrame(
             [], "phrase string, doc_id long, n_occurrences long"
         )
-    qterms = local_rows(spark, qrows, "phrase string, ord int, term_id long")
-    srow = index.stats_row()
-    scan = index.postings
-    if "bucket" in scan.columns and "n_term_buckets" in index.stats.columns:
-        nb = int(srow["n_term_buckets"])
-        scan = scan.filter(
-            F.col("bucket").isin(sorted({tid % nb for tid in term_ids}))
-        )
-    blocks = scan.filter(F.col("term_id").isin(term_ids)).join(
-        F.broadcast(qterms), "term_id"
-    )
     n_terms_b = spark.sparkContext.broadcast(n_terms)
     gaps_b = spark.sparkContext.broadcast(gap_by_phrase)
 
@@ -254,6 +138,11 @@ def proximity_search(
             }
         )
 
-    return blocks.groupBy("phrase", "segment").applyInPandas(
+    out = blocks.groupBy("phrase", "segment").applyInPandas(
         match, "phrase string, doc_id long, n_occurrences long"
     )
+    if exclude is not None:
+        out = out.join(exclude.select("doc_id"), "doc_id", "left_anti").select(
+            "phrase", "doc_id", "n_occurrences"
+        )
+    return out

@@ -24,14 +24,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from keywords4cv_spark.config import DEFAULT_CONFIG, EngineConfig
-from keywords4cv_spark.session import local_rows
 from keywords4cv_spark.index.build import IndexTables
 from keywords4cv_spark.index.codec import decode_block_positions
 from keywords4cv_spark.query.fixtures import TOP_K, query_term_pairs
-from keywords4cv_spark.query.wand import bm25_wand
+from keywords4cv_spark.query.wand import bm25_wand_multi
 
 OUT_SCHEMA = "query_id long, doc_id long, win_start long, n_terms int"
 
@@ -55,33 +53,25 @@ def snippet_windows(
     ``exclude``: optional (doc_id) tombstone frame (superseded recrawl
     versions, index/upsert.py). Exclusion must happen BEFORE the top-k
     cut — a stale doc in the heap would displace a live hit — so the
-    hit set is computed through the tombstone-aware multi-generation
-    scorer (the tombstones ride its (query, band) shuffle; this index
-    is just a 1-generation family of it), with statistics still
-    counting tombstoned docs until a purging compaction (Lucene
-    deleted-docs semantics).
+    tombstones ride the WAND driver's (query, band) shuffle, with
+    statistics still counting tombstoned docs until a purging
+    compaction (Lucene deleted-docs semantics).
     """
     from keywords4cv_spark.deploy import ensure_py_files
 
     ensure_py_files(spark)
     pairs = queries if queries is not None else query_term_pairs()
-    if exclude is not None:
-        from keywords4cv_spark.query.wand import bm25_wand_multi
-
-        hit_df = bm25_wand_multi(
-            spark, [index], cfg, k=k, queries=pairs, exclude=exclude
-        )
-    else:
-        hit_df = bm25_wand(spark, index, cfg, k=k, queries=pairs)
-    qdf = local_rows(spark, pairs, "query_id long, term string")
-    return snippet_windows_for_hits(spark, index, hit_df, qdf, width=width)
+    hit_df = bm25_wand_multi(
+        spark, [index], cfg, k=k, queries=pairs, exclude=exclude
+    )
+    return snippet_windows_for_hits(spark, index, hit_df, pairs, width=width)
 
 
 def snippet_windows_for_hits(
     spark: SparkSession,
     index: IndexTables,
     hit_df: DataFrame,
-    qterms_df: DataFrame,
+    qterms: list[tuple[int, str]],
     width: int = 8,
 ) -> DataFrame:
     """Best snippet window per (query_id, doc_id) hit, for an ARBITRARY
@@ -90,7 +80,8 @@ def snippet_windows_for_hits(
     the query-string parser, filtered retrieval).
 
     ``hit_df``: (query_id, doc_id) rows — top-k-shaped, driver-small by
-    construction. ``qterms_df``: (query_id, term) highlight terms.
+    construction. ``qterms``: driver-local (query_id, term) highlight
+    terms.
     """
     from keywords4cv_spark.deploy import ensure_py_files
 
@@ -101,31 +92,11 @@ def snippet_windows_for_hits(
         hit_map.setdefault(int(r["query_id"]), set()).add(int(r["doc_id"]))
     hits_b = spark.sparkContext.broadcast(hit_map)
 
-    # the highlight-term set is query-bounded (driver-small): resolve it
-    # driver-side through the memoized dictionary probe instead of a
-    # per-call join + distinct().collect() pair (zero jobs when warm)
-    qt_rows = [
-        (int(r["query_id"]), r["term"])
-        for r in qterms_df.select("query_id", "term").collect()
-    ]
-    lut = index.lookup_terms([t for _, t in qt_rows])
-    resolved = [(qid, t, lut[t][0]) for qid, t in qt_rows if t in lut]
-    term_ids = sorted({tid for _, _, tid in resolved})
-    if not term_ids or not hit_map:
+    blocks = index.postings_for(
+        spark, sorted({(t, qid) for qid, t in qterms}), "term string, query_id long"
+    )
+    if blocks is None or not hit_map:
         return spark.createDataFrame([], OUT_SCHEMA)
-    qterms = local_rows(
-        spark, resolved, "query_id long, term string, term_id long"
-    )
-    srow = index.stats_row()
-    scan = index.postings
-    if "bucket" in scan.columns and "n_term_buckets" in index.stats.columns:
-        nb = int(srow["n_term_buckets"])
-        scan = scan.filter(
-            F.col("bucket").isin(sorted({tid % nb for tid in term_ids}))
-        )
-    blocks = scan.filter(F.col("term_id").isin(term_ids)).join(
-        F.broadcast(qterms), "term_id"
-    )
 
     def pick(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])

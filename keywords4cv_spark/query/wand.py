@@ -8,10 +8,14 @@ top-k with two pruning levels —
   global bound, and doc ranges whose block bounds can't beat the heap
   threshold are jumped without decoding any payload.
 
-Spark shape: query terms ⋈ dictionary (broadcast) → postings filtered
-by term_id (file/bucket-pruned; at cluster scale the postings table is
-laid out by term bucket so only matching files are scanned) →
-``groupBy(query_id, segment).applyInPandas(bmw)`` → rank-merge.
+One driver (``_wand_topk``) serves one index and a list of index
+generations alike; ``bm25_wand`` is its one-generation call (with
+search-after cursors) and ``bm25_wand_multi`` its multi-generation call
+(with tombstones). Spark shape: query terms resolved driver-side
+(memoized dictionary probe) → per generation, the postings blocks from
+``IndexTables.postings_for`` (bucket-directory and term_id pruned) →
+union (generations only) → ``groupBy(query_id, segment)
+.applyInPandas(bmw)`` → rank-merge.
 
 Segments are DOC BANDS (segment = doc_id % n_salts at build time, the
 same partition of the doc space for every term), so the (query, band)
@@ -339,14 +343,65 @@ def bm25_wand(
     ``queries`` rows may carry an optional third element: a per-term
     WEIGHT (query-time synonym/abbreviation expansion gives expanded
     terms a sub-1.0 weight). A weight w scales the term's contribution
-    as w·idf — and the stored block-max bound is scaled by the same w,
-    so WAND pruning stays exact at any positive weight.
+    as w·idf — and the block-max bound is scaled by the same w, so WAND
+    pruning stays exact at any positive weight.
 
     ``after``: per-query search-after cursor {query_id: (rounded_score,
     doc_id)} — returns the NEXT k results ranked strictly after the
     cursor. Cursor pagination keeps every page a k-sized heap problem
     (offset pagination at depth d needs a d·k heap). Queries absent
     from the dict paginate from the top as usual.
+    """
+    return _wand_topk(spark, [index], cfg, k, queries, after=after)
+
+
+def bm25_wand_multi(
+    spark: SparkSession,
+    indexes: list[IndexTables],
+    cfg: EngineConfig = DEFAULT_CONFIG,
+    k: int = TOP_K,
+    queries: list[tuple[int, str]] | None = None,
+    exclude: DataFrame | None = None,
+) -> DataFrame:
+    """Rank-exact BM25 top-k across multiple index generations.
+
+    The LSM-style incremental story: each crawl batch becomes its own
+    small index (cheap append-only build over NEW docs); queries merge
+    generations at read time — doc_id spaces are disjoint, df/N/avgdl
+    combine exactly (sum_dl is stored as an integer). Results are
+    rank-identical to a full rebuild over the union (tested).
+    Compaction = build_index over the union when generations pile up.
+
+    ``exclude``: optional (doc_id) DataFrame of tombstoned docs —
+    superseded recrawl versions from ``index/upsert.py:superseded_docs``.
+    Excluded docs are dropped from every result while statistics keep
+    counting them (Lucene deleted-docs semantics; a purging compaction
+    restores clean statistics). The tombstones travel as marker rows
+    unioned into the block scan — partitioned to the same (query,
+    doc-band) scoring tasks as the postings, never collected to the
+    driver. All generations must share ``cfg.n_salts`` (the band rule
+    ``doc_id % n_salts`` is how a tombstone finds its scoring task).
+    """
+    return _wand_topk(spark, indexes, cfg, k, queries, exclude=exclude)
+
+
+def _wand_topk(
+    spark: SparkSession,
+    indexes: list[IndexTables],
+    cfg: EngineConfig,
+    k: int,
+    queries: list[tuple] | None,
+    after: dict[int, tuple[float, int]] | None = None,
+    exclude: DataFrame | None = None,
+) -> DataFrame:
+    """The one Block-Max WAND driver, over one or more generations.
+
+    Block bounds: one generation keeps the stored exact per-block
+    ``max_score`` (its baked statistics ARE the query statistics, so
+    stored avgdl and bound are exact). Over several generations a
+    baked bound is stale under the combined statistics, so bounds are
+    recomputed from ``max_tf`` (``_tf_upper_bound``), valid under any
+    statistics.
     """
     from keywords4cv_spark.deploy import ensure_py_files
 
@@ -355,59 +410,104 @@ def bm25_wand(
     pairs3 = [
         (p[0], p[1], float(p[2]) if len(p) > 2 else 1.0) for p in pairs
     ]
-    srow = index.stats_row()
-    n_docs, avgdl = int(srow["n_docs"]), float(srow["avgdl"])
+    stored_bounds = len(indexes) == 1
+    srows = [idx.stats_row() for idx in indexes]
+    n_docs = sum(int(r["n_docs"]) for r in srows)
+    if stored_bounds:
+        avgdl = float(srows[0]["avgdl"])
+    else:
+        avgdl = sum(int(r["sum_dl"]) for r in srows) / n_docs
     k1, b = cfg.k1, cfg.b
 
-    # driver-side memoized dictionary probe (IndexTables.lookup_terms):
-    # replaces a per-call join + distinct().collect() pair with at most
-    # one filter-pushdown job for never-seen terms — repeated batches
-    # resolve term_id/df with zero jobs, and the bucket/term_id pruning
-    # predicates below are known driver-side for free
-    lut = index.lookup_terms([t for _, t, _ in pairs3])
-    qrows = [
-        (qid, lut[t][0], lut[t][1], w) for qid, t, w in pairs3 if t in lut
-    ]
-    if not qrows:
+    # global df per term = Σ generation df (doc spaces are disjoint),
+    # from the memoized driver-side dictionary probe
+    # (IndexTables.lookup_terms): repeated batches resolve with zero jobs
+    terms = [t for _, t, _ in pairs3]
+    df_total: dict[str, int] = {}
+    for idx in indexes:
+        for term, (_, df_val) in idx.lookup_terms(terms).items():
+            df_total[term] = df_total.get(term, 0) + df_val
+    qrows = [(t, qid, w, df_total[t]) for qid, t, w in pairs3 if t in df_total]
+    parts = []
+    for g, idx in enumerate(indexes):
+        blocks = idx.postings_for(
+            spark, qrows, "term string, query_id long, w double, df long"
+        )
+        if blocks is not None:
+            # one posting list per (term, generation); a single int key
+            # keeps the per-group split cheap, and its order (term_id,
+            # then generation) is term order within every generation
+            cursor = (F.col("term_id") * len(indexes) + g).alias("cursor")
+            parts.append(
+                blocks.select(
+                    "query_id", cursor, "segment", "first_doc", "last_doc",
+                    "n", "max_tf", "max_score", "payload", "df", "w",
+                )
+            )
+    if not parts:
         return spark.createDataFrame([], "query_id long, rank int, doc_id long, score double")
-    qterms = local_rows(
-        spark, qrows, "query_id long, term_id long, df long, w double"
-    )
-    term_ids = sorted({tid for _, tid, _, _ in qrows})
+    allblocks = parts[0]
+    for p in parts[1:]:
+        allblocks = allblocks.unionByName(p)
 
-    scan = index.postings
-    if "bucket" in scan.columns and "n_term_buckets" in index.stats.columns:
-        # bucket is the Hive-partition column of the postings layout →
-        # this predicate prunes whole directories before any file is read
-        nb = int(srow["n_term_buckets"])
-        buckets = sorted({tid % nb for tid in term_ids})
-        scan = scan.filter(F.col("bucket").isin(buckets))
-    blocks = scan.filter(F.col("term_id").isin(term_ids)).join(
-        F.broadcast(qterms), "term_id"
-    )
+    if exclude is not None:
+        # tombstones ride the same shuffle as the posting blocks: one
+        # marker row (payload NULL, cursor -1) per (query, tombstoned doc),
+        # banded by the build-time rule doc_id % n_salts so each lands in
+        # exactly the (query, segment) group whose postings could emit it
+        qids = sorted({q for q, _, _ in pairs3})
+        qid_df = local_rows(spark, [(q,) for q in qids], "query_id long")
+        tomb = (
+            exclude.select(F.col("doc_id").cast("long"))
+            .crossJoin(F.broadcast(qid_df))
+            .select(
+                "query_id",
+                F.lit(-1).cast("long").alias("cursor"),
+                F.pmod(F.col("doc_id"), F.lit(cfg.n_salts)).cast("int").alias("segment"),
+                F.col("doc_id").alias("first_doc"),
+                F.col("doc_id").alias("last_doc"),
+                F.lit(0).cast("int").alias("n"),
+                F.lit(0).cast("int").alias("max_tf"),
+                F.lit(0.0).alias("max_score"),
+                F.lit(None).cast("binary").alias("payload"),
+                F.lit(0).cast("long").alias("df"),
+                F.lit(0.0).alias("w"),
+            )
+        )
+        allblocks = allblocks.unionByName(tomb)
     after_b = spark.sparkContext.broadcast(after or {})
 
     def bmw(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one (query, doc-band) group: segment is constant here, so each
-        # term contributes exactly one cursor
+        # one (query, doc-band) group: one cursor per (term, generation).
+        # Generations have disjoint doc spaces and a doc's band is fixed
+        # within its generation, so the band partials are exact
         qid = int(pdf["query_id"].iloc[0])
+        excluded: frozenset[int] = frozenset()
+        tomb_mask = pdf["payload"].isna()
+        if tomb_mask.any():
+            excluded = frozenset(int(d) for d in pdf.loc[tomb_mask, "first_doc"])
+            pdf = pdf[~tomb_mask]
         cursors = []
-        for _, g in pdf.groupby("term_id", sort=True):
+        for _, g in pdf.groupby("cursor", sort=True):
             df_val = int(g["df"].iloc[0])
             w = float(g["w"].iloc[0])
             idf = w * float(np.log(1.0 + (n_docs - df_val + 0.5) / (df_val + 0.5)))
+            if stored_bounds:
+                # the stored bound scales with the weight, keeping pruning exact
+                bound = w * g["max_score"].to_numpy(np.float64)
+            else:
+                bound = _tf_upper_bound(g["max_tf"].to_numpy(np.int64), idf, k1, b)
             cursors.append(
                 _Cursor(
                     idf, k1, b, avgdl,
                     g["first_doc"].to_numpy(np.int64),
                     g["last_doc"].to_numpy(np.int64),
-                    # bound scales with the weight, keeping pruning exact
-                    w * g["max_score"].to_numpy(np.float64),
+                    bound,
                     list(g["payload"]),
                     g["n"].to_numpy(np.int64),
                 )
             )
-        hits = _bmw_one_query(cursors, k, after=after_b.value.get(qid))
+        hits = _bmw_one_query(cursors, k, excluded, after_b.value.get(qid))
         return pd.DataFrame(
             {
                 "query_id": pd.Series([qid] * len(hits), dtype="int64"),
@@ -418,7 +518,7 @@ def bm25_wand(
 
     # partial top-k per (query, doc band) — n_salts parallel tasks per
     # query — then an exact rank-merge of the small partials
-    scored = blocks.groupBy("query_id", "segment").applyInPandas(
+    scored = allblocks.groupBy("query_id", "segment").applyInPandas(
         bmw, "query_id long, doc_id long, score double"
     )
     return rank_topk(scored, k)
@@ -435,153 +535,3 @@ def _tf_upper_bound(max_tf: np.ndarray, idf: float, k1: float, b: float) -> np.n
     """
     t = max_tf.astype(np.float64)
     return idf * (t * (k1 + 1.0)) / (t + k1 * (1.0 - b))
-
-
-def bm25_wand_multi(
-    spark: SparkSession,
-    indexes: list[IndexTables],
-    cfg: EngineConfig = DEFAULT_CONFIG,
-    k: int = TOP_K,
-    queries: list[tuple[int, str]] | None = None,
-    exclude: DataFrame | None = None,
-) -> DataFrame:
-    """Rank-exact BM25 top-k across multiple index generations.
-
-    The LSM-style incremental story: each crawl batch becomes its own
-    small index (cheap append-only build over NEW docs); queries merge
-    generations at read time — doc_id spaces are disjoint, df/N/avgdl
-    combine exactly (sum_dl is stored as an integer), and per-block
-    bounds are recomputed from max_tf because the baked max_score of an
-    old generation is stale under the combined statistics. Results are
-    rank-identical to a full rebuild over the union (tested).
-    Compaction = build_index over the union when generations pile up.
-
-    ``exclude``: optional (doc_id) DataFrame of tombstoned docs —
-    superseded recrawl versions from ``index/upsert.py:superseded_docs``.
-    Excluded docs are dropped from every result while statistics keep
-    counting them (Lucene deleted-docs semantics; a purging compaction
-    restores clean statistics). The tombstones travel as marker rows
-    unioned into the block scan — partitioned to the same (query,
-    doc-band) scoring tasks as the postings, never collected to the
-    driver. All generations must share ``cfg.n_salts`` (the band rule
-    ``doc_id % n_salts`` is how a tombstone finds its scoring task).
-    """
-    from keywords4cv_spark.deploy import ensure_py_files
-
-    ensure_py_files(spark)
-    pairs = queries if queries is not None else query_term_pairs()
-
-    n_docs = 0
-    sum_dl = 0
-    for idx in indexes:
-        srow = idx.stats_row()
-        n_docs += int(srow["n_docs"])
-        sum_dl += int(srow["sum_dl"])
-    avgdl = sum_dl / n_docs
-    k1, b = cfg.k1, cfg.b
-
-    # global df per term = Σ generation df (doc spaces are disjoint).
-    # Each generation's dictionary probe goes through its memoized
-    # driver-side cache (IndexTables.lookup_terms) — the old plan paid
-    # one join + distinct().collect() PER GENERATION per call
-    df_total: dict[str, int] = {}
-    gen_scans = []
-    for g, idx in enumerate(indexes):
-        lut = idx.lookup_terms([t for _, t in pairs])
-        if not lut:
-            continue
-        for term, (_, df_val) in lut.items():
-            df_total[term] = df_total.get(term, 0) + df_val
-        term_ids = sorted({tid for tid, _ in lut.values()})
-        qt_rows = [(qid, t, lut[t][0]) for qid, t in pairs if t in lut]
-        qt = local_rows(
-            spark, qt_rows, "query_id long, term string, term_id long"
-        )
-        scan = idx.postings
-        if "bucket" in scan.columns and "n_term_buckets" in idx.stats.columns:
-            nb = int(idx.stats_row()["n_term_buckets"])
-            scan = scan.filter(F.col("bucket").isin(sorted({t % nb for t in term_ids})))
-        blocks = (
-            scan.filter(F.col("term_id").isin(term_ids))
-            .join(F.broadcast(qt), "term_id")
-            .select(
-                "query_id",
-                "term",
-                F.lit(g).alias("gen"),
-                "segment",
-                "first_doc",
-                "last_doc",
-                "n",
-                "max_tf",
-                "payload",
-            )
-        )
-        gen_scans.append(blocks)
-    if not gen_scans:
-        return spark.createDataFrame([], "query_id long, rank int, doc_id long, score double")
-    allblocks = gen_scans[0]
-    for s in gen_scans[1:]:
-        allblocks = allblocks.unionByName(s)
-
-    if exclude is not None:
-        # tombstones ride the same shuffle as the posting blocks: one
-        # marker row (payload NULL, gen -1) per (query, tombstoned doc),
-        # banded by the build-time rule doc_id % n_salts so each lands in
-        # exactly the (query, segment) group whose postings could emit it
-        qids = sorted({q for q, _ in pairs})
-        qid_df = local_rows(spark, [(q,) for q in qids], "query_id long")
-        tomb = (
-            exclude.select(F.col("doc_id").cast("long"))
-            .crossJoin(F.broadcast(qid_df))
-            .select(
-                "query_id",
-                F.lit("\x00tomb").alias("term"),
-                F.lit(-1).alias("gen"),
-                F.pmod(F.col("doc_id"), F.lit(cfg.n_salts)).cast("int").alias("segment"),
-                F.col("doc_id").alias("first_doc"),
-                F.col("doc_id").alias("last_doc"),
-                F.lit(0).cast("int").alias("n"),
-                F.lit(0).cast("int").alias("max_tf"),
-                F.lit(None).cast("binary").alias("payload"),
-            )
-        )
-        allblocks = allblocks.unionByName(tomb)
-
-    df_b = spark.sparkContext.broadcast(df_total)
-
-    def bmw(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one (query, doc-band) group; cursors per (term, generation) —
-        # generations have disjoint doc spaces, and a doc's band is
-        # constant within its generation, so the band partials are exact
-        qid = int(pdf["query_id"].iloc[0])
-        tomb_mask = pdf["payload"].isna()
-        excluded = frozenset(int(d) for d in pdf.loc[tomb_mask, "first_doc"])
-        pdf = pdf[~tomb_mask]
-        cursors = []
-        for (term, _), g in pdf.groupby(["term", "gen"], sort=True):
-            df_val = df_b.value[term]
-            idf = float(np.log(1.0 + (n_docs - df_val + 0.5) / (df_val + 0.5)))
-            max_tf = g["max_tf"].to_numpy(np.int64)
-            cursors.append(
-                _Cursor(
-                    idf, k1, b, avgdl,
-                    g["first_doc"].to_numpy(np.int64),
-                    g["last_doc"].to_numpy(np.int64),
-                    _tf_upper_bound(max_tf, idf, k1, b),
-                    list(g["payload"]),
-                    g["n"].to_numpy(np.int64),
-                )
-            )
-        hits = _bmw_one_query(cursors, k, excluded)
-        return pd.DataFrame(
-            {
-                "query_id": pd.Series([qid] * len(hits), dtype="int64"),
-                "doc_id": pd.Series([d for d, _ in hits], dtype="int64"),
-                "score": pd.Series([s for _, s in hits], dtype="float64"),
-            }
-        )
-
-    scored = allblocks.groupBy("query_id", "segment").applyInPandas(
-        bmw, "query_id long, doc_id long, score double"
-    )
-    return rank_topk(scored, k)

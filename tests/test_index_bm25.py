@@ -301,7 +301,7 @@ def test_positional_compaction_preserves_phrase_search(spark, docs, tmp_path):
     rebuild, AND answer phrase queries identically; mixing positional
     with non-positional generations still refuses."""
     from keywords4cv_spark.index.compact import compact_generations
-    from keywords4cv_spark.query.phrase import phrase_search
+    from keywords4cv_spark.query.phrase import proximity_search
 
     pcfg = EngineConfig(
         n_term_buckets=2, n_salts=2, shuffle_partitions=8, store_positions=True
@@ -326,11 +326,11 @@ def test_positional_compaction_preserves_phrase_search(spark, docs, tmp_path):
     phrases = ["merge join", "the data", "table scan"]
     want = {
         (r.phrase, r.doc_id): r.n_occurrences
-        for r in phrase_search(spark, full, phrases).collect()
+        for r in proximity_search(spark, full, phrases, slop=0).collect()
     }
     got = {
         (r.phrase, r.doc_id): r.n_occurrences
-        for r in phrase_search(spark, compacted, phrases).collect()
+        for r in proximity_search(spark, compacted, phrases, slop=0).collect()
     }
     assert got == want and len(got) > 0
     # mixed positional/non-positional generations refuse loudly
@@ -504,7 +504,7 @@ def test_purging_compaction_positional(spark, docs, tmp_path):
     queries identically (no stale doc ever matches a phrase)."""
     from keywords4cv_spark.index.compact import compact_generations
     from keywords4cv_spark.index.upsert import superseded_docs
-    from keywords4cv_spark.query.phrase import phrase_search
+    from keywords4cv_spark.query.phrase import proximity_search
 
     pcfg = EngineConfig(
         n_term_buckets=2, n_salts=2, shuffle_partitions=8, store_positions=True
@@ -528,11 +528,11 @@ def test_purging_compaction_positional(spark, docs, tmp_path):
     phrases = ["merge join", "the data", "table scan"]
     want = {
         (r.phrase, r.doc_id): r.n_occurrences
-        for r in phrase_search(spark, fresh, phrases).collect()
+        for r in proximity_search(spark, fresh, phrases, slop=0).collect()
     }
     got = {
         (r.phrase, r.doc_id): r.n_occurrences
-        for r in phrase_search(spark, purged, phrases).collect()
+        for r in proximity_search(spark, purged, phrases, slop=0).collect()
     }
     assert got == want and len(got) > 0
 
@@ -575,11 +575,11 @@ def test_snippet_windows_match_text_scan(spark, docs, tmp_path):
 
 
 def test_proximity_search_semantics(spark, docs, tmp_path):
-    """proximity_search: slop=0 must equal phrase_search's adjacency
-    counts; slop>0 must match a brute-force reachability twin over the
-    tokenized text (distinct chain END positions), including a 3-term
-    phrase where greedy chaining would be wrong."""
-    from keywords4cv_spark.query.phrase import phrase_search, proximity_search
+    """proximity_search must match a brute-force reachability twin over
+    the tokenized text (distinct chain END positions): slop=0 is the
+    exact phrase's adjacency count, and slop>0 includes a 3-term phrase
+    where greedy chaining would be wrong."""
+    from keywords4cv_spark.query.phrase import proximity_search
 
     pcfg = EngineConfig(
         n_term_buckets=2, n_salts=2, shuffle_partitions=8, store_positions=True
@@ -610,15 +610,6 @@ def test_proximity_search_semantics(spark, docs, tmp_path):
             for r in proximity_search(spark, idx, phrases, slop=slop).collect()
         }
         assert got == brute(slop), f"slop={slop}"
-    exact = {
-        (r.phrase, r.doc_id): r.n_occurrences
-        for r in phrase_search(spark, idx, phrases).collect()
-    }
-    prox0 = {
-        (r.phrase, r.doc_id): r.n_occurrences
-        for r in proximity_search(spark, idx, phrases, slop=0).collect()
-    }
-    assert prox0 == exact
 
 
 def test_search_after_pages_reconstruct_full_ranking(spark, docs, index):

@@ -7,6 +7,9 @@ sort-merge shuffle fails here before it shows up as a slowdown.
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from keywords4cv_spark.config import EngineConfig
@@ -101,23 +104,37 @@ def test_map_whitelist_has_no_single_partition_window(spark, sf_dir):
     assert agg_plan.count("SinglePartition") <= 1, agg_plan
 
 
-def test_wand_scan_prunes_postings_buckets(spark, sf_dir, tmp_path):
-    """Query-time bucket pruning: the WAND plan's postings scan must
-    carry a PartitionFilter on the bucket dirs (whole directories of
-    non-matching term buckets are never listed, the cluster-scale
-    equivalent of reading only the query's index shards)."""
-    from keywords4cv_spark.index.build import build_index
-    from keywords4cv_spark.query.wand import bm25_wand
+# every postings consumer, by registry entry: (name, postings scans)
+_POSTINGS_CONSUMERS = [
+    ("bm25_wand_topk", 1),  # single-index WAND
+    ("bm25_recrawl_topk", 2),  # two-generation WAND with exclude
+    ("proximity_query", 1),  # proximity_search
+    ("snippet_windows", 1),
+    ("bm25_explain", 1),  # bm25_explain_indexed
+    ("prefix_query", 1),  # DataFrame-keyed reader mode
+]
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    cfg = EngineConfig(n_term_buckets=4, n_salts=2, shuffle_partitions=8)
-    idx = build_index(spark, docs, str(tmp_path / "prune_idx"), cfg, url_col="source")
-    plan = explain_str(bm25_wand(spark, idx, cfg, queries=[(0, "the")]))
-    assert "PartitionFilters" in plan
-    import re
 
-    pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert pf and "bucket" in pf.group(1), plan
+@pytest.mark.parametrize(
+    "name,n_scans", _POSTINGS_CONSUMERS, ids=[n for n, _ in _POSTINGS_CONSUMERS]
+)
+def test_postings_consumers_prune_buckets(spark, sf_dir, name, n_scans):
+    """Query-time bucket pruning on every postings consumer: each
+    postings scan in the plan carries a PartitionFilter on the bucket
+    dirs (whole directories of non-matching term buckets are never
+    listed, the cluster-scale equivalent of reading only the query's
+    index shards)."""
+    from keywords4cv_spark.driver_queries import QUERIES
+
+    plan = explain_str(QUERIES[name](spark, sf_dir))
+    scans = [
+        node for node in plan.split("\n\n")
+        if "Scan parquet" in node and "/postings]" in node
+    ]
+    assert len(scans) == n_scans, plan
+    for node in scans:
+        pf = re.search(r"PartitionFilters: \[([^\]]*)\]", node)
+        assert pf and "bucket" in pf.group(1), (name, node)
 
 
 def test_jaccard_dag_tokenizes_corpus_once(spark, sf_dir):
@@ -201,8 +218,6 @@ def test_prefix_query_plan_has_no_expansion_sized_in_list(spark, sf_dir):
     the match count (a short prefix on a web vocabulary expands to ~1e6
     terms — plan bloat, driver memory, codegen limits). The only In-list
     allowed in the plan is the bucket filter, bounded by n_term_buckets."""
-    import re
-
     from keywords4cv_spark.driver_queries import QUERIES, _index_for
 
     df = QUERIES["prefix_query"](spark, sf_dir)

@@ -250,11 +250,18 @@ def test_search_with_snippets_windows_exact(spark, sf_dir):
     assert out
     assert {r.query_id for r in out} >= {0, 1, 2, 3, 4}
 
+    # highlight terms: the non-negated literal terms (a literal absent
+    # from the dictionary never occurs in the text) plus the dictionary
+    # expansions of the prefix/wildcard/regexp/fuzzy clauses
     parsed = {qid: parse_query(s) for qid, s in _QS_QUERIES}
+    hl: dict[int, set[str]] = {}
+    for qid, cs in parsed.items():
+        for c in cs:
+            if c.kind == "term" and c.occur != MUST_NOT:
+                hl.setdefault(qid, set()).add(c.terms[0])
     cterm = _clause_terms(
         spark, index.dictionary.select("term", "term_id", "df"), parsed, 64, 16
     )
-    hl: dict[int, set[str]] = {}
     for r in cterm.filter(F.col("occur") != MUST_NOT).collect():
         hl.setdefault(r.query_id, set()).add(r.term)
 
@@ -348,6 +355,8 @@ def test_parse_regexp():
     # an escaped paren before ? is a literal, not a (?...) group
     assert parse_query(r"/a\(?b/") == [Clause("should", "regexp", (r"a\(?b",))]
     assert parse_query(r"/a\\(?=b)/") == []
+    # inside a character class "(?" is two literals, not a group
+    assert parse_query("/a[(?]b/") == [Clause("should", "regexp", ("a[(?]b",))]
     # a URL-shaped bare token is NOT a regexp clause (no leading slash;
     # it parses as a field filter, Lucene's reading of `http:...`)
     assert parse_query("http://foo/bar")[0].kind == "filter"
