@@ -48,6 +48,21 @@ class EngineConfig:
     # case) fall back to a shuffled join + a persisted postings relation
     broadcast_vocab_limit: int = 2_000_000
 
+    # --- WAND top-k size gates (query/wand.py) ---
+    # a batch whose resolved postings (Σ df over its (query, term,
+    # generation) rows) and tombstones both fit under this gate is served
+    # in the driver: pyarrow read of the pruned blocks + the in-process
+    # kernel, zero Spark jobs; larger batches run the applyInPandas plan.
+    # Block decode runs ~250 ns/posting on one driver core, so the gate
+    # bounds a driver-served batch to well under a second of kernel time
+    # — about the Spark plan's own per-batch job floor
+    wand_driver_max_postings: int = 1_000_000
+    # per-(query, band) postings at or under which a multi-term group is
+    # scored by vectorized decode + scatter-add instead of the
+    # document-at-a-time WAND loop (whose pruning repays its ~30 µs per
+    # candidate Python cost only on large groups)
+    wand_taat_max_postings: int = 1_000_000
+
     def __post_init__(self) -> None:
         if self.k1 <= 0 or not (0.0 <= self.b <= 1.0):
             raise ValueError(f"bad BM25 params k1={self.k1} b={self.b}")
@@ -57,6 +72,11 @@ class EngineConfig:
             raise ValueError("block_size must be >= 2")
         if self.n_salts < 1 or self.n_term_buckets < 1:
             raise ValueError("n_salts / n_term_buckets must be >= 1")
+        # the driver gate also caps a tombstone collect (a JVM int limit)
+        if not 0 <= self.wand_driver_max_postings < 2**31 - 1:
+            raise ValueError("wand_driver_max_postings must be in [0, 2**31 - 1)")
+        if self.wand_taat_max_postings < 0:
+            raise ValueError("wand_taat_max_postings must be >= 0")
 
 
 DEFAULT_CONFIG = EngineConfig()

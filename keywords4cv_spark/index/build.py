@@ -52,6 +52,9 @@ import time
 from dataclasses import dataclass
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -111,6 +114,7 @@ class IndexTables:
     docmeta: DataFrame
     stats: DataFrame
     lineage: DataFrame
+    path: str  # the index tree load_index opened: driver-local reads use it
     _stats_row: object = None
     _term_cache: dict | None = None
 
@@ -126,34 +130,39 @@ class IndexTables:
 
         The query-time dictionary probe (Lucene's in-memory term
         dictionary, here a memoized parquet lookup): the first batch
-        that asks for a term pays one filter-pushdown scan job; every
-        later batch resolves it driver-side with ZERO Spark jobs. The
-        cache is bounded by the distinct terms actually queried against
-        this index handle (not the vocabulary), and negative results
-        are cached too so absent terms don't re-scan. An index is
-        immutable once built (generations are new handles), so entries
-        never go stale."""
+        that asks for a term pays one driver-side pyarrow read of the
+        dictionary files (a filter on ``term``, no Spark job); every
+        later batch resolves it from the cache. The cache is bounded by
+        the distinct terms actually queried against this index handle
+        (not the vocabulary), and negative results are cached too so
+        absent terms don't re-read. An index is immutable once built
+        (generations are new handles), so entries never go stale."""
         if self._term_cache is None:
             self._term_cache = {}
         missing = [t for t in set(terms) if t not in self._term_cache]
         if missing:
+            tbl = ds.dataset(f"{self.path}/dictionary", format="parquet").to_table(
+                columns=["term", "term_id", "df"],
+                filter=pc.field("term").isin(missing),
+            )
             found = {
-                r["term"]: (int(r["term_id"]), int(r["df"]))
-                for r in self.dictionary.filter(F.col("term").isin(missing))
-                .select("term", "term_id", "df")
-                .collect()
+                t: (int(tid), int(df))
+                for t, tid, df in zip(
+                    *(tbl.column(c).to_pylist() for c in ("term", "term_id", "df"))
+                )
             }
             for t in missing:
                 self._term_cache[t] = found.get(t)
         return {t: v for t in set(terms) if (v := self._term_cache[t]) is not None}
 
     def postings_for(
-        self, spark: SparkSession, wanted, schema: str = "term_id long"
-    ) -> DataFrame | None:
+        self, spark: SparkSession, wanted, schema: str = "term_id long",
+        local: bool = False,
+    ) -> DataFrame | pa.Table | None:
         """The one postings reader: the posting blocks of the wanted
-        terms, broadcast-joined to the wanted rows and pruned by bucket
-        directory (a partition filter, so other buckets' files are never
-        listed) and by term_id. None when no term resolves.
+        terms, joined to the wanted rows and pruned by bucket directory
+        (other buckets' files are never listed) and by term_id. None
+        when no term resolves.
 
         ``wanted`` is driver-local rows matching ``schema``. A leading
         ``term string`` column resolves through ``lookup_terms``: rows
@@ -163,10 +172,19 @@ class IndexTables:
         for a literal IN list (a prefix expansion): its distinct bucket
         set is collected, bounded by n_term_buckets, and the broadcast
         join alone prunes term ids.
+
+        ``local=True`` (driver-local rows only) returns an Arrow table
+        instead of a DataFrame: a pyarrow read of the wanted buckets'
+        directories with the term_id filter checked against each row
+        group's statistics, then an Arrow join — no Spark job. Spark
+        mode is a bucket PartitionFilter, a term_id IN filter and a
+        broadcast join.
         """
         nb = int(self.stats_row()["n_term_buckets"])
         scan = self.postings
         if isinstance(wanted, DataFrame):
+            if local:
+                raise ValueError("local postings reads take driver-local rows")
             keys = wanted
             buckets = sorted(
                 int(r[0])
@@ -184,6 +202,16 @@ class IndexTables:
                 return None
             term_ids = sorted({r[0] for r in rows})
             buckets = sorted({term_bucket(t, nb) for t in term_ids})
+            if local:
+                names = [c.split()[0] for c in schema.split(",")]
+                keys = pa.table(dict(zip(names, map(list, zip(*rows)))))
+                blocks = ds.dataset(
+                    [
+                        ds.dataset(f"{self.path}/postings/bucket={b}", format="parquet")
+                        for b in buckets
+                    ]
+                ).to_table(filter=pc.field("term_id").isin(term_ids))
+                return blocks.join(keys, "term_id")
             keys = local_rows(spark, rows, schema)
             scan = scan.filter(F.col("term_id").isin(term_ids))
         if not buckets:
@@ -742,5 +770,6 @@ def load_index(spark: SparkSession, index_dir: str) -> IndexTables:
         lineage=spark.read.option("basePath", f"{index_dir}/_lineage").parquet(
             f"{index_dir}/_lineage"
         ),
+        path=index_dir.rstrip("/"),
         _stats_row=srow,
     )

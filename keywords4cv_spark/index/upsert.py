@@ -27,10 +27,13 @@ do:
 
 Scale: the tombstone DERIVATION is one url-keyed shuffle over the
 docmeta tables (rows ∝ corpus, no window, no driver materialization).
-The QUERY-TIME exclusion ships tombstones to scoring tasks as extra
-rows unioned into the block scan — Spark-partitioned alongside the
-postings by the same (query, doc-band) keys, never collected to the
-driver — so its cost is |tombstones| × |queries| rows per query batch,
+The QUERY-TIME exclusion depends on where the WAND batch runs
+(``EngineConfig.wand_driver_max_postings``): a batch served in the
+driver collects the tombstone set, capped at the gate — a larger set
+sends the batch to the Spark plan. There tombstones reach the scoring
+tasks as extra rows unioned into the block scan, Spark-partitioned
+alongside the postings by the same (query, doc-band) keys, so the cost
+is |tombstones| × |queries| rows per query batch. Either way it is
 bounded by the recrawl volume of the compaction cycle (the LSM
 contract: compaction keeps the live tombstone set small). Reference
 parity: the reference engine rebuilds its cache wholesale on input

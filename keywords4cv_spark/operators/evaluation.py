@@ -93,7 +93,7 @@ def mean_average_precision(
     driver-side constant list), not the vocabulary.
     """
     from keywords4cv_spark.index.build import term_frequencies_fused
-    from keywords4cv_spark.query.indexed import _round6
+    from keywords4cv_spark.query.bm25 import round6
 
     wl = sorted({s for _, s in vocab.SKILLS})
     # fused tokenize+tf (no corpus shuffle), vocabulary-sized checkpoint:
@@ -142,5 +142,5 @@ def mean_average_precision(
     )
     return local_rows(
         spark,
-        [(_round6(ap), len(hit_rows))], "average_precision double, n_hits long"
+        [(round6(ap), len(hit_rows))], "average_precision double, n_hits long"
     )

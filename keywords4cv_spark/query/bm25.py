@@ -14,6 +14,8 @@ DuckDB oracle and the BMW scorer use.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -28,6 +30,18 @@ from keywords4cv_spark.index.build import (
 from keywords4cv_spark.query.fixtures import TOP_K, query_term_pairs
 
 SCORE_DECIMALS = 6
+_Q6 = Decimal(1).scaleb(-SCORE_DECIMALS)
+
+
+def round6(x: float) -> float:
+    """Driver-side twin of Spark's round(double, 6): Spark rounds
+    ``BigDecimal(Double.toString(x))``, the shortest decimal string of
+    the double, HALF_UP — so ``repr`` (also the shortest round-trip
+    string), never the exact binary expansion: round(0.8101115, 6) is
+    0.810112 in Spark, while the binary value sits just below the half.
+    Driver-side selection windows and rank-merges rank exactly like
+    ``F.round`` ones through this."""
+    return float(Decimal(repr(x)).quantize(_Q6, rounding=ROUND_HALF_UP))
 
 
 def bm25_idf_col() -> F.Column:

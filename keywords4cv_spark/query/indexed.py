@@ -22,7 +22,6 @@ entries after the engine-wide round(·, 6) (tests/test_driver_contract.py).
 from __future__ import annotations
 
 import math
-from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,19 +35,10 @@ from keywords4cv_spark.query.bm25 import (
     bm25_score_col,
     bm25_tf_norm_col,
     rank_topk,
+    round6,
 )
 from keywords4cv_spark.query.fixtures import TOP_K, query_term_pairs
 from keywords4cv_spark.query.parse import _decode_postings
-
-_Q6 = Decimal("0.000001")
-
-
-def _round6(x: float) -> float:
-    """Driver-side twin of Spark's round(double, 6): exact binary
-    expansion → HALF_UP at 6 decimals (java BigDecimal semantics), so
-    driver-side selection windows rank exactly like F.round ones."""
-    return float(Decimal(x).quantize(_Q6, rounding=ROUND_HALF_UP))
-
 
 def _qterms_local(
     spark: SparkSession, index, pairs: list[tuple[int, str]]
@@ -82,9 +72,12 @@ def bm25_explain_indexed(
     queries: list[tuple[int, str]] | None = None,
 ) -> DataFrame:
     """Score decomposition for the top-k hits (the Lucene/Elasticsearch
-    ``explain`` API): one postings decode for the query
-    terms; the |Q|·k top-k relation is broadcast back into the per-term
-    contribution rows (no shuffle added by the explain join)."""
+    ``explain`` API): one postings decode for the query terms, read
+    once. A doc's score is a window sum over its per-term rows, and its
+    rank a dense rank over (round(score, 6) DESC, doc_id ASC) — the
+    (score, doc_id) key is unique per doc, so the dense rank is
+    rank_topk's row number over docs. Nothing is cached, so the call
+    leaves no persisted relation behind."""
     pairs = queries if queries is not None else query_term_pairs()
     resolved = _qterms_local(spark, index, pairs)
     out_schema = (
@@ -95,30 +88,41 @@ def bm25_explain_indexed(
     if resolved is None:
         return spark.createDataFrame([], out_schema)
     qterms, term_ids = resolved
-    posts = _decode_postings(spark, index, term_ids).persist()
+    posts = _decode_postings(spark, index, term_ids)
     per_term = _with_stats(posts.join(F.broadcast(qterms), "term_id"), index)
-    per_term = per_term.withColumn("idf", bm25_idf_col()).withColumn(
-        "tf_norm", bm25_tf_norm_col(cfg)
+    per_term = (
+        per_term.withColumn("idf", bm25_idf_col())
+        .withColumn("tf_norm", bm25_tf_norm_col(cfg))
+        .withColumn(
+            "score",
+            F.round(
+                F.sum(F.col("idf") * F.col("tf_norm")).over(
+                    Window.partitionBy("query_id", "doc_id")
+                ),
+                SCORE_DECIMALS,
+            ),
+        )
     )
-    topk = rank_topk(
-        per_term.groupBy("query_id", "doc_id").agg(
-            F.sum(F.col("idf") * F.col("tf_norm")).alias("score")
-        ),
-        k,
+    w_rank = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("doc_id")
     )
-    return per_term.join(F.broadcast(topk), ["query_id", "doc_id"]).select(
-        "query_id",
-        "rank",
-        "doc_id",
-        "term",
-        "tf",
-        "df",
-        F.round("idf", SCORE_DECIMALS).alias("idf"),
-        F.round("tf_norm", SCORE_DECIMALS).alias("tf_norm"),
-        F.round(F.col("idf") * F.col("tf_norm"), SCORE_DECIMALS).alias(
-            "contribution"
-        ),
-        "score",
+    return (
+        per_term.withColumn("rank", F.dense_rank().over(w_rank))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "rank",
+            "doc_id",
+            "term",
+            "tf",
+            "df",
+            F.round("idf", SCORE_DECIMALS).alias("idf"),
+            F.round("tf_norm", SCORE_DECIMALS).alias("tf_norm"),
+            F.round(F.col("idf") * F.col("tf_norm"), SCORE_DECIMALS).alias(
+                "contribution"
+            ),
+            "score",
+        )
     )
 
 
@@ -176,7 +180,7 @@ def more_like_this_indexed(
                 continue
             tid, df = hit
             idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            cands.append((-_round6(tf * idf), t, tid, df))
+            cands.append((-round6(tf * idf), t, tid, df))
         cands.sort()
         sel_rows.extend((pid, tid, df) for _, _, tid, df in cands[:n_terms])
     if not sel_rows:

@@ -149,7 +149,9 @@ def _regex_atoms(pat: str):
     any other character as itself. Inside a class ``(``, ``|`` and
     ``?`` are literals, so classes are one atom, not group syntax. A
     leading ``^`` and a ``]`` right after it are class literals; the
-    class ends at the next unescaped ``]``."""
+    class ends at the next unescaped ``]``. A class holding an
+    unescaped ``[`` or ``&&`` is the atom "[&&]": java.util.regex reads
+    those as class union / intersection, RE2 as literals."""
     i = 0
     while i < len(pat):
         if pat[i] == "\\":
@@ -161,12 +163,15 @@ def _regex_atoms(pat: str):
                 i += 1
             if pat[i : i + 1] == "]":
                 i += 1
+            set_ops = False
             while i < len(pat) and pat[i] != "]":
                 if pat[i] == "\\":
                     yield pat[i : i + 2]
                     i += 1
+                elif pat[i] == "[" or pat[i : i + 2] == "&&":
+                    set_ops = True
                 i += 1
-            yield "[]"
+            yield "[&&]" if set_ops else "[]"
             i += 1
         else:
             yield pat[i]
@@ -175,11 +180,15 @@ def _regex_atoms(pat: str):
 
 def _non_portable(pat: str) -> bool:
     """Constructs outside the java.util.regex ∩ RE2 common subset: a
-    backreference (\\1..\\9) or a (?...) group that is not the plain
+    backreference (\\1..\\9), a (?...) group that is not the plain
     non-capturing (?:...) — covers lookaround (?= (?! (?<= (?<!, named
-    groups (?P<x>/(?<x>), flags, conditionals, atomic groups."""
+    groups (?P<x>/(?<x>), flags, conditionals, atomic groups — and a
+    character class with a nested class or ``&&`` (``[a[b]]``,
+    ``[a-z&&[^b]]``: java's union / intersection, RE2's literals)."""
     atoms = list(_regex_atoms(pat))
     for i, a in enumerate(atoms):
+        if a == "[&&]":
+            return True
         if len(a) == 2 and a[0] == "\\" and a[1] in "123456789":
             return True
         nxt = atoms[i + 1 : i + 3]
@@ -265,18 +274,19 @@ def parse_query(q: str) -> list[Clause]:
         if m.group(7) is not None:  # /regexp/ [^boost]
             pat = m.group(7)
             boost = float(m.group(8) or 1.0)
+            # the pattern executes on BOTH java.util.regex (Spark RLIKE)
+            # and RE2 (DuckDB regexp_full_match): constructs outside
+            # their common subset — backreferences, lookaround, named
+            # groups — would throw at JOB time on one engine instead of
+            # parse time, and class set operations match differently;
+            # drop them like other malformed clauses (Lucene
+            # RegexpQuery supports none of these either)
+            if _non_portable(pat):
+                continue
             try:
                 re.compile(pat)
             except re.error:
                 continue  # malformed pattern: drop the clause (Lucene throws)
-            # the pattern executes on BOTH java.util.regex (Spark RLIKE)
-            # and RE2 (DuckDB regexp_full_match): Python-valid constructs
-            # outside their common subset — backreferences, lookaround,
-            # named groups — would throw at JOB time on one engine
-            # instead of parse time; drop them like other malformed
-            # clauses (Lucene RegexpQuery supports none of these either)
-            if _non_portable(pat):
-                continue
             if pat and pat.strip(".*?+()"):
                 clauses.append(Clause(occur, "regexp", (pat,), boost=boost))
             continue
@@ -1023,12 +1033,13 @@ def _indexed_search(
         parsed_gen, gen_rows = parsed, cterm_rows
 
     if gen_rows:
-        # persist the DECODED postings (they feed both the hit relation
-        # and the scoring aggregate); the clause joins against them are
-        # broadcast map-side and need no materialization of their own
+        # the decoded postings feed both the hit relation and the scoring
+        # aggregate; they are not persisted, since the returned frame is
+        # lazy and a cache would outlive the call (the decode of the
+        # clause terms' pruned blocks is cheap to run once per consumer)
         posts = _decode_postings(
             spark, index, [int(r["term_id"]) for r in gen_rows]
-        ).persist()
+        )
         srow = index.stats_row()
         # per-(query, term) boost dedup across clauses is driver-side
         # arithmetic over the local clause rows — the old plan paid a

@@ -11,11 +11,22 @@ top-k with two pruning levels —
 One driver (``_wand_topk``) serves one index and a list of index
 generations alike; ``bm25_wand`` is its one-generation call (with
 search-after cursors) and ``bm25_wand_multi`` its multi-generation call
-(with tombstones). Spark shape: query terms resolved driver-side
-(memoized dictionary probe) → per generation, the postings blocks from
-``IndexTables.postings_for`` (bucket-directory and term_id pruned) →
-union (generations only) → ``groupBy(query_id, segment)
-.applyInPandas(bmw)`` → rank-merge.
+(with tombstones). Query terms resolve driver-side (the memoized
+dictionary probe, a pyarrow read on a miss), which gives the batch's
+posting count, Σ df over its (query, term, generation) rows, before any
+block is read. Two shapes, one kernel (``_group_topk``):
+
+- driver (batches at or under ``EngineConfig.wand_driver_max_postings``,
+  with at most that many tombstones): per generation, a pyarrow read of
+  the bucket-directory and term_id pruned blocks
+  (``IndexTables.postings_for(local=True)``) → the (query, band) groups
+  scored in-process → rank-merge in Python → an Arrow local relation.
+  Zero Spark jobs without tombstones; the tombstone collect otherwise.
+  At serving scale a warm query's cost is the per-job scheduling floor
+  of the Spark shape, not scoring work, so small batches stay here.
+- Spark (larger batches): per generation, the blocks from
+  ``IndexTables.postings_for`` → union (generations only) →
+  ``groupBy(query_id, segment).applyInPandas`` → ``rank_topk``.
 
 Segments are DOC BANDS (segment = doc_id % n_salts at build time, the
 same partition of the doc space for every term), so the (query, band)
@@ -37,17 +48,20 @@ win on doc_id) is never skipped.
 from __future__ import annotations
 
 import heapq
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from keywords4cv_spark.config import DEFAULT_CONFIG, EngineConfig
 from keywords4cv_spark.session import local_rows
 from keywords4cv_spark.index.build import IndexTables
 from keywords4cv_spark.index.codec import bm25_contrib, decode_block
-from keywords4cv_spark.query.bm25 import SCORE_DECIMALS, rank_topk
+from keywords4cv_spark.query.bm25 import SCORE_DECIMALS, rank_topk, round6
 from keywords4cv_spark.query.fixtures import TOP_K, query_term_pairs
 
 # prune margin: half-ulp of round(.,6) plus float-noise headroom
@@ -196,15 +210,6 @@ def _single_cursor_topk(
     return [(int(d), float(x)) for d, x in zip(docs, s)]
 
 
-# per-(query, band) posting-count gate for the vectorized exact scorer:
-# below it, decoding every block and aggregating per doc in numpy is
-# cheaper than document-at-a-time pivoting in Python (~30 µs/candidate);
-# above it, WAND's doc-aligned pruning repays the loop by skipping most
-# block decodes. Scale-adaptive by construction — the gate is on the
-# GROUP's postings, so web-scale head-term bands keep the pruning path.
-TAAT_MAX_POSTINGS = 1_000_000
-
-
 def _taat_topk(
     cursors: list[_Cursor], k: int, excluded: frozenset[int]
 ) -> list[tuple[int, float]]:
@@ -247,8 +252,9 @@ def _taat_topk(
 def _bmw_one_query(
     cursors: list[_Cursor],
     k: int,
-    excluded: frozenset[int] = frozenset(),
-    after: tuple[float, int] | None = None,
+    excluded: frozenset[int],
+    after: tuple[float, int] | None,
+    taat_max_postings: int,
 ) -> list[tuple[int, float]]:
     """Block-Max WAND → [(doc_id, exact_score)] of the top-k candidates.
 
@@ -266,11 +272,19 @@ def _bmw_one_query(
     scores sit BELOW the cursor, so seeding θ at the cursor score would
     wrongly prune them; the cursor's payoff is a bounded heap per page
     (k, not page·k) regardless of depth, unlike offset pagination.
+
+    Without a cursor, a one-list group and a multi-list group of at most
+    ``taat_max_postings`` postings (``EngineConfig.wand_taat_max_postings``)
+    take the vectorized exact scorers: below the gate, decoding every
+    block in numpy beats document-at-a-time pivoting in Python (~30 µs
+    per candidate); above it, WAND's doc-aligned pruning repays the
+    loop. The gate is on the GROUP's postings, so head-term bands at
+    web scale keep the pruning path.
     """
     if after is None:
         if len(cursors) == 1:
             return _single_cursor_topk(cursors[0], k, excluded)
-        if sum(int(c.ns.sum()) for c in cursors) <= TAAT_MAX_POSTINGS:
+        if sum(int(c.ns.sum()) for c in cursors) <= taat_max_postings:
             return _taat_topk(cursors, k, excluded)
     heap: list[tuple[float, int]] = []
     after_key = (after[0], -after[1]) if after is not None else None
@@ -376,13 +390,77 @@ def bm25_wand_multi(
     superseded recrawl versions from ``index/upsert.py:superseded_docs``.
     Excluded docs are dropped from every result while statistics keep
     counting them (Lucene deleted-docs semantics; a purging compaction
-    restores clean statistics). The tombstones travel as marker rows
-    unioned into the block scan — partitioned to the same (query,
-    doc-band) scoring tasks as the postings, never collected to the
-    driver. All generations must share ``cfg.n_salts`` (the band rule
-    ``doc_id % n_salts`` is how a tombstone finds its scoring task).
+    restores clean statistics). A batch served in the driver collects
+    the tombstone set (at most ``cfg.wand_driver_max_postings`` rows;
+    a larger set sends the batch to the Spark shape). In the Spark
+    shape tombstones travel as marker rows unioned into the block scan,
+    partitioned to the same (query, doc-band) scoring tasks as the
+    postings, and all generations must share ``cfg.n_salts`` (the band
+    rule ``doc_id % n_salts`` is how a tombstone finds its scoring task).
     """
     return _wand_topk(spark, indexes, cfg, k, queries, exclude=exclude)
+
+
+# a StructType, not DDL: parsing a DDL string costs a JVM round trip per call
+_OUT_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.LongType()),
+        T.StructField("rank", T.IntegerType()),
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("score", T.DoubleType()),
+    ]
+)
+# the block columns one (query, band) group carries into the kernel
+_BLOCK_COLS = [
+    "query_id", "cursor", "segment", "first_doc", "last_doc",
+    "n", "max_tf", "max_score", "payload", "df", "w",
+]
+
+
+class _Scoring(NamedTuple):
+    """What every (query, band) group of one call scores with."""
+
+    n_docs: int
+    avgdl: float
+    k1: float
+    b: float
+    stored_bounds: bool
+    k: int
+    taat_max_postings: int
+
+
+def _group_topk(
+    pdf: pd.DataFrame,
+    sc: _Scoring,
+    excluded: frozenset[int],
+    after: tuple[float, int] | None,
+) -> list[tuple[int, float]]:
+    """Partial top-k of one (query, doc-band) group of block rows: one
+    cursor per ``cursor`` key (term_id·G + generation) in ascending key
+    order, then ``_bmw_one_query``. The Spark UDF and the driver loop
+    both score through here, so the float sums run in the same order
+    and the two paths return bit-identical scores."""
+    cursors = []
+    for _, g in pdf.groupby("cursor", sort=True):
+        df_val = int(g["df"].iloc[0])
+        w = float(g["w"].iloc[0])
+        idf = w * float(np.log(1.0 + (sc.n_docs - df_val + 0.5) / (df_val + 0.5)))
+        if sc.stored_bounds:
+            # the stored bound scales with the weight, keeping pruning exact
+            bound = w * g["max_score"].to_numpy(np.float64)
+        else:
+            bound = _tf_upper_bound(g["max_tf"].to_numpy(np.int64), idf, sc.k1, sc.b)
+        cursors.append(
+            _Cursor(
+                idf, sc.k1, sc.b, sc.avgdl,
+                g["first_doc"].to_numpy(np.int64),
+                g["last_doc"].to_numpy(np.int64),
+                bound,
+                list(g["payload"]),
+                g["n"].to_numpy(np.int64),
+            )
+        )
+    return _bmw_one_query(cursors, sc.k, excluded, after, sc.taat_max_postings)
 
 
 def _wand_topk(
@@ -402,10 +480,14 @@ def _wand_topk(
     baked bound is stale under the combined statistics, so bounds are
     recomputed from ``max_tf`` (``_tf_upper_bound``), valid under any
     statistics.
-    """
-    from keywords4cv_spark.deploy import ensure_py_files
 
-    ensure_py_files(spark)
+    Where it runs: the batch's resolved postings, Σ df over its
+    (query, term, generation) rows, are known from the dictionary probe
+    before any block is read. At or under
+    ``cfg.wand_driver_max_postings`` — and with at most that many
+    tombstones — the batch is scored in the driver (``_driver_topk``);
+    above it, by the ``applyInPandas`` plan (``_spark_topk``).
+    """
     pairs = queries if queries is not None else query_term_pairs()
     pairs3 = [
         (p[0], p[1], float(p[2]) if len(p) > 2 else 1.0) for p in pairs
@@ -417,17 +499,89 @@ def _wand_topk(
         avgdl = float(srows[0]["avgdl"])
     else:
         avgdl = sum(int(r["sum_dl"]) for r in srows) / n_docs
-    k1, b = cfg.k1, cfg.b
+    sc = _Scoring(n_docs, avgdl, cfg.k1, cfg.b, stored_bounds, k, cfg.wand_taat_max_postings)
 
     # global df per term = Σ generation df (doc spaces are disjoint),
     # from the memoized driver-side dictionary probe
-    # (IndexTables.lookup_terms): repeated batches resolve with zero jobs
+    # (IndexTables.lookup_terms): repeated batches resolve from its cache
     terms = [t for _, t, _ in pairs3]
+    luts = [idx.lookup_terms(terms) for idx in indexes]
     df_total: dict[str, int] = {}
-    for idx in indexes:
-        for term, (_, df_val) in idx.lookup_terms(terms).items():
+    for lut in luts:
+        for term, (_, df_val) in lut.items():
             df_total[term] = df_total.get(term, 0) + df_val
     qrows = [(t, qid, w, df_total[t]) for qid, t, w in pairs3 if t in df_total]
+    gate = cfg.wand_driver_max_postings
+    n_postings = sum(lut[t][1] for lut in luts for t, *_ in qrows if t in lut)
+    if n_postings <= gate:  # always so when no term resolves
+        excluded: list[int] = []
+        if exclude is not None and qrows:
+            excluded = [int(r[0]) for r in exclude.select("doc_id").limit(gate + 1).collect()]
+        if len(excluded) <= gate:
+            return _driver_topk(spark, indexes, qrows, sc, after or {}, frozenset(excluded))
+    return _spark_topk(spark, indexes, qrows, sc, cfg.n_salts, after or {}, exclude)
+
+
+def _driver_topk(
+    spark: SparkSession,
+    indexes: list[IndexTables],
+    qrows: list[tuple],
+    sc: _Scoring,
+    after: dict[int, tuple[float, int]],
+    excluded: frozenset[int],
+) -> DataFrame:
+    """The batch scored in the driver: per generation, a pyarrow read of
+    the bucket- and term_id-pruned blocks (``postings_for(local=True)``),
+    the (query, band) groups through ``_group_topk``, then an exact
+    rank-merge of the partials on (round(score, 6) DESC, doc_id ASC) with
+    Spark's rounding (``round6``). The result is made from an Arrow
+    table: a local relation, so collecting it runs no Spark job, even
+    when it is empty (``createDataFrame`` of a list or of an empty
+    pandas frame plans a parallelize job)."""
+    parts = []
+    for g, idx in enumerate(indexes):
+        blocks = idx.postings_for(
+            spark, qrows, "term string, query_id long, w double, df long", local=True
+        )
+        if blocks is not None:
+            pdf = blocks.to_pandas()
+            pdf["cursor"] = pdf["term_id"] * len(indexes) + g
+            parts.append(pdf[_BLOCK_COLS])
+    partials: dict[int, list[tuple[float, int]]] = {}
+    if parts:
+        allblocks = pd.concat(parts, ignore_index=True)
+        for (qid, _), grp in allblocks.groupby(["query_id", "segment"], sort=True):
+            qid = int(qid)
+            for doc, score in _group_topk(grp, sc, excluded, after.get(qid)):
+                partials.setdefault(qid, []).append((-round6(score), doc))
+    rows = [
+        (qid, rank, doc, -neg)
+        for qid in sorted(partials)
+        for rank, (neg, doc) in enumerate(sorted(partials[qid])[: sc.k], 1)
+    ]
+    cols = list(zip(*rows)) or [(), (), (), ()]
+    types = [pa.int64(), pa.int32(), pa.int64(), pa.float64()]
+    return spark.createDataFrame(
+        pa.table({f.name: pa.array(c, t) for f, c, t in zip(_OUT_SCHEMA, cols, types)}),
+        _OUT_SCHEMA,
+    )
+
+
+def _spark_topk(
+    spark: SparkSession,
+    indexes: list[IndexTables],
+    qrows: list[tuple],
+    sc: _Scoring,
+    n_salts: int,
+    after: dict[int, tuple[float, int]],
+    exclude: DataFrame | None,
+) -> DataFrame:
+    """The batch scored by Spark: per generation the pruned blocks from
+    ``postings_for`` → union (generations only) → ``groupBy(query_id,
+    segment).applyInPandas`` over ``_group_topk`` → ``rank_topk``."""
+    from keywords4cv_spark.deploy import ensure_py_files
+
+    ensure_py_files(spark)
     parts = []
     for g, idx in enumerate(indexes):
         blocks = idx.postings_for(
@@ -438,14 +592,7 @@ def _wand_topk(
             # keeps the per-group split cheap, and its order (term_id,
             # then generation) is term order within every generation
             cursor = (F.col("term_id") * len(indexes) + g).alias("cursor")
-            parts.append(
-                blocks.select(
-                    "query_id", cursor, "segment", "first_doc", "last_doc",
-                    "n", "max_tf", "max_score", "payload", "df", "w",
-                )
-            )
-    if not parts:
-        return spark.createDataFrame([], "query_id long, rank int, doc_id long, score double")
+            parts.append(blocks.select(*[cursor if c == "cursor" else c for c in _BLOCK_COLS]))
     allblocks = parts[0]
     for p in parts[1:]:
         allblocks = allblocks.unionByName(p)
@@ -455,7 +602,7 @@ def _wand_topk(
         # marker row (payload NULL, cursor -1) per (query, tombstoned doc),
         # banded by the build-time rule doc_id % n_salts so each lands in
         # exactly the (query, segment) group whose postings could emit it
-        qids = sorted({q for q, _, _ in pairs3})
+        qids = sorted({q for _, q, _, _ in qrows})
         qid_df = local_rows(spark, [(q,) for q in qids], "query_id long")
         tomb = (
             exclude.select(F.col("doc_id").cast("long"))
@@ -463,7 +610,7 @@ def _wand_topk(
             .select(
                 "query_id",
                 F.lit(-1).cast("long").alias("cursor"),
-                F.pmod(F.col("doc_id"), F.lit(cfg.n_salts)).cast("int").alias("segment"),
+                F.pmod(F.col("doc_id"), F.lit(n_salts)).cast("int").alias("segment"),
                 F.col("doc_id").alias("first_doc"),
                 F.col("doc_id").alias("last_doc"),
                 F.lit(0).cast("int").alias("n"),
@@ -475,7 +622,7 @@ def _wand_topk(
             )
         )
         allblocks = allblocks.unionByName(tomb)
-    after_b = spark.sparkContext.broadcast(after or {})
+    after_b = spark.sparkContext.broadcast(after)
 
     def bmw(pdf: pd.DataFrame) -> pd.DataFrame:
         # one (query, doc-band) group: one cursor per (term, generation).
@@ -487,27 +634,7 @@ def _wand_topk(
         if tomb_mask.any():
             excluded = frozenset(int(d) for d in pdf.loc[tomb_mask, "first_doc"])
             pdf = pdf[~tomb_mask]
-        cursors = []
-        for _, g in pdf.groupby("cursor", sort=True):
-            df_val = int(g["df"].iloc[0])
-            w = float(g["w"].iloc[0])
-            idf = w * float(np.log(1.0 + (n_docs - df_val + 0.5) / (df_val + 0.5)))
-            if stored_bounds:
-                # the stored bound scales with the weight, keeping pruning exact
-                bound = w * g["max_score"].to_numpy(np.float64)
-            else:
-                bound = _tf_upper_bound(g["max_tf"].to_numpy(np.int64), idf, k1, b)
-            cursors.append(
-                _Cursor(
-                    idf, k1, b, avgdl,
-                    g["first_doc"].to_numpy(np.int64),
-                    g["last_doc"].to_numpy(np.int64),
-                    bound,
-                    list(g["payload"]),
-                    g["n"].to_numpy(np.int64),
-                )
-            )
-        hits = _bmw_one_query(cursors, k, excluded, after_b.value.get(qid))
+        hits = _group_topk(pdf, sc, excluded, after_b.value.get(qid))
         return pd.DataFrame(
             {
                 "query_id": pd.Series([qid] * len(hits), dtype="int64"),
@@ -521,7 +648,7 @@ def _wand_topk(
     scored = allblocks.groupBy("query_id", "segment").applyInPandas(
         bmw, "query_id long, doc_id long, score double"
     )
-    return rank_topk(scored, k)
+    return rank_topk(scored, sc.k)
 
 
 def _tf_upper_bound(max_tf: np.ndarray, idf: float, k1: float, b: float) -> np.ndarray:

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 import shutil
+from dataclasses import replace
 
 import numpy as np
 import pytest
@@ -12,7 +13,7 @@ from pyspark.sql import functions as F
 from keywords4cv_spark.config import EngineConfig
 from keywords4cv_spark.index.build import build_index, load_index
 from keywords4cv_spark.query.bm25 import bm25_brute_force
-from keywords4cv_spark.query.fixtures import QUERY_SET, query_terms
+from keywords4cv_spark.query.fixtures import QUERY_SET, query_term_pairs, query_terms
 from keywords4cv_spark.query.wand import bm25_wand
 from keywords4cv_spark.textprep.normalize import tokenize
 
@@ -74,6 +75,33 @@ def _collect(df):
     }
 
 
+# the largest driver gate EngineConfig accepts: every test batch fits
+_GATE_OPEN = 2**31 - 2
+
+
+def _gate_sides(cfg):
+    """cfg with the WAND driver gate forced open (driver path) and shut
+    (Spark applyInPandas path)."""
+    return {
+        "driver": replace(cfg, wand_driver_max_postings=_GATE_OPEN),
+        "spark": replace(cfg, wand_driver_max_postings=0),
+    }
+
+
+def _both_sides(cfg, run):
+    """``run(cfg)`` on each side of the WAND driver gate. The two answers
+    must be bit-identical: same (query_id, rank, doc_id) and the same
+    double ``score`` (float ==). Returns the _collect dict."""
+    got = {side: _collect(run(c)) for side, c in _gate_sides(cfg).items()}
+    assert got["driver"] == got["spark"]
+    return got["driver"]
+
+
+@pytest.fixture(scope="module")
+def brute(spark, docs):
+    return _collect(bm25_brute_force(spark, docs, CFG))
+
+
 def test_brute_force_matches_python_oracle(spark, docs):
     rows = [(r.doc_id, r.text) for r in docs.filter(F.col("lang") == "en").collect()]
     oracle = python_bm25_oracle(rows)
@@ -107,27 +135,80 @@ def test_index_tables_sane(index):
     assert index.lineage.filter(F.col("status") == "complete").count() == CFG.n_term_buckets
 
 
-def test_wand_rank_identical_to_brute_force(spark, docs, index):
-    brute = _collect(bm25_brute_force(spark, docs, CFG))
-    wand = _collect(bm25_wand(spark, index, CFG))
+def test_wand_rank_identical_to_brute_force(spark, index, brute):
+    wand = _both_sides(CFG, lambda c: bm25_wand(spark, index, c))
     assert set(brute) == set(wand)
     for key in brute:
         assert brute[key][0] == wand[key][0], (key, brute[key], wand[key])
         assert abs(brute[key][1] - wand[key][1]) < 1e-9, key
 
 
-def test_wand_daat_loop_rank_identical(spark, docs, index, monkeypatch):
-    """Force the document-at-a-time heap loop (the at-scale path) by
-    zeroing the vectorized-scorer gate: it must stay rank-identical to
-    the default (vectorized) path and to brute force."""
-    from keywords4cv_spark.query import wand as wand_mod
+_GATES = [
+    ("wand_taat_max_postings", 0),  # the document-at-a-time heap loop
+    ("wand_taat_max_postings", _GATE_OPEN),  # vectorized group scorers
+    ("wand_driver_max_postings", 0),  # Spark applyInPandas plan
+    ("wand_driver_max_postings", _GATE_OPEN),  # in-process driver kernel
+]
 
-    monkeypatch.setattr(wand_mod, "TAAT_MAX_POSTINGS", 0)
-    daat = _collect(bm25_wand(spark, index, CFG))
-    brute = _collect(bm25_brute_force(spark, docs, CFG))
-    assert set(brute) == set(daat)
+
+@pytest.mark.parametrize(
+    "gate,value", _GATES, ids=[f"{g}={'0' if v == 0 else 'open'}" for g, v in _GATES]
+)
+def test_wand_size_gates_rank_identical(spark, index, brute, gate, value):
+    """Both sides of both WAND size gates, forced through EngineConfig,
+    stay rank-identical to brute force."""
+    got = _collect(bm25_wand(spark, index, replace(CFG, **{gate: value})))
+    assert set(brute) == set(got)
     for key in brute:
-        assert brute[key][0] == daat[key][0], (key, brute[key], daat[key])
+        assert brute[key][0] == got[key][0], (key, brute[key], got[key])
+        assert abs(brute[key][1] - got[key][1]) < 1e-9, key
+
+
+def test_wand_weighted_terms_bit_identical(spark, index):
+    """Weighted terms (the expansion shape) score bit-identically on both
+    sides of the driver gate, including under the DAAT loop."""
+    triples = [
+        (q, t, 0.25 + 0.5 * (i % 3)) for i, (q, t) in enumerate(query_term_pairs())
+    ]
+    for taat in (0, _GATE_OPEN):
+        cfg = replace(CFG, wand_taat_max_postings=taat)
+        got = _both_sides(cfg, lambda c: bm25_wand(spark, index, c, queries=triples))
+        assert got
+
+
+def test_wand_bad_input_is_empty_on_both_sides(spark, index):
+    """All-unknown terms, an empty batch and a search-after cursor past
+    the last hit return an empty frame of the result schema on both
+    sides of the driver gate, without raising."""
+    want = [("query_id", "bigint"), ("rank", "int"), ("doc_id", "bigint"),
+            ("score", "double")]
+    past = {qid: (0.0, 0) for qid, _ in QUERY_SET}
+    for cfg in _gate_sides(CFG).values():
+        for kw in (
+            {"queries": [(0, "zzqxnope"), (1, "qqzzxnope")]},
+            {"queries": []},
+            {"after": past},
+        ):
+            df = bm25_wand(spark, index, cfg, **kw)
+            assert df.dtypes == want, kw
+            assert df.collect() == [], kw
+
+
+def test_round6_matches_spark_round(spark):
+    """round6 is Spark's round(double, 6): HALF_UP on the shortest
+    decimal string, also for half-boundary literals whose binary value
+    sits just below the half (0.8101115 → 0.810112)."""
+    from keywords4cv_spark.query.bm25 import round6
+
+    rng = np.random.default_rng(11)
+    xs = [0.8101115, 2.5e-06, 1.0000005, 0.0000015]
+    xs += [float(f"{int(m)}.{int(f):06d}5") for m, f in zip(
+        rng.integers(0, 20, 2000), rng.integers(0, 10**6, 2000))]
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i long, x double")
+    got = {r.i: r.r for r in df.select("i", F.round("x", 6).alias("r")).collect()}
+    assert round6(0.8101115) == 0.810112
+    bad = [(x, got[i], round6(x)) for i, x in enumerate(xs) if got[i] != round6(x)]
+    assert not bad, bad[:5]
 
 
 def test_wand_many_random_queries(spark, docs, index):
@@ -141,7 +222,7 @@ def test_wand_many_random_queries(spark, docs, index):
         queries.append((qid, " ".join(terms)))
     pairs = [(qid, t) for qid, q in queries for t in dict.fromkeys(q.split())]
     brute = _collect(bm25_brute_force(spark, docs, CFG, queries=pairs))
-    wand = _collect(bm25_wand(spark, index, CFG, queries=pairs))
+    wand = _both_sides(CFG, lambda c: bm25_wand(spark, index, c, queries=pairs))
     assert brute.keys() == wand.keys()
     for key in brute:
         assert brute[key][0] == wand[key][0], (key, brute[key], wand[key])
@@ -166,7 +247,7 @@ def test_salted_index_rank_identical(spark, docs, tmp_path):
     )
     assert head_segments == cfg.n_salts, "head term does not span all doc bands"
     brute = _collect(bm25_brute_force(spark, docs, cfg))
-    wand = _collect(bm25_wand(spark, idx, cfg))
+    wand = _both_sides(cfg, lambda c: bm25_wand(spark, idx, c))
     assert set(brute) == set(wand)
     for key in brute:
         assert brute[key][0] == wand[key][0], (key, brute[key], wand[key])
@@ -358,7 +439,7 @@ def test_multi_generation_rank_identical(spark, docs, tmp_path):
         url_col="source",
     )
     brute = _collect(bm25_brute_force(spark, docs, CFG))
-    multi = _collect(bm25_wand_multi(spark, [gen1, gen2], CFG))
+    multi = _both_sides(CFG, lambda c: bm25_wand_multi(spark, [gen1, gen2], c))
     assert set(brute) == set(multi)
     for key in brute:
         assert brute[key][0] == multi[key][0], (key, brute[key], multi[key])
@@ -465,8 +546,8 @@ def test_recrawl_upsert_and_purging_compaction(spark, docs, tmp_path):
         for qid, hits in oracle.items()
         for rank, doc, score in hits
     }
-    got = _collect(
-        bm25_wand_multi(spark, gens, CFG, exclude=superseded_docs(gens))
+    got = _both_sides(
+        CFG, lambda c: bm25_wand_multi(spark, gens, c, exclude=superseded_docs(gens))
     )
     assert set(got) == set(want)
     for key in want:
@@ -491,7 +572,7 @@ def test_recrawl_upsert_and_purging_compaction(spark, docs, tmp_path):
     assert purged.stats_row()["n_docs"] == fresh.stats_row()["n_docs"]
     assert purged.stats_row()["sum_dl"] == fresh.stats_row()["sum_dl"]
     brute = _collect(bm25_brute_force(spark, live, CFG))
-    wand = _collect(bm25_wand(spark, purged, CFG))
+    wand = _both_sides(CFG, lambda c: bm25_wand(spark, purged, c))
     assert set(brute) == set(wand)
     for key in brute:
         assert brute[key][0] == wand[key][0], (key, brute[key], wand[key])
@@ -612,45 +693,45 @@ def test_proximity_search_semantics(spark, docs, tmp_path):
         assert got == brute(slop), f"slop={slop}"
 
 
-def test_search_after_pages_reconstruct_full_ranking(spark, docs, index):
+def test_search_after_pages_reconstruct_full_ranking(spark, index):
     """Cursor pagination: concatenating successive search-after pages
     must reproduce the one-shot deep top-k exactly (same docs, same
-    order), for several page hops."""
+    order), for several page hops, on each side of the driver gate —
+    and the pages of the two sides are bit-identical."""
     PAGE, PAGES = 5, 4
-    deep = bm25_wand(spark, index, CFG, k=PAGE * PAGES)
-    want = {
-        (r.query_id, r.rank): (r.doc_id, r.score) for r in deep.collect()
-    }
-    got = {}
-    cursors = {}
-    active = None  # all queries on page 1
-    for page in range(PAGES):
-        from keywords4cv_spark.query.fixtures import query_term_pairs
-
-        pairs = (
-            None
-            if active is None
-            else [(q, t) for q, t in query_term_pairs() if q in active]
-        )
-        rows = bm25_wand(
-            spark, index, CFG, k=PAGE, queries=pairs,
-            after=cursors if cursors else None,
-        ).collect()
-        by_q = {}
-        for r in rows:
-            by_q.setdefault(r.query_id, []).append(r)
-            got[(r.query_id, page * PAGE + r.rank)] = (r.doc_id, r.score)
-        cursors = {
-            qid: (float(rs[-1].score), int(rs[-1].doc_id))
-            for qid, rs in (
-                (qid, sorted(rs, key=lambda r: r.rank)) for qid, rs in by_q.items()
+    pages = {}
+    for side, cfg in _gate_sides(CFG).items():
+        want = _collect(bm25_wand(spark, index, cfg, k=PAGE * PAGES))
+        got = {}
+        cursors = {}
+        active = None  # all queries on page 1
+        for page in range(PAGES):
+            pairs = (
+                None
+                if active is None
+                else [(q, t) for q, t in query_term_pairs() if q in active]
             )
-            if len(rs) == PAGE
-        }
-        active = set(cursors)
-        if not active:
-            break
-    assert got == want
+            rows = bm25_wand(
+                spark, index, cfg, k=PAGE, queries=pairs,
+                after=cursors if cursors else None,
+            ).collect()
+            by_q = {}
+            for r in rows:
+                by_q.setdefault(r.query_id, []).append(r)
+                got[(r.query_id, page * PAGE + r.rank)] = (r.doc_id, r.score)
+            cursors = {
+                qid: (float(rs[-1].score), int(rs[-1].doc_id))
+                for qid, rs in (
+                    (qid, sorted(rs, key=lambda r: r.rank)) for qid, rs in by_q.items()
+                )
+                if len(rs) == PAGE
+            }
+            active = set(cursors)
+            if not active:
+                break
+        assert got == want, side
+        pages[side] = got
+    assert pages["driver"] == pages["spark"]
 
 
 def test_superseded_docs_within_generation_dup(spark, docs, tmp_path):

@@ -118,15 +118,27 @@ _POSTINGS_CONSUMERS = [
 @pytest.mark.parametrize(
     "name,n_scans", _POSTINGS_CONSUMERS, ids=[n for n, _ in _POSTINGS_CONSUMERS]
 )
-def test_postings_consumers_prune_buckets(spark, sf_dir, name, n_scans):
+def test_postings_consumers_prune_buckets(spark, sf_dir, name, n_scans, monkeypatch):
     """Query-time bucket pruning on every postings consumer: each
     postings scan in the plan carries a PartitionFilter on the bucket
     dirs (whole directories of non-matching term buckets are never
     listed, the cluster-scale equivalent of reading only the query's
-    index shards)."""
-    from keywords4cv_spark.driver_queries import QUERIES
+    index shards). The two WAND entries run with the driver gate shut:
+    their driver path reads with pyarrow and has no Spark scan (its
+    pruning is pinned by test_wand_driver_read_opens_only_query_buckets)."""
+    from dataclasses import replace
 
-    plan = explain_str(QUERIES[name](spark, sf_dir))
+    from keywords4cv_spark import driver_queries as dq
+
+    if name == "bm25_wand_topk":
+        monkeypatch.setattr(dq, "CFG", replace(dq.CFG, wand_driver_max_postings=0))
+    elif name == "bm25_recrawl_topk":
+        gens, cfg, base = dq._recrawl_family(spark, sf_dir)
+        monkeypatch.setitem(
+            dq._RECRAWL_CACHE, sf_dir,
+            (gens, replace(cfg, wand_driver_max_postings=0), base),
+        )
+    plan = explain_str(dq.QUERIES[name](spark, sf_dir))
     scans = [
         node for node in plan.split("\n\n")
         if "Scan parquet" in node and "/postings]" in node
@@ -135,6 +147,40 @@ def test_postings_consumers_prune_buckets(spark, sf_dir, name, n_scans):
     for node in scans:
         pf = re.search(r"PartitionFilters: \[([^\]]*)\]", node)
         assert pf and "bucket" in pf.group(1), (name, node)
+
+
+def test_wand_driver_read_opens_only_query_buckets(spark, sf_dir, monkeypatch):
+    """The driver-side WAND read (postings_for local mode) opens parquet
+    fragments only under the query terms' bucket= directories, and
+    every one of those directories."""
+    import pyarrow.dataset as ds
+
+    from keywords4cv_spark.driver_queries import CFG as QCFG
+    from keywords4cv_spark.driver_queries import _index_for
+    from keywords4cv_spark.index.build import term_bucket
+    from keywords4cv_spark.query.fixtures import query_term_pairs
+    from keywords4cv_spark.query.wand import bm25_wand
+
+    index, icfg = _index_for(spark, sf_dir)
+    pairs = [(q, t) for q, t in query_term_pairs() if q in (0, 1)]
+    lut = index.lookup_terms([t for _, t in pairs])  # warm: dictionary read
+    want = {term_bucket(tid, icfg.n_term_buckets) for tid, _ in lut.values()}
+    assert 0 < len(want) < icfg.n_term_buckets
+    opened = []
+    real = ds.dataset
+
+    def spy(source, *a, **kw):
+        out = real(source, *a, **kw)
+        if isinstance(source, str):
+            opened.extend(out.files)
+        return out
+
+    monkeypatch.setattr(ds, "dataset", spy)
+    rows = bm25_wand(spark, index, QCFG, queries=pairs).collect()
+    assert rows
+    prefix = f"{index.path}/postings/bucket="
+    assert opened and all(f.startswith(prefix) for f in opened), opened
+    assert {int(f[len(prefix):].split("/")[0]) for f in opened} == want
 
 
 def test_jaccard_dag_tokenizes_corpus_once(spark, sf_dir):

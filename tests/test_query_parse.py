@@ -357,6 +357,14 @@ def test_parse_regexp():
     assert parse_query(r"/a\\(?=b)/") == []
     # inside a character class "(?" is two literals, not a group
     assert parse_query("/a[(?]b/") == [Clause("should", "regexp", ("a[(?]b",))]
+    # java.util.regex reads a nested class as a union and && as an
+    # intersection, RE2 reads both as literals: the clause drops
+    assert parse_query("/[a[b]]/") == []
+    assert parse_query("/[a&&b]/") == []
+    assert parse_query("/x[^a-z&&[^b]]y/") == []
+    # an escaped [ and a single & stay portable
+    assert parse_query(r"/a[\[]b/") == [Clause("should", "regexp", (r"a[\[]b",))]
+    assert parse_query("/[a&b]/") == [Clause("should", "regexp", ("[a&b]",))]
     # a URL-shaped bare token is NOT a regexp clause (no leading slash;
     # it parses as a field filter, Lucene's reading of `http:...`)
     assert parse_query("http://foo/bar")[0].kind == "filter"
@@ -411,6 +419,42 @@ def test_wand_fast_path_routing_and_identity(spark, sf_dir):
         assert wand_eligible_qids({9: parse_query(bad)}) == []
 
     _indexed_vs_oracle(spark, sf_dir, "wand_fast_path", qs)
+
+
+@pytest.mark.parametrize("gate", [0, 2**31 - 2], ids=["spark", "driver"])
+def test_queries_release_their_caches(spark, sf_dir, gate):
+    """A warm call of bm25_explain, query_string_search and
+    bm25_wand_topk leaves the JVM's persistent-RDD count where it found
+    it, on each side of the WAND driver gate."""
+    from dataclasses import replace
+
+    from keywords4cv_spark.driver_queries import (
+        CFG as QCFG,
+        _QS_QUERIES,
+        _index_for,
+        _pos_index_for,
+    )
+    from keywords4cv_spark.query.indexed import bm25_explain_indexed
+    from keywords4cv_spark.query.wand import bm25_wand
+
+    index, icfg = _index_for(spark, sf_dir)
+    pos_index = _pos_index_for(spark, sf_dir)
+    calls = {
+        "bm25_explain": lambda: bm25_explain_indexed(spark, index, QCFG),
+        "query_string_search": lambda: search_query_strings_indexed(
+            spark, index, pos_index, _QS_QUERIES,
+            replace(icfg, wand_driver_max_postings=gate),
+        ),
+        "bm25_wand_topk": lambda: bm25_wand(
+            spark, index, replace(QCFG, wand_driver_max_postings=gate)
+        ),
+    }
+    jsc = spark.sparkContext._jsc
+    for name, call in calls.items():
+        assert call().collect(), name  # warm
+        before = jsc.getPersistentRDDs().size()
+        call().collect()
+        assert jsc.getPersistentRDDs().size() == before, name
 
 
 def test_explain_query_strings_decomposes_scores(spark, sf_dir):
