@@ -20,12 +20,19 @@ DTM build) into a distributed Spark build:
    → parquet tables: dictionary / postings / docmeta / stats / _lineage
 
 Checkpoint-resume (north_rule): postings are built per term bucket
-(term_id % n_term_buckets), each bucket commits atomically
-(parquet dir rename-free: bucket subdir write + _lineage row with
-status=complete). A restarted build anti-joins completed buckets from
-_lineage and only runs the rest — mirroring the reference's
-verify-then-load checkpoint gate (keywords4cv.py:2821-2895,
-:3336-3339) with Iceberg-snapshot-style semantics at sandbox scale.
+(term_id % n_term_buckets), each bucket commits atomically (its own
+parquet dir with a _SUCCESS marker, then its _lineage row). A restarted
+build rewrites dictionary/docmeta/stats (vocabulary- and doc-count-
+sized) and skips only the committed buckets whose recorded input_hash
+equals the current one: the bucket's term-content hash XOR the index
+fingerprint (every docmeta row plus k1, b, block_size, n_salts,
+n_term_buckets, store_positions). A resume over a changed corpus,
+docmeta or config therefore rebuilds instead of mixing generations —
+mirroring the reference's verify-then-load checkpoint gate
+(keywords4cv.py:2821-2895, :3336-3339) with Iceberg-snapshot-style
+semantics at sandbox scale. ``write_index`` is this commit protocol,
+and the one writer of index tables: build_index and both compaction
+modes (index/compact.py) call it.
 
 Scale notes (1000-executor / 10^12-doc design point):
 - tf is computed row-locally inside the tokenize batch (no shuffle);
@@ -48,6 +55,7 @@ Scale notes (1000-executor / 10^12-doc design point):
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from dataclasses import dataclass
 
@@ -407,17 +415,22 @@ def assign_term_ids(agg: DataFrame, n_partitions: int | None = None) -> DataFram
 def build_dictionary(tf_df: DataFrame) -> DataFrame:
     """(term, term_id, df, cf, h). term_id = dense rank of term
     (deterministic). ``h`` is the per-term content fingerprint
-    bit_xor(xxhash64(term, doc_id, tf)) computed IN THE SAME shuffle as
-    df/cf — one extra agg expression, zero extra jobs. XOR is
+    bit_xor(xxhash64(term, doc_id, tf[, positions])) computed IN THE SAME
+    shuffle as df/cf — one extra agg expression, zero extra jobs. XOR is
     associative and commutative, so per-BUCKET input fingerprints are
     the XOR of ``h`` over the bucket's terms: a vocabulary-sized agg
     instead of the postings-sized second pass this replaces (the
     non-scaling ~fixed-cost stage in BENCH/BASELINE.md's r2 attribution
-    table)."""
+    table). Positions are hashed when the tf rows carry them: a
+    positional payload changes when a doc's words move even if its
+    (term, tf) rows do not."""
+    hashed = ["term", "doc_id", "tf"] + (
+        ["positions"] if "positions" in tf_df.columns else []
+    )
     agg = tf_df.groupBy("term").agg(
         F.count("*").alias("df"),
         F.sum("tf").alias("cf"),
-        F.expr("bit_xor(xxhash64(term, doc_id, tf))").alias("h"),
+        F.expr(f"bit_xor(xxhash64({', '.join(hashed)}))").alias("h"),
     )
     ids = assign_term_ids(agg)
     out = ids.select("term", "term_id", "df", "cf", "h")
@@ -426,48 +439,71 @@ def build_dictionary(tf_df: DataFrame) -> DataFrame:
     return out
 
 
-def corpus_stats(toks: DataFrame) -> DataFrame:
+def corpus_stats(toks: DataFrame, *extra: Column) -> DataFrame:
     # sum_dl kept exactly (long) so multi-generation stats combine without
-    # float error: avgdl_global = Σ sum_dl / Σ n_docs
+    # float error: avgdl_global = Σ sum_dl / Σ n_docs. ``extra`` aggregates
+    # ride the same pass.
     return toks.agg(
         F.count("*").cast("long").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
         F.sum("dl").cast("long").alias("sum_dl"),
+        *extra,
     )
 
 
-def _make_encoder(cfg: EngineConfig, n_docs: int, avgdl: float):
+def encode_step(cfg: EngineConfig, n_docs: int, avgdl: float):
+    """The one encode step of every index writer: a (term_id, segment)
+    group's frame (its first row gives term_id, segment and df) plus its
+    doc_id/tf/dl arrays and optional per-doc positions → that run's
+    posting blocks as POSTINGS_SCHEMA rows, scored against (n_docs,
+    avgdl). encode_postings sorts the run by doc_id (stable) and
+    reorders the positions with the same permutation."""
     k1, b, block_size = cfg.k1, cfg.b, cfg.block_size
 
-    def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        term_id = int(pdf["term_id"].iloc[0])
-        segment = int(pdf["segment"].iloc[0])
-        df_val = int(pdf["df"].iloc[0])
+    def encode(pdf: pd.DataFrame, doc_ids, tfs, dls, positions=None) -> pd.DataFrame:
         import numpy as np
 
+        df_val = int(pdf["df"].iloc[0])
         idf = float(np.log(1.0 + (n_docs - df_val + 0.5) / (df_val + 0.5)))
-        positions = (
-            [np.asarray(p, dtype=np.int64) for p in pdf["positions"]]
-            if "positions" in pdf.columns
-            else None
+        out = pd.DataFrame(
+            encode_postings(
+                doc_ids, tfs, dls, idf, k1, b, avgdl, block_size, positions=positions
+            )
         )
-        blocks = encode_postings(
-            pdf["doc_id"].to_numpy(),
-            pdf["tf"].to_numpy(),
-            pdf["dl"].to_numpy(),
-            idf,
-            k1,
-            b,
-            avgdl,
-            block_size,
-            positions=positions,
-        )
-        out = pd.DataFrame(blocks)
-        out.insert(0, "segment", segment)
-        out.insert(0, "term_id", term_id)
+        out.insert(0, "segment", int(pdf["segment"].iloc[0]))
+        out.insert(0, "term_id", int(pdf["term_id"].iloc[0]))
         return out
 
-    return encode_group
+    return encode
+
+
+def row_encoder(cfg: EngineConfig):
+    """Group-function factory of the build (and of the purging
+    compaction): (n_docs, avgdl) → the encoder of a (term_id, segment)
+    group of posting rows (doc_id, tf, dl[, positions])."""
+
+    def make(n_docs: int, avgdl: float):
+        encode = encode_step(cfg, n_docs, avgdl)
+
+        def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
+            import numpy as np
+
+            positions = (
+                [np.asarray(p, dtype=np.int64) for p in pdf["positions"]]
+                if "positions" in pdf.columns
+                else None
+            )
+            return encode(
+                pdf,
+                pdf["doc_id"].to_numpy(),
+                pdf["tf"].to_numpy(),
+                pdf["dl"].to_numpy(),
+                positions,
+            )
+
+        return encode_group
+
+    return make
 
 
 def build_index(
@@ -483,7 +519,6 @@ def build_index(
     from keywords4cv_spark.deploy import ensure_py_files
 
     ensure_py_files(spark)
-    os.makedirs(index_dir, exist_ok=True)
     docs = docs.withColumnRenamed(doc_id_col, "doc_id")
 
     if cfg.store_positions and cfg.ngram_hi != 1:
@@ -536,19 +571,14 @@ def build_index(
         .repartition(cfg.shuffle_partitions, "term_id", "segment")
         .persist()
     )
-    # order-independent content fingerprint per bucket. This is both the
-    # lineage input_hash of newly built buckets AND the verification gate
-    # on resume: a committed bucket is only skipped if the current input
-    # re-hashes to the value recorded when it was built (mirrors the
-    # reference's verify-then-load xxh3 checksum manifest,
-    # keywords4cv.py:2821-2895) — resuming over a CHANGED corpus rebuilds
-    # instead of silently mixing generations. The per-term hashes were
-    # computed inside the dictionary aggregation (build_dictionary), so
-    # this is a |V|-row agg — the postings-sized fingerprint pass that
-    # used to sit here was the one non-scaling stage in the r2 profile.
-    # (Hashing (term, doc, tf) rather than term_id loses nothing:
-    # term_id is the deterministic global term rank, itself a pure
-    # function of the hashed content.)
+    # order-independent content fingerprint per bucket: the term half of
+    # each bucket's lineage input_hash (write_index XORs in the index
+    # fingerprint). The per-term hashes were computed inside the
+    # dictionary aggregation (build_dictionary), so this is a |V|-row
+    # agg — the postings-sized fingerprint pass that used to sit here was
+    # the one non-scaling stage in the r2 profile. (Hashing (term, doc,
+    # tf) rather than term_id loses nothing: term_id is the deterministic
+    # global term rank, itself a pure function of the hashed content.)
     hashes: dict[int, int] = {
         int(r["b"]): int(r["h"])
         for r in dictionary.select(
@@ -558,151 +588,181 @@ def build_index(
         .agg(F.expr("bit_xor(h)").alias("h"))
         .collect()
     }
-    # whole-corpus fingerprint (XOR of bucket hashes): dictionary/docmeta/
-    # stats are only reused on resume if the corpus they were built from is
-    # byte-identical — term_id is a global term rank, so ANY vocabulary
-    # change shifts ids and must rewrite the meta tables too
-    total_hash = 0
-    for h in hashes.values():
-        total_hash ^= h
-    if not _meta_fresh(spark, index_dir, total_hash, resume):
-        # h is build-time scaffolding (bucket fingerprints), not index data
-        dictionary.drop("h").write.mode("overwrite").parquet(
-            f"{index_dir}/dictionary"
+    # docmeta = slim source scan ⋈ per-doc dl from the cached tf rows
+    # (dl rides on every tf row; docs whose kept-token list is empty
+    # have no tf rows and get dl = 0 — same value a tokenize pass
+    # would produce). The source scan prunes to 2-3 columns.
+    slim_cols = [F.col("doc_id")]
+    if url_col and url_col in docs.columns:
+        slim_cols.append(F.col(url_col).alias("url"))
+    slim = docs.select(*slim_cols, *(
+        [F.col("lang")] if cfg.lang_filter and "lang" in docs.columns else []
+    ))
+    if cfg.lang_filter and "lang" in docs.columns:
+        slim = slim.filter(F.col("lang") == cfg.lang_filter).drop("lang")
+    dls = tf_df.groupBy("doc_id").agg(F.max("dl").alias("dl"))
+    docmeta = slim.join(dls, "doc_id", "left").withColumn(
+        "dl", F.coalesce(F.col("dl"), F.lit(0)).cast("long")
+    )
+    try:
+        return write_index(
+            spark, index_dir, cfg, dictionary, docmeta, posted, row_encoder(cfg),
+            hashes=hashes, resume=resume,
         )
-        # docmeta = slim source scan ⋈ per-doc dl from the cached tf rows
-        # (dl rides on every tf row; docs whose kept-token list is empty
-        # have no tf rows and get dl = 0 — same value a tokenize pass
-        # would produce). The source scan prunes to 2-3 columns.
-        slim_cols = [F.col("doc_id")]
-        if url_col and url_col in docs.columns:
-            slim_cols.append(F.col(url_col).alias("url"))
-        slim = docs.select(*slim_cols, *(
-            [F.col("lang")] if cfg.lang_filter and "lang" in docs.columns else []
-        ))
-        if cfg.lang_filter and "lang" in docs.columns:
-            slim = slim.filter(F.col("lang") == cfg.lang_filter).drop("lang")
-        dls = tf_df.groupBy("doc_id").agg(F.max("dl").alias("dl"))
-        docmeta = slim.join(dls, "doc_id", "left").withColumn(
-            "dl", F.coalesce(F.col("dl"), F.lit(0)).cast("long")
-        )
+    finally:
+        tf_df.unpersist()
+
+
+def write_index(
+    spark: SparkSession,
+    index_dir: str,
+    cfg: EngineConfig,
+    dictionary: DataFrame,
+    docmeta: DataFrame,
+    posted: DataFrame,
+    make_group_fn,
+    hashes: dict[int, int] | None = None,
+    resume: bool = False,
+) -> IndexTables:
+    """The one index writer: commits ``dictionary/``, ``docmeta/``,
+    ``stats/`` and, per term bucket, ``postings/bucket=N`` with its
+    ``_lineage/bucket=N`` row. build_index and both modes of
+    compact_generations call it; no other code writes index tables.
+
+    - ``dictionary``: (term, term_id, df, cf, ...), written as those four
+      columns;
+    - ``docmeta``: (doc_id[, url], dl), one row per indexed doc;
+    - ``posted``: hash-partitioned on (term_id, segment), carrying a
+      ``bucket`` column (``term_bucket`` of term_id);
+    - ``make_group_fn(n_docs, avgdl)``: the per-(term_id, segment) group
+      function that turns a group of ``posted`` into POSTINGS_SCHEMA rows;
+    - ``hashes``: bucket → term-content hash (the build's; a compaction
+      has none and never resumes).
+
+    ``stats`` is one aggregate over the written docmeta; its
+    ``input_hash`` is the index fingerprint, bit_xor(xxhash64(row)) over
+    the docmeta rows XOR xxhash64 of the layout and scoring config.
+    Each bucket records ``hashes[bucket] ^ fingerprint``; with ``resume``
+    a bucket whose dir carries ``_SUCCESS`` and whose lineage row records
+    that value is kept, every other bucket is (re)written. Bucket dirs
+    at or beyond ``cfg.n_term_buckets`` (left by an index with more
+    buckets) are removed first. The persisted ``posted`` and
+    ``dictionary`` (with its staged relation) are unpersisted on return.
+    """
+    nb = cfg.n_term_buckets
+    hashes = hashes or {}
+    try:
+        os.makedirs(index_dir, exist_ok=True)
+        for table in ("postings", "_lineage"):
+            base = os.path.join(index_dir, table)
+            for d in os.listdir(base) if os.path.isdir(base) else ():
+                if d.startswith("bucket=") and int(d.split("=", 1)[1]) >= nb:
+                    shutil.rmtree(os.path.join(base, d))
+        dictionary.select("term", "term_id", "df", "cf").write.mode(
+            "overwrite"
+        ).parquet(f"{index_dir}/dictionary")
         docmeta.write.mode("overwrite").parquet(f"{index_dir}/docmeta")
-        # stats = aggregate of the (tiny) docmeta table just written
-        spark.read.parquet(f"{index_dir}/docmeta").agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-            F.sum("dl").cast("long").alias("sum_dl"),
-        ).withColumn("k1", F.lit(cfg.k1)).withColumn("b", F.lit(cfg.b)).withColumn(
-            "n_term_buckets", F.lit(cfg.n_term_buckets)
-        ).withColumn("store_positions", F.lit(cfg.store_positions)).withColumn(
-            "input_hash", F.lit(total_hash)
-        ).withColumn("layout", F.lit(DOC_BAND_LAYOUT)).write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/stats")
-    srow = spark.read.parquet(f"{index_dir}/stats").collect()[0]
-    if not srow["n_docs"]:
-        raise ValueError(
-            "build_index: corpus is empty after filtering "
-            f"(lang_filter={cfg.lang_filter!r}) — nothing to index"
+        written = spark.read.parquet(f"{index_dir}/docmeta")
+        config_hash = F.xxhash64(
+            *(F.lit(v) for v in (cfg.k1, cfg.b, cfg.block_size, cfg.n_salts, nb,
+                                 cfg.store_positions))
         )
-    n_docs, avgdl = int(srow["n_docs"]), float(srow["avgdl"])
-
-    committed = _committed_buckets(index_dir, cfg.n_term_buckets) if resume else set()
-    prev_hash: dict[int, int] = {}
-    if committed:
-        prev_hash = _lineage_hashes(spark, index_dir)
-    # a committed bucket is resumed ONLY if its recorded input_hash matches
-    # the current corpus; one with no lineage row (crash between the
-    # postings commit and the lineage commit) or a stale hash rebuilds —
-    # overwrite is idempotent
-    done = {b for b in committed if prev_hash.get(b) == hashes.get(b, 0)}
-    encoder = _make_encoder(cfg, n_docs, avgdl)
-    todo = [b for b in range(cfg.n_term_buckets) if b not in done]
-
-    def encode_bucket(bucket: int) -> None:
-        started = time.time()
-        # filter preserves the cached (term_id, segment) hash partitioning,
-        # so this groupBy plans with NO exchange (asserted in test_plans)
-        blocks = (
-            posted.filter(F.col("bucket") == bucket)
-            .groupBy("term_id", "segment")
-            .applyInPandas(encoder, POSTINGS_SCHEMA)
-        )
-        # the parquet _SUCCESS marker of this bucket dir IS the atomic
-        # per-partition commit (Iceberg-snapshot analog); resume keys on it.
-        # sortWithinPartitions gives each file tight term_id min/max stats →
-        # query-time rowgroup pruning on top of the bucket-dir pruning
-        blocks.sortWithinPartitions("term_id", "segment", "block_id").write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/postings/bucket={bucket}")
-        # read-back metrics + the bucket's own lineage commit. These extra
-        # per-bucket jobs run INSIDE the concurrent bucket threads, so their
-        # fixed scheduling costs overlap instead of adding a serial tail.
-        s = (
-            spark.read.parquet(f"{index_dir}/postings/bucket={bucket}")
-            .agg(
-                F.coalesce(F.sum("n"), F.lit(0)).alias("rows"),
-                F.count("*").alias("n_blocks"),
-                F.countDistinct("term_id").alias("n_terms"),
-                F.coalesce(F.sum(F.length("payload")), F.lit(0)).alias("payload_bytes"),
+        corpus_stats(
+            written, F.bit_xor(F.xxhash64(*written.columns)).alias("fp")
+        ).select(
+            "n_docs", "avgdl", "sum_dl",
+            F.lit(cfg.k1).alias("k1"),
+            F.lit(cfg.b).alias("b"),
+            F.lit(nb).alias("n_term_buckets"),
+            F.lit(cfg.store_positions).alias("store_positions"),
+            F.col("fp").bitwiseXOR(config_hash).alias("input_hash"),
+            F.lit(DOC_BAND_LAYOUT).alias("layout"),
+        ).write.mode("overwrite").parquet(f"{index_dir}/stats")
+        srow = spark.read.parquet(f"{index_dir}/stats").collect()[0]
+        if not srow["n_docs"]:
+            raise ValueError(
+                f"{index_dir}: corpus is empty after filtering "
+                f"(lang_filter={cfg.lang_filter!r}) — nothing to index"
             )
-            .collect()[0]
-        )
-        row = pd.DataFrame(
-            [
-                {
-                    "status": "complete",
-                    "rows": int(s["rows"]),
-                    "n_blocks": int(s["n_blocks"]),
-                    "n_terms": int(s["n_terms"]),
-                    "payload_bytes": int(s["payload_bytes"]),
-                    "input_hash": int(hashes.get(bucket, 0)),
-                    "started_ts": started,
-                    "finished_ts": time.time(),
-                }
-            ]
-        )
-        spark.createDataFrame(row, LINEAGE_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/_lineage/bucket={bucket}")
+        n_docs, avgdl = int(srow["n_docs"]), float(srow["avgdl"])
+        want = {b: hashes.get(b, 0) ^ int(srow["input_hash"]) for b in range(nb)}
 
-    if todo:
-        # submit ALL bucket jobs concurrently: each commits independently
-        # (per-partition checkpoint granularity) and their fixed per-job
-        # scheduling/worker-spin-up costs overlap instead of serializing
-        from concurrent.futures import ThreadPoolExecutor
+        committed = _committed_buckets(index_dir, nb) if resume else set()
+        # a committed bucket is kept ONLY if its recorded input_hash
+        # matches; one with no lineage row (crash between the postings
+        # commit and the lineage commit) or a stale hash is rewritten —
+        # overwrite is idempotent
+        prev = _lineage_hashes(spark, index_dir) if committed else {}
+        todo = [b for b in range(nb) if not (b in committed and prev.get(b) == want[b])]
+        group_fn = make_group_fn(n_docs, avgdl)
 
-        with ThreadPoolExecutor(max_workers=min(8, len(todo))) as ex:
-            list(ex.map(encode_bucket, todo))
+        def write_bucket(bucket: int) -> None:
+            started = time.time()
+            # filter preserves posted's (term_id, segment) hash
+            # partitioning, so this groupBy plans with NO exchange
+            # (asserted in test_plans)
+            blocks = (
+                posted.filter(F.col("bucket") == bucket)
+                .groupBy("term_id", "segment")
+                .applyInPandas(group_fn, POSTINGS_SCHEMA)
+            )
+            # the parquet _SUCCESS marker of this bucket dir IS the atomic
+            # per-partition commit (Iceberg-snapshot analog); resume keys
+            # on it. sortWithinPartitions gives each file tight term_id
+            # min/max stats → query-time rowgroup pruning on top of the
+            # bucket-dir pruning
+            blocks.sortWithinPartitions("term_id", "segment", "block_id").write.mode(
+                "overwrite"
+            ).parquet(f"{index_dir}/postings/bucket={bucket}")
+            # read-back metrics + the bucket's own lineage commit. These
+            # extra per-bucket jobs run INSIDE the concurrent bucket
+            # threads, so their fixed scheduling costs overlap instead of
+            # adding a serial tail.
+            s = (
+                spark.read.parquet(f"{index_dir}/postings/bucket={bucket}")
+                .agg(
+                    F.coalesce(F.sum("n"), F.lit(0)).alias("rows"),
+                    F.count("*").alias("n_blocks"),
+                    F.countDistinct("term_id").alias("n_terms"),
+                    F.coalesce(F.sum(F.length("payload")), F.lit(0)).alias(
+                        "payload_bytes"
+                    ),
+                )
+                .collect()[0]
+            )
+            row = pd.DataFrame(
+                [
+                    {
+                        "status": "complete",
+                        "rows": int(s["rows"]),
+                        "n_blocks": int(s["n_blocks"]),
+                        "n_terms": int(s["n_terms"]),
+                        "payload_bytes": int(s["payload_bytes"]),
+                        "input_hash": want[bucket],
+                        "started_ts": started,
+                        "finished_ts": time.time(),
+                    }
+                ]
+            )
+            spark.createDataFrame(row, LINEAGE_SCHEMA).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(f"{index_dir}/_lineage/bucket={bucket}")
 
-    tf_df.unpersist()
-    staged = getattr(dictionary, "_k4cv_staged", None)
-    if staged is not None:
-        staged.unpersist()
-    dictionary.unpersist()
-    posted.unpersist()
+        if todo:
+            # submit ALL bucket jobs concurrently: each commits
+            # independently (per-partition checkpoint granularity) and
+            # their fixed per-job scheduling/worker-spin-up costs overlap
+            # instead of serializing
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=min(8, len(todo))) as ex:
+                list(ex.map(write_bucket, todo))
+    finally:
+        staged = getattr(dictionary, "_k4cv_staged", None)
+        for rel in (posted, dictionary, staged):
+            if rel is not None:
+                rel.unpersist()
     return load_index(spark, index_dir)
-
-
-def _complete(index_dir: str, table: str) -> bool:
-    return os.path.exists(os.path.join(index_dir, table, "_SUCCESS"))
-
-
-def _meta_fresh(
-    spark: SparkSession, index_dir: str, total_hash: int, resume: bool
-) -> bool:
-    """True iff the committed dictionary/docmeta/stats tables were built
-    from a corpus with the same whole-corpus fingerprint."""
-    if not resume:
-        return False
-    for table in ("dictionary", "docmeta", "stats"):
-        if not _complete(index_dir, table):
-            return False
-    stats = spark.read.parquet(f"{index_dir}/stats")
-    if "input_hash" not in stats.columns or "layout" not in stats.columns:
-        return False
-    row = stats.select("input_hash", "layout").collect()[0]
-    return int(row["input_hash"]) == total_hash and row["layout"] == DOC_BAND_LAYOUT
 
 
 def _committed_buckets(index_dir: str, n_buckets: int) -> set[int]:

@@ -54,14 +54,3 @@ def tokens_sql(
         f"t -> {pred}), t -> {lemma})"
     )
 
-
-def bm25_idf_sql(df_col: str, n_docs: str) -> str:
-    """Lucene-style BM25 idf: ln(1 + (N - df + 0.5)/(df + 0.5))."""
-    return f"ln(1.0 + ({n_docs} - {df_col} + 0.5) / ({df_col} + 0.5))"
-
-
-def bm25_tf_norm_sql(tf_col: str, dl_col: str, avgdl: str, k1: float, b: float) -> str:
-    return (
-        f"({tf_col} * ({k1} + 1.0)) / "
-        f"({tf_col} + {k1} * (1.0 - {b} + {b} * {dl_col} / {avgdl}))"
-    )

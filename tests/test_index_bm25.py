@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import math
+import os
 import shutil
+from collections import Counter
 from dataclasses import replace
 
 import numpy as np
@@ -299,6 +301,113 @@ def test_resume_rebuilds_on_corpus_change(spark, docs, tmp_path):
     assert resumed.stats_row()["n_docs"] == fresh.stats_row()["n_docs"]
 
 
+_POSTINGS_COLS = [
+    "term_id", "segment", "block_id", "first_doc", "last_doc",
+    "n", "max_tf", "max_score", "payload",
+]
+_LINEAGE_COLS = ["bucket", "rows", "n_blocks", "n_terms", "payload_bytes"]
+
+
+def _rows(df, cols=None):
+    """Multiset of a table's rows over ``cols`` (default: all columns)."""
+    return Counter(
+        tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+        for r in df.select(*(cols or df.columns)).collect()
+    )
+
+
+def _assert_same_index(got, want):
+    """Postings (all 9 columns), dictionary, docmeta, stats (every field)
+    and lineage (counts and input_hash) of two indexes are equal."""
+    for name, cols in (
+        ("postings", _POSTINGS_COLS),
+        ("dictionary", ["term", "term_id", "df", "cf"]),
+        ("docmeta", None),
+        ("stats", None),
+        ("lineage", _LINEAGE_COLS + ["input_hash"]),
+    ):
+        g, w = getattr(got, name), getattr(want, name)
+        assert cols or g.columns == w.columns, (name, g.columns, w.columns)
+        assert _rows(g, cols) == _rows(w, cols), name
+
+
+def _tokenless_doc(docs):
+    """docs plus one en doc whose text keeps no token (dl = 0)."""
+    extra = docs.sparkSession.createDataFrame(
+        [(10_000, "a", "en", "srcX", 1)], docs.schema
+    )
+    return docs.unionByName(extra)
+
+
+# the index every rebuild case starts from: 4 term buckets, 4 doc bands
+_WIDE = EngineConfig(n_term_buckets=4, n_salts=4, shuffle_partitions=8)
+
+_RESUME_CASES = {
+    # every field of the resume fingerprint's config half changes at once
+    "config": (lambda d: d, EngineConfig(
+        n_term_buckets=2, n_salts=2, shuffle_partitions=8, store_positions=True,
+        k1=2.0,
+    ), True),
+    "tokenless_doc": (_tokenless_doc, None, True),
+    "url_change": (
+        lambda d: d.withColumn("source", F.concat("source", F.lit("/v2"))), None, True,
+    ),
+    # a non-resumed rebuild with fewer buckets over a wider index
+    "fewer_buckets_no_resume": (lambda d: d, CFG, False),
+}
+
+
+@pytest.fixture(scope="module")
+def wide_index_dir(spark, docs, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("wide") / "idx")
+    build_index(spark, docs, d, _WIDE, url_col="source")
+    return d
+
+
+@pytest.mark.parametrize("case", list(_RESUME_CASES))
+def test_rebuild_over_index_equals_fresh_build(spark, docs, wide_index_dir, tmp_path, case):
+    """A build into a dir holding an older index equals a fresh build,
+    whatever changed: the config (buckets, bands, positions, k1), a
+    tokenless doc (n_docs, avgdl), every url (docmeta), or — without
+    resume — fewer buckets (no stale bucket=N dirs survive)."""
+    change, cfg, resume = _RESUME_CASES[case]
+    cfg = cfg or _WIDE
+    d = str(tmp_path / "over")
+    shutil.copytree(wide_index_dir, d)
+    changed = change(docs)
+    got = build_index(spark, changed, d, cfg, resume=resume, url_col="source")
+    want = build_index(spark, changed, str(tmp_path / "fresh"), cfg, url_col="source")
+    _assert_same_index(got, want)
+    for table in ("postings", "_lineage"):
+        assert sorted(os.listdir(f"{d}/{table}")) == sorted(
+            os.listdir(f"{tmp_path}/fresh/{table}")
+        ), table
+
+
+def test_resume_after_half_written_bucket(spark, docs, index, tmp_path):
+    """A bucket dir left half-written by a killed process (part files and
+    a _temporary dir, no _SUCCESS; its old lineage row still committed)
+    is rewritten on resume; the other bucket is kept (same finished_ts)
+    and the result equals a fresh build."""
+    d = str(tmp_path / "killed")
+    build_index(spark, docs, d, CFG, url_col="source")
+    ts_before = {
+        int(r["bucket"]): float(r["finished_ts"])
+        for r in load_index(spark, d).lineage.collect()
+    }
+    os.remove(f"{d}/postings/bucket=1/_SUCCESS")
+    os.makedirs(f"{d}/postings/bucket=1/_temporary/0")
+    with open(f"{d}/postings/bucket=1/part-99999-killed.snappy.parquet", "wb") as f:
+        f.write(b"PAR1 truncated by a kill")
+    resumed = build_index(spark, docs, d, CFG, resume=True, url_col="source")
+    ts_after = {
+        int(r["bucket"]): float(r["finished_ts"]) for r in resumed.lineage.collect()
+    }
+    assert ts_after[0] == ts_before[0], "the committed bucket was rewritten"
+    assert ts_after[1] != ts_before[1]
+    _assert_same_index(resumed, index)
+
+
 def test_empty_corpus_raises_cleanly(spark, docs, tmp_path):
     with pytest.raises(ValueError, match="corpus is empty"):
         build_index(
@@ -334,6 +443,7 @@ def test_compaction_equals_full_rebuild(spark, docs, tmp_path):
     db = full.dictionary.select("term", "term_id", "df", "cf")
     assert da.exceptAll(db).count() == 0 and db.exceptAll(da).count() == 0
     assert compacted.stats_row()["n_docs"] == full.stats_row()["n_docs"]
+    assert _rows(compacted.lineage, _LINEAGE_COLS) == _rows(full.lineage, _LINEAGE_COLS)
     # and the compacted index answers queries rank-identically
     brute = _collect(bm25_brute_force(spark, docs, CFG))
     wand = _collect(bm25_wand(spark, compacted, CFG))
@@ -571,6 +681,7 @@ def test_recrawl_upsert_and_purging_compaction(spark, docs, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     assert purged.stats_row()["n_docs"] == fresh.stats_row()["n_docs"]
     assert purged.stats_row()["sum_dl"] == fresh.stats_row()["sum_dl"]
+    assert _rows(purged.lineage, _LINEAGE_COLS) == _rows(fresh.lineage, _LINEAGE_COLS)
     brute = _collect(bm25_brute_force(spark, live, CFG))
     wand = _both_sides(CFG, lambda c: bm25_wand(spark, purged, c))
     assert set(brute) == set(wand)
