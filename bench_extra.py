@@ -4,7 +4,10 @@
 For each registry query: wall seconds per repeat AND the number of
 Spark jobs the query submitted (job-group bookkeeping via the status
 tracker) — the local-mode scheduling floor is per job, so job count is
-the first thing to shrink for sub-10s queries (guide §1.5/§7.1).
+the first thing to shrink for sub-10s queries (guide §1.5/§7.1). ``rdds``
+is the JVM's persistent-RDD count after the last repeat: the leak
+column (a registry call releases what the previous one staged, so it
+should not climb from query to query beyond the cached indexes).
 
 Usage:
     python bench_extra.py                 # all queries, 2 reps
@@ -21,7 +24,7 @@ import os
 import sys
 import time
 
-from keywords4cv_spark.session import get_spark, host_cpus
+from keywords4cv_spark.session import get_spark, host_cpus, persistent_rdds
 
 
 def main() -> None:
@@ -51,7 +54,7 @@ def main() -> None:
             sc.setLocalProperty("spark.jobGroup.id", None)
             times.append(round(dt, 3))
             jobs.append(len(st.getJobIdsForGroup(grp)))
-        out[name] = {"t": times, "jobs": jobs}
+        out[name] = {"t": times, "jobs": jobs, "rdds": len(persistent_rdds(spark))}
         print(json.dumps({name: out[name]}), flush=True)
     total_min = sum(min(v["t"]) for v in out.values())
     print(

@@ -93,7 +93,7 @@ def postings_skew(spark, sf_dir: str) -> dict:
 
     from keywords4cv_spark.driver_queries import _index_for
 
-    index, _cfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     rows = (
         index.postings.groupBy("bucket", "segment")
         .agg(F.count("*").alias("blocks"), F.sum("n").alias("postings"))

@@ -9,13 +9,21 @@ Ordering is irrelevant to the comparator, but LIMIT/top-k queries pin
 deterministic tie-breaks on BOTH sides so the selected row SET is
 identical.
 
-Persist lifecycle: several query functions persist() intermediates
-(staged tokenized relations, band minima, centroids) and deliberately
-do NOT unpersist — the returned DataFrame still references the cached
-branch lazily, the driver executes queries sequentially in one session
-at gate scale, and Spark's LRU block manager reclaims cold entries. At
-service scale the same staging points would be scratch TABLES with
-explicit lifecycle, not executor memory.
+Staging lifecycle: a query may stage intermediates (persist(),
+localCheckpoint(): tokenized relations, band minima, candidate sets)
+that the DataFrame it returns still reads lazily. The ``register``
+wrapper owns that staging. When an outermost registry call starts, it
+unpersists every persistent RDD created since the previous outermost
+call started, except those the keyed cache (``_cached``) owns. So a
+returned DataFrame stays valid until the next registry call: consume it
+(collect, count, toPandas, write) first. Anything a caller stages
+between two registry calls is released by the second one too. A call
+made from inside another entry (top_terms calls term_dictionary) is
+nested and releases nothing. Built indexes, generation families,
+trained centroids and the corpus relations several entries share (term
+frequencies, MinHash band minima) live in the keyed cache for the life
+of the process; ``release_caches`` frees them and every other
+persistent RDD.
 
 Fixture oracles (canonical_clusters) are materialized for the driver's
 fixed sf=0.01 gate; the Spark query runs at any sf, the oracle is only
@@ -34,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from keywords4cv_spark.config import DEFAULT_CONFIG, EngineConfig
-from keywords4cv_spark.session import local_rows
+from keywords4cv_spark.session import local_rows, next_rdd_id, persistent_rdds
 from keywords4cv_spark.deploy import ensure_py_files
 from keywords4cv_spark.index.build import (
     build_index,
@@ -42,6 +50,9 @@ from keywords4cv_spark.index.build import (
     term_frequencies,
     tokenized_docs,
 )
+from keywords4cv_spark.index.compact import compact_generations
+from keywords4cv_spark.index.manifest import append_generation, load_generations
+from keywords4cv_spark.index.upsert import superseded_docs
 from keywords4cv_spark.oracle import tokens_sql
 from keywords4cv_spark.query.bm25 import bm25_brute_force
 from keywords4cv_spark.query.fixtures import QUERY_SET, TOP_K, query_term_pairs
@@ -59,11 +70,33 @@ CFG = DEFAULT_CONFIG
 from keywords4cv_spark import __version__ as _ENGINE_V  # noqa: E402
 
 
+_depth = 0  # registry-call nesting depth
+_since: int | None = None  # first RDD id of the last outermost call
+
+
+def _release_staged(spark: SparkSession) -> None:
+    """Unpersist what the previous outermost call staged (and anything
+    staged after it), keeping the keyed cache's RDDs."""
+    global _since
+    if _since is not None:
+        for rid, rdd in persistent_rdds(spark, since=_since).items():
+            if rid not in _OWNED:
+                rdd.unpersist(False)
+    _since = next_rdd_id(spark)
+
+
 def register(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            ensure_py_files(spark)  # executors must import this package
-            return fn(spark, sf_dir)
+            global _depth
+            if _depth == 0:
+                _release_staged(spark)
+            _depth += 1
+            try:
+                ensure_py_files(spark)  # executors must import this package
+                return fn(spark, sf_dir)
+            finally:
+                _depth -= 1
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
@@ -75,8 +108,66 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
+# ---------------------------------------------------------------------------
+# the keyed cache: indexes, generation families, centroids and shared
+# corpus relations, built once per (kind, sf_dir) per process
+# ---------------------------------------------------------------------------
+
+_CACHE: dict[tuple[str, str], object] = {}
+_OWNED: set[int] = set()  # persistent RDD ids the cached values hold
+
+# the registry's three index layouts. INDEX_CFG is NOT the EngineConfig
+# default (8/8): the index_segment_stats oracle hardcodes its 4 buckets
+# and 4 bands and the default block_size 128
+INDEX_CFG = EngineConfig(n_term_buckets=4, n_salts=4)
+POS_CFG = EngineConfig(n_term_buckets=4, n_salts=4, store_positions=True)
+GEN_CFG = EngineConfig(n_term_buckets=2, n_salts=4)
+
+
+def _scratch_dir(kind: str, sf_dir: str) -> str:
+    """<tmp>/k4cv_index[_<kind>]_<engine version>/<sf_dir tag>: the
+    version tag keeps a newer codec from reading an older layout."""
+    family = "k4cv_index" if kind == "index" else f"k4cv_index_{kind}"
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"{family}_{_ENGINE_V}",
+        sf_dir.strip("/").replace("/", "_"),
+    )
+
+
+def _cached(kind: str, sf_dir: str, build: Callable[[str], object]):
+    """``build(_scratch_dir(kind, sf_dir))`` once per (kind, sf_dir).
+    Every persistent RDD the build leaves behind (the k-means centroid
+    checkpoints) is cache-owned: per-call release skips it."""
+    key = (kind, sf_dir)
+    if key not in _CACHE:
+        spark = SparkSession.active()
+        lo = next_rdd_id(spark)
+        _CACHE[key] = build(_scratch_dir(kind, sf_dir))
+        _OWNED.update(persistent_rdds(spark, since=lo))
+    return _CACHE[key]
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+def _materialized(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and fill its blocks now. Built inside ``_cached``,
+    a corpus relation several entries read is computed once: every
+    later plan that contains it (Spark's cache plan-matching) reads the
+    blocks, and they are cache-owned because they exist before the
+    build returns."""
+    df = df.persist()
+    df.count()
+    return df
+
+
+def _corpus_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, term, tf, dl) over the sf_dir corpus."""
+    return _cached("corpus_tf", sf_dir, lambda _: _materialized(
+        term_frequencies(tokenized_docs(_docs(spark, sf_dir), CFG))
+    ))
 
 
 # ---------------------------------------------------------------------------
@@ -159,27 +250,16 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_brute_force(spark, _docs(spark, sf_dir), CFG, TOP_K)
 
 
-_INDEX_CACHE: dict[str, object] = {}
-
-
 def _index_for(spark: SparkSession, sf_dir: str):
-    if sf_dir not in _INDEX_CACHE:
-        base = os.path.join(
-            tempfile.gettempdir(), f"k4cv_index_{_ENGINE_V}", sf_dir.strip("/").replace("/", "_")
-        )
-        cfg = EngineConfig(
-            n_term_buckets=4,
-            n_salts=4,
-        )
-        docs = _docs(spark, sf_dir)
-        _INDEX_CACHE[sf_dir] = (build_index(spark, docs, base, cfg, url_col="source"), cfg)
-    return _INDEX_CACHE[sf_dir]
+    return _cached("index", sf_dir, lambda base: build_index(
+        spark, _docs(spark, sf_dir), base, INDEX_CFG, url_col="source"
+    ))
 
 
 @register("bm25_wand_topk", _bm25_oracle(CFG.k1, CFG.b, TOP_K))
 def q_bm25_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-identical to bm25_topk by construction — shares its oracle."""
-    index, cfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     return bm25_wand(spark, index, CFG, TOP_K)
 
 
@@ -197,7 +277,7 @@ def q_bm25_page2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     deep-paging path and keeps its rank-identity pin in
     tests/test_index_bm25.py. Queries without a full first page have no
     page 2 under either formulation."""
-    index, _cfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     both_pages = bm25_wand(spark, index, CFG, 2 * TOP_K)
     return both_pages.filter(F.col("rank") > TOP_K).select(
         "query_id",
@@ -217,9 +297,8 @@ def q_bm25_page2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"WITH {_TF_CTES} SELECT term, df, cf FROM dict",
 )
 def q_term_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = tokenized_docs(_docs(spark, sf_dir), CFG)
     return (
-        term_frequencies(toks)
+        _corpus_tf(spark, sf_dir)
         .groupBy("term")
         .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
     )
@@ -326,6 +405,7 @@ SELECT term, round(sum(score), 6) AS total_score,
 FROM scored GROUP BY term""",
 )
 def q_keyword_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _corpus_tf(spark, sf_dir)  # scored_postings' tf relation reads it
     return scoring.keyword_summary(spark, _docs(spark, sf_dir), CFG)
 
 
@@ -351,7 +431,7 @@ def q_fuzzy_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary from the committed index's dictionary — its term set is
     # exactly the distinct corpus tokens (same tokenizer, same lang
     # filter), so the tokenize + corpus-wide distinct pass disappears
-    index, _icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     return scoring.fuzzy_resolve(
         spark,
         _docs(spark, sf_dir),
@@ -466,10 +546,7 @@ GROUP BY t.term""",
 )
 def q_whitelist_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: broadcast left-semi join of corpus terms vs the whitelist."""
-    from keywords4cv_spark.index.build import term_frequencies, tokenized_docs
-
-    toks = tokenized_docs(_docs(spark, sf_dir), CFG)
-    tf_df = term_frequencies(toks)
+    tf_df = _corpus_tf(spark, sf_dir)
     skills = local_rows(spark, vocab.SKILLS, "category string, skill string")
     return (
         tf_df.join(
@@ -639,6 +716,42 @@ def q_events_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return relational.events_sessionized(spark, sf_dir)
 
 
+def _stream_slot(
+    spark: SparkSession, sf_dir: str, table: str, kind: str
+) -> tuple[str, str, str]:
+    """(stage dir, memory-sink name, checkpoint dir) for a streaming
+    entry over ``<sf_dir>/<table>.parquet``, deterministic per (engine
+    version, sf_dir). The file-stream source reads directories, so the
+    stage dir holds one symlink to the table. The previous run's
+    checkpoint and sink view are dropped first: repeated runs reuse one
+    /tmp slot instead of leaking a checkpoint dir and a temp view."""
+    import shutil
+
+    stage = os.path.join(
+        tempfile.gettempdir(),
+        f"k4cv_{table}_stream_" + sf_dir.strip("/").replace("/", "_"),
+    )
+    os.makedirs(stage, exist_ok=True)
+    link = os.path.join(stage, f"{table}.parquet")
+    target = os.path.abspath(f"{sf_dir}/{table}.parquet")
+    # lexists: a BROKEN symlink fails plain exists() and then symlink()
+    # raises; also tolerate a concurrent creator
+    if os.path.lexists(link) and os.path.realpath(link) != target:
+        os.remove(link)
+    if not os.path.lexists(link):
+        try:
+            os.symlink(target, link)
+        except FileExistsError:
+            pass
+    qname = f"{kind}_stream_" + re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.strip("/"))
+    ckpt = os.path.join(
+        tempfile.gettempdir(), f"k4cv_{kind}_ckpt_{_ENGINE_V}_{qname}"
+    )
+    shutil.rmtree(ckpt, ignore_errors=True)
+    spark.catalog.dropTempView(qname)
+    return stage, qname, ckpt
+
+
 @register(
     "stream_sessions_closed",
     """
@@ -676,30 +789,10 @@ def q_stream_sessions_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow file stream and return the CLOSED sessions (each
     user's final session stays open in state — the oracle drops each
     user's max session_id accordingly)."""
-    import uuid
-
     from keywords4cv_spark.streaming.incremental import sessionize_stream
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    qname = f"sess_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"k4cv_sess_ckpt_{qname}")
-    # the file-stream source wants a DIRECTORY: stage a symlink dir
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "k4cv_events_stream_" + sf_dir.strip("/").replace("/", "_"),
-    )
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    target = os.path.abspath(f"{sf_dir}/events.parquet")
-    # lexists: a BROKEN symlink fails plain exists() and then symlink()
-    # raises; also tolerate a concurrent creator
-    if os.path.lexists(link) and os.path.realpath(link) != target:
-        os.remove(link)
-    if not os.path.lexists(link):
-        try:
-            os.symlink(target, link)
-        except FileExistsError:
-            pass
+    stage, qname, ckpt = _stream_slot(spark, sf_dir, "events", "sess")
     stream = spark.readStream.schema(events.schema).parquet(stage)
     q = (
         sessionize_stream(stream)
@@ -787,33 +880,9 @@ def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse AS documents arrive, not in a nightly batch.
 
     The checkpoint path and memory-sink name are deterministic per
-    (engine version, sf_dir) — the checkpoint is recreated fresh each
-    invocation and the previous memory table dropped, so repeated gate
-    runs reuse one /tmp slot instead of leaking a uuid-named dir plus a
-    registered temp view per call (ADVICE r3)."""
-    import shutil
-
+    (engine version, sf_dir) (``_stream_slot``)."""
     docs = _docs(spark, sf_dir)
-    qname = "dedup_stream_" + re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.strip("/"))
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"k4cv_dedup_ckpt_{_ENGINE_V}_{qname}"
-    )
-    shutil.rmtree(ckpt, ignore_errors=True)
-    spark.catalog.dropTempView(qname)
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "k4cv_docs_stream_" + sf_dir.strip("/").replace("/", "_"),
-    )
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "documents.parquet")
-    target = os.path.abspath(f"{sf_dir}/documents.parquet")
-    if os.path.lexists(link) and os.path.realpath(link) != target:
-        os.remove(link)
-    if not os.path.lexists(link):
-        try:
-            os.symlink(target, link)
-        except FileExistsError:
-            pass
+    stage, qname, ckpt = _stream_slot(spark, sf_dir, "documents", "dedup")
     stream = spark.readStream.schema(docs.schema).parquet(stage)
     q = (
         dedup.exact_duplicates(stream)
@@ -829,12 +898,18 @@ def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(qname)
 
 
+def _band_minima(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _cached("band_minima", sf_dir, lambda _: _materialized(
+        dedup.minhash_band_minima(_docs(spark, sf_dir), CFG)
+    ))
+
+
 @register(
     "minhash_band_minima",
     f"WITH {_SHINGLE_CTES} SELECT doc_id, band, minhash FROM bands",
 )
 def q_minhash_band_minima(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.minhash_band_minima(_docs(spark, sf_dir), CFG)
+    return _band_minima(spark, sf_dir)
 
 
 @register(
@@ -846,7 +921,7 @@ FROM bands a JOIN bands b
   ON a.band = b.band AND a.minhash = b.minhash AND a.doc_id < b.doc_id""",
 )
 def q_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.lsh_candidate_pairs(_docs(spark, sf_dir), CFG)
+    return dedup.pairs_from_band_minima(_band_minima(spark, sf_dir))
 
 
 _JACCARD_CTES = f"""
@@ -1575,7 +1650,7 @@ def q_bm25_synonym_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     union then rides the existing (query, band) WAND shuffle with
     per-term bounds scaled by w, so pruning stays exact and nothing new
     scales with the corpus."""
-    index, _icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     return bm25_wand(
         spark, index, CFG, TOP_K,
         queries=expansion.expand_query_pairs(_syn_base_pairs()),
@@ -1654,7 +1729,7 @@ def q_extraction_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary from the committed index's dictionary (== the distinct
     # corpus tokens — same tokenizer, same lang filter), skipping the
     # tokenize + corpus-wide distinct pass
-    index, _icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     return evaluation.extraction_metrics(
         spark, _docs(spark, sf_dir), CFG, terms=index.dictionary.select("term")
     )
@@ -2077,9 +2152,7 @@ def q_boolean_and_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive (AND) retrieval: docs containing EVERY query term —
     the postings-intersection expressed as a count-match groupBy
     (each list is hit once per distinct (doc, term))."""
-    from keywords4cv_spark.index.build import term_frequencies, tokenized_docs
-
-    tf_df = term_frequencies(tokenized_docs(_docs(spark, sf_dir), CFG))
+    tf_df = _corpus_tf(spark, sf_dir)
     qdf = local_rows(spark, _and_pairs(), "query_id long, term string")
     nq = qdf.groupBy("query_id").agg(F.count("*").alias("n_terms"))
     hits = (
@@ -2295,9 +2368,7 @@ def q_boolean_or_not_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANY should-term and NO must-not-term — the postings-union +
     exclusion-anti-join complement of boolean_and_query. The exclusion
     is a broadcast-keyed LEFT ANTI join over (query, doc)."""
-    from keywords4cv_spark.index.build import term_frequencies, tokenized_docs
-
-    tf_df = term_frequencies(tokenized_docs(_docs(spark, sf_dir), CFG)).persist()
+    tf_df = _corpus_tf(spark, sf_dir)
     sq = local_rows(
         spark,
         [(qid, t) for qid, should, _ in _OR_NOT_QUERIES for t in should],
@@ -2518,8 +2589,6 @@ def _kmeans_ctes(nlist: int, n_iter: int) -> tuple[str, str]:
 
 _KM_CTES, _KM_FINAL = _kmeans_ctes(_IVF_NLIST, similarity.KMEANS_ITER)
 
-_IVF_CENTS_CACHE: dict[str, DataFrame] = {}
-
 
 @register(
     "ann_ivf_topk",
@@ -2573,18 +2642,13 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and cached — the production IVF lifecycle (training is index-build
     time; queries only pay the nprobe-list fine search)."""
     emb = _emb(spark, sf_dir)
-    if sf_dir not in _IVF_CENTS_CACHE:
-        # train_kmeans returns an eagerly localCheckpointed frame — no
-        # extra persist (the r3 .persist() here was never released and
-        # accumulated executor storage across a long session, ADVICE r3)
-        _IVF_CENTS_CACHE[sf_dir] = similarity.train_kmeans(emb, _IVF_NLIST)
+    # train_kmeans returns an eagerly localCheckpointed frame: its
+    # checkpoints are cache-owned
+    cents = _cached(
+        "ivf_cents", sf_dir, lambda _: similarity.train_kmeans(emb, _IVF_NLIST)
+    )
     return similarity.ivf_topk(
-        spark,
-        emb,
-        _PROBE_IDS,
-        k=5,
-        nprobe=_IVF_NPROBE,
-        cents=_IVF_CENTS_CACHE[sf_dir],
+        spark, emb, _PROBE_IDS, k=5, nprobe=_IVF_NPROBE, cents=cents
     )
 
 
@@ -2644,23 +2708,11 @@ def q_segment_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from keywords4cv_spark.query.phrase import proximity_search  # noqa: E402
 
-_POS_INDEX_CACHE: dict[str, object] = {}
-
 
 def _pos_index_for(spark: SparkSession, sf_dir: str):
-    if sf_dir not in _POS_INDEX_CACHE:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            f"k4cv_index_pos_{_ENGINE_V}",
-            sf_dir.strip("/").replace("/", "_"),
-        )
-        cfg = EngineConfig(
-            n_term_buckets=4, n_salts=4, store_positions=True
-        )
-        _POS_INDEX_CACHE[sf_dir] = build_index(
-            spark, _docs(spark, sf_dir), base, cfg, url_col="source"
-        )
-    return _POS_INDEX_CACHE[sf_dir]
+    return _cached("pos", sf_dir, lambda base: build_index(
+        spark, _docs(spark, sf_dir), base, POS_CFG, url_col="source"
+    ))
 
 
 @register("phrase_query_indexed", ORACLES["phrase_query"])
@@ -2701,7 +2753,7 @@ def q_prefix_query(
     postings pass — and ``max_expansions`` caps the expanded set per
     query (lexicographically-first terms, Lucene maxExpansions
     semantics), so no plan node ever grows with the match count."""
-    index, _icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     pdf = local_rows(spark, _PREFIX_QUERIES, "query_id long, prefix string")
     terms = index.dictionary.select("term", "term_id")
     expanded = terms.join(
@@ -2890,7 +2942,22 @@ def q_snippet_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_POS_COMPACT_CACHE: dict[str, object] = {}
+def _parity_generations(
+    spark: SparkSession, sf_dir: str, base: str, cfg: EngineConfig
+) -> list:
+    """Two disjoint index generations of the sf_dir corpus (doc_id
+    parity split), built under ``base``/gen0 and ``base``/gen1."""
+    docs = _docs(spark, sf_dir)
+    return [
+        build_index(
+            spark,
+            docs.filter(F.col("doc_id") % 2 == parity),
+            f"{base}/gen{parity}",
+            cfg,
+            url_col="source",
+        )
+        for parity in (0, 1)
+    ]
 
 
 @register("phrase_query_compacted", ORACLES["phrase_query"])
@@ -2900,30 +2967,13 @@ def q_phrase_query_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded, carried through the doc sort, re-encoded), then answer the
     phrase queries from the compacted index against the text-scan
     oracle — proof that compaction preserves phrase semantics."""
-    from keywords4cv_spark.index.compact import compact_generations
-
-    if sf_dir not in _POS_COMPACT_CACHE:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            f"k4cv_index_poscmp_{_ENGINE_V}",
-            sf_dir.strip("/").replace("/", "_"),
-        )
-        cfg = EngineConfig(n_term_buckets=4, n_salts=4, store_positions=True)
-        docs = _docs(spark, sf_dir)
-        gens = [
-            build_index(
-                spark,
-                docs.filter(F.col("doc_id") % 2 == parity),
-                f"{base}/gen{parity}",
-                cfg,
-                url_col="source",
-            )
-            for parity in (0, 1)
-        ]
-        _POS_COMPACT_CACHE[sf_dir] = compact_generations(
-            spark, gens, f"{base}/compacted", cfg
-        )
-    return proximity_search(spark, _POS_COMPACT_CACHE[sf_dir], _PHRASES, slop=0)
+    index = _cached("poscmp", sf_dir, lambda base: compact_generations(
+        spark,
+        _parity_generations(spark, sf_dir, base, POS_CFG),
+        f"{base}/compacted",
+        POS_CFG,
+    ))
+    return proximity_search(spark, index, _PHRASES, slop=0)
 
 
 # ---------------------------------------------------------------------------
@@ -2932,8 +2982,6 @@ def q_phrase_query_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from keywords4cv_spark.query.wand import bm25_wand_multi  # noqa: E402
 
-_GEN_CACHE: dict[str, object] = {}
-
 
 def _generations_for(spark: SparkSession, sf_dir: str):
     """Two disjoint index generations (doc_id parity split) — the
@@ -2941,22 +2989,12 @@ def _generations_for(spark: SparkSession, sf_dir: str):
     are REGISTERED in and DISCOVERED through the snapshot-versioned
     manifest (index/manifest.py), not by directory listing — the
     metadata-driven incremental path (VERDICT r2 missing #4)."""
-    from keywords4cv_spark.index.manifest import append_generation, load_generations
+    def build(base: str) -> list:
+        for gen in _parity_generations(spark, sf_dir, base, GEN_CFG):
+            append_generation(spark, base, gen.path)
+        return load_generations(spark, base)
 
-    if sf_dir not in _GEN_CACHE:
-        base = os.path.join(
-            tempfile.gettempdir(), f"k4cv_index_gens_{_ENGINE_V}", sf_dir.strip("/").replace("/", "_")
-        )
-        cfg = EngineConfig(n_term_buckets=2, n_salts=4)
-        docs = _docs(spark, sf_dir)
-        for parity in (0, 1):
-            build_index(
-                spark, docs.filter(F.col("doc_id") % 2 == parity),
-                f"{base}/gen{parity}", cfg, url_col="source",
-            )
-            append_generation(spark, base, f"{base}/gen{parity}")
-        _GEN_CACHE[sf_dir] = load_generations(spark, base)
-    return _GEN_CACHE[sf_dir]
+    return _cached("gens", sf_dir, build)
 
 
 @register("bm25_incremental_topk", _bm25_oracle(CFG.k1, CFG.b, TOP_K))
@@ -2967,27 +3005,16 @@ def q_bm25_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_wand_multi(spark, gens, CFG, TOP_K)
 
 
-_COMPACT_CACHE: dict[str, object] = {}
-
-
 @register("bm25_compacted_topk", _bm25_oracle(CFG.k1, CFG.b, TOP_K))
 def q_bm25_compacted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSM compaction end-to-end: merge the two generations at the block
     level (no re-tokenization), query the compacted index, and match the
     full-corpus SQL oracle — the strongest compaction-correctness check
     available."""
-    from keywords4cv_spark.index.compact import compact_generations
-
-    if sf_dir not in _COMPACT_CACHE:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            f"k4cv_index_compact_{_ENGINE_V}",
-            sf_dir.strip("/").replace("/", "_"),
-        )
-        gens = _generations_for(spark, sf_dir)
-        cfg = EngineConfig(n_term_buckets=2, n_salts=4)
-        _COMPACT_CACHE[sf_dir] = compact_generations(spark, gens, base, cfg)
-    return bm25_wand(spark, _COMPACT_CACHE[sf_dir], CFG, TOP_K)
+    index = _cached("compact", sf_dir, lambda base: compact_generations(
+        spark, _generations_for(spark, sf_dir), base, GEN_CFG
+    ))
+    return bm25_wand(spark, index, CFG, TOP_K)
 
 
 # --- recrawl upsert: same url re-crawled into a later generation -----------
@@ -3015,36 +3042,33 @@ _RECRAWL_D_LIVE = f"""
   SELECT doc_id + {_RECRAWL_OFFSET}, {tokens_sql(f"(text || '{_RECRAWL_SUFFIX}')")} AS toks
   FROM documents WHERE lang = 'en' AND doc_id % {_RECRAWL_MOD} = 0"""
 
-_RECRAWL_CACHE: dict[str, object] = {}
+
+def _recrawl_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(docs, recrawled): the sf_dir corpus with a synthesized per-doc
+    url, and its recrawl batch — every 7th doc under a new doc_id, the
+    same url and refreshed text."""
+    docs = _docs(spark, sf_dir).withColumn(
+        "url", F.concat_ws("/", F.col("source"), F.col("doc_id"))
+    )
+    recrawled = (
+        docs.filter(F.col("doc_id") % _RECRAWL_MOD == 0)
+        .withColumn("doc_id", F.col("doc_id") + F.lit(_RECRAWL_OFFSET))
+        .withColumn("text", F.concat(F.col("text"), F.lit(_RECRAWL_SUFFIX)))
+    )
+    return docs, recrawled
 
 
-def _recrawl_family(spark: SparkSession, sf_dir: str):
-    """(generations, cfg): gen0 = full corpus, gen1 = the recrawl batch
-    (new doc_ids, same urls, refreshed text) — registered through the
-    snapshot manifest like every multi-generation family."""
-    from keywords4cv_spark.index.manifest import append_generation, load_generations
+def _recrawl_family(spark: SparkSession, sf_dir: str) -> list:
+    """Generations gen0 = full corpus, gen1 = the recrawl batch —
+    registered through the snapshot manifest like every
+    multi-generation family."""
+    def build(base: str) -> list:
+        for i, part in enumerate(_recrawl_corpus(spark, sf_dir)):
+            gen = build_index(spark, part, f"{base}/gen{i}", GEN_CFG, url_col="url")
+            append_generation(spark, base, gen.path)
+        return load_generations(spark, base)
 
-    if sf_dir not in _RECRAWL_CACHE:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            f"k4cv_index_recrawl_{_ENGINE_V}",
-            sf_dir.strip("/").replace("/", "_"),
-        )
-        cfg = EngineConfig(n_term_buckets=2, n_salts=4)
-        docs = _docs(spark, sf_dir).withColumn(
-            "url", F.concat_ws("/", F.col("source"), F.col("doc_id"))
-        )
-        recrawled = (
-            docs.filter(F.col("doc_id") % _RECRAWL_MOD == 0)
-            .withColumn("doc_id", F.col("doc_id") + F.lit(_RECRAWL_OFFSET))
-            .withColumn("text", F.concat(F.col("text"), F.lit(_RECRAWL_SUFFIX)))
-        )
-        build_index(spark, docs, f"{base}/gen0", cfg, url_col="url")
-        build_index(spark, recrawled, f"{base}/gen1", cfg, url_col="url")
-        append_generation(spark, base, f"{base}/gen0")
-        append_generation(spark, base, f"{base}/gen1")
-        _RECRAWL_CACHE[sf_dir] = (load_generations(spark, base), cfg, base)
-    return _RECRAWL_CACHE[sf_dir]
+    return _cached("recrawl", sf_dir, build)
 
 
 @register(
@@ -3060,16 +3084,10 @@ def q_bm25_recrawl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting them until compaction (Lucene deleted-docs semantics —
     the oracle scores over the union corpus and filters stale docs
     before ranking)."""
-    from keywords4cv_spark.index.upsert import superseded_docs
-    from keywords4cv_spark.query.wand import bm25_wand_multi
-
-    gens, cfg, _ = _recrawl_family(spark, sf_dir)
+    gens = _recrawl_family(spark, sf_dir)
     return bm25_wand_multi(
-        spark, gens, cfg, TOP_K, exclude=superseded_docs(gens)
+        spark, gens, GEN_CFG, TOP_K, exclude=superseded_docs(gens)
     )
-
-
-_RECRAWL_PURGED_CACHE: dict[str, object] = {}
 
 
 @register(
@@ -3081,24 +3099,15 @@ def q_bm25_recrawl_purged_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are physically removed, dictionary/stats recomputed over survivors,
     and the compacted index matches the clean live-corpus oracle with
     NO query-time exclusion — deletes are gone, statistics restored."""
-    from keywords4cv_spark.index.compact import compact_generations
-    from keywords4cv_spark.index.upsert import superseded_docs
+    def build(out: str):
+        gens = _recrawl_family(spark, sf_dir)
+        return compact_generations(
+            spark, gens, out, GEN_CFG, superseded=superseded_docs(gens)
+        )
 
-    if sf_dir not in _RECRAWL_PURGED_CACHE:
-        gens, cfg, _ = _recrawl_family(spark, sf_dir)
-        out = os.path.join(
-            tempfile.gettempdir(),
-            f"k4cv_index_recrawl_purged_{_ENGINE_V}",
-            sf_dir.strip("/").replace("/", "_"),
-        )
-        _RECRAWL_PURGED_CACHE[sf_dir] = (
-            compact_generations(
-                spark, gens, out, cfg, superseded=superseded_docs(gens)
-            ),
-            cfg,
-        )
-    idx, cfg = _RECRAWL_PURGED_CACHE[sf_dir]
-    return bm25_wand(spark, idx, cfg, TOP_K)
+    return bm25_wand(
+        spark, _cached("recrawl_purged", sf_dir, build), GEN_CFG, TOP_K
+    )
 
 
 # --- recrawl-aware positional retrieval (VERDICT r3 next #6) ---------------
@@ -3107,32 +3116,16 @@ def q_bm25_recrawl_purged_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doc_id wins) makes the originals the tombstone set from a single
 # generation — so highlighting and phrase queries compose with upsert
 # exclusion through exactly the machinery bm25_recrawl_topk uses.
-_POS_RECRAWL_CACHE: dict[str, tuple] = {}
 
 
 def _pos_recrawl_index(spark: SparkSession, sf_dir: str):
-    from keywords4cv_spark.index.upsert import superseded_docs
+    def build(base: str):
+        docs, recrawled = _recrawl_corpus(spark, sf_dir)
+        return build_index(
+            spark, docs.unionByName(recrawled), base, POS_CFG, url_col="url"
+        )
 
-    if sf_dir not in _POS_RECRAWL_CACHE:
-        base = os.path.join(
-            tempfile.gettempdir(),
-            f"k4cv_index_posrecrawl_{_ENGINE_V}",
-            sf_dir.strip("/").replace("/", "_"),
-        )
-        cfg = EngineConfig(n_term_buckets=4, n_salts=4, store_positions=True)
-        docs = _docs(spark, sf_dir).withColumn(
-            "url", F.concat_ws("/", F.col("source"), F.col("doc_id"))
-        )
-        recrawled = (
-            docs.filter(F.col("doc_id") % _RECRAWL_MOD == 0)
-            .withColumn("doc_id", F.col("doc_id") + F.lit(_RECRAWL_OFFSET))
-            .withColumn("text", F.concat(F.col("text"), F.lit(_RECRAWL_SUFFIX)))
-        )
-        idx = build_index(
-            spark, docs.unionByName(recrawled), base, cfg, url_col="url"
-        )
-        _POS_RECRAWL_CACHE[sf_dir] = (idx, cfg, superseded_docs([idx]))
-    return _POS_RECRAWL_CACHE[sf_dir]
+    return _cached("posrecrawl", sf_dir, build)
 
 
 @register(
@@ -3156,8 +3149,10 @@ def q_phrase_query_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exclusion is a post-match anti-join: phrase counts are per-doc with
     no ranking interplay, so dropping tombstones after matching is
     exact (query/phrase.py)."""
-    idx, _cfg, tombs = _pos_recrawl_index(spark, sf_dir)
-    return proximity_search(spark, idx, _PHRASES, slop=0, exclude=tombs)
+    idx = _pos_recrawl_index(spark, sf_dir)
+    return proximity_search(
+        spark, idx, _PHRASES, slop=0, exclude=superseded_docs([idx])
+    )
 
 
 @register(
@@ -3172,9 +3167,10 @@ def q_snippet_windows_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs' position streams (query/snippets.py exclude=)."""
     from keywords4cv_spark.query.snippets import snippet_windows
 
-    idx, cfg, tombs = _pos_recrawl_index(spark, sf_dir)
+    idx = _pos_recrawl_index(spark, sf_dir)
     return snippet_windows(
-        spark, idx, cfg, k=TOP_K, width=_SNIPPET_WIDTH, exclude=tombs
+        spark, idx, POS_CFG, k=TOP_K, width=_SNIPPET_WIDTH,
+        exclude=superseded_docs([idx]),
     )
 
 
@@ -3225,7 +3221,7 @@ def q_term_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary work — a startswith range scan over the term-sorted
     dictionary plus a per-prefix top-k window; postings never touched,
     nothing scales with the corpus beyond |V|."""
-    index, _icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     pdf = local_rows(spark, _SUGGEST_PREFIXES, "prefix_id long, prefix string")
     cand = index.dictionary.join(
         F.broadcast(pdf), F.col("term").startswith(F.col("prefix"))
@@ -3293,7 +3289,7 @@ def q_term_suggest_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Lucene-grade refinement (Levenshtein automaton over the
     term-sorted dictionary) would prune further but changes no
     semantics."""
-    index, _icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     pdf = local_rows(
         spark,
         _FUZZY_SUGGEST_PROBES, "probe_id long, probe string"
@@ -3397,7 +3393,7 @@ def q_bm25_quality_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set, nothing corpus-sized shuffles. Both stages round to
     6 decimals before ranking (order-free float determinism, the
     bm25f_topk rule)."""
-    index, _icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     cands = bm25_wand(spark, index, CFG, k=_FUSE_CAND).drop("rank")
     qual = textstats.quality_scores(_docs(spark, sf_dir), CFG).select(
         "doc_id", "quality"
@@ -3444,14 +3440,14 @@ def q_bm25_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter-vs-boolean-must distinction, and the same deleted-docs
     semantics the recrawl path uses). The docmeta predicate scan is
     O(docs) metadata, never postings."""
-    index, icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     disallowed = index.docmeta.filter(
         ~F.col("url").isin(_ALLOWED_SOURCES)
     ).select("doc_id")
-    # icfg, not CFG: the tombstone band rule (doc_id % n_salts) must
+    # INDEX_CFG, not CFG: the tombstone band rule (doc_id % n_salts) must
     # match the index's segment layout or markers land in the wrong
     # scoring tasks
-    return bm25_wand_multi(spark, [index], icfg, TOP_K, exclude=disallowed)
+    return bm25_wand_multi(spark, [index], INDEX_CFG, TOP_K, exclude=disallowed)
 
 
 # --- hybrid lexical+vector retrieval (reciprocal-rank fusion) -------------
@@ -3540,7 +3536,7 @@ def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition. Ties: round(rrf, 6) DESC then doc_id (engine-wide rule);
     rank arithmetic is integer so both engines agree exactly.
     """
-    index, _icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     lex = bm25_wand(spark, index, CFG, k=_RRF_DEPTH).select(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
@@ -3633,7 +3629,7 @@ def q_search_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
     facet aggregation input is |Q|·depth·n_facets rows regardless of
     corpus size. Counts are exact integers — no float parity concerns.
     """
-    index, _icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     hits = bm25_wand(spark, index, CFG, k=_FACET_DEPTH).select(
         "query_id", "doc_id"
     )
@@ -3705,7 +3701,7 @@ def q_bm25_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer stage). The DuckDB oracle above is its reference."""
     from keywords4cv_spark.query.indexed import bm25_explain_indexed
 
-    index, _icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     return bm25_explain_indexed(spark, index, CFG, TOP_K)
 
 
@@ -3760,7 +3756,7 @@ def q_mlt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference."""
     from keywords4cv_spark.query.indexed import more_like_this_indexed
 
-    index, _icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     return more_like_this_indexed(
         spark, index, _docs(spark, sf_dir), CFG, TOP_K, _MLT_PROBES, _MLT_TERMS
     )
@@ -3810,7 +3806,7 @@ def q_bm25_collapsed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle above is its reference."""
     from keywords4cv_spark.query.indexed import bm25_collapse_indexed
 
-    index, _icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     return bm25_collapse_indexed(spark, index, CFG, TOP_K, "source")
 
 
@@ -3819,7 +3815,7 @@ def q_bm25_collapsed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "index_segment_stats",
-    # 4 = _index_for's n_salts, 128.0 = EngineConfig.block_size — the
+    # 4 = INDEX_CFG.n_salts, 128.0 = EngineConfig.block_size — the
     # oracle recomputes the physical layout from first principles.
     f"""
 WITH {_TF_CTES},
@@ -3856,10 +3852,10 @@ def q_index_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (postings/128 rows) plus a metadata-only docmeta agg — no payload
     decode, no text scan; output is n_salts rows.
     """
-    index, icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     seg_docs = (
         index.docmeta.select(
-            F.pmod(F.col("doc_id"), F.lit(icfg.n_salts)).cast("int").alias("segment")
+            F.pmod(F.col("doc_id"), F.lit(INDEX_CFG.n_salts)).cast("int").alias("segment")
         )
         .groupBy("segment")
         .agg(F.count("*").alias("n_docs"))
@@ -3951,7 +3947,7 @@ def q_bm25_prf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-E selection is an exact integer sort (summed tf DESC, term
     ASC — no float anywhere). The only corpus-sized work is the two
     WAND passes."""
-    index, _icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     pairs = query_term_pairs()
     hits = (
         bm25_wand(spark, index, CFG, k=_PRF_F, queries=pairs)
@@ -4064,7 +4060,6 @@ def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- streaming incremental index build -------------------------------------
-_STREAM_IDX_CACHE: dict[str, tuple] = {}
 
 
 @register("bm25_stream_indexed_topk", _bm25_oracle(CFG.k1, CFG.b, TOP_K))
@@ -4083,20 +4078,10 @@ def q_bm25_stream_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     already covered)."""
     import shutil
 
-    from keywords4cv_spark.index.manifest import (
-        append_generation,
-        load_generations,
-    )
-
-    if sf_dir not in _STREAM_IDX_CACHE:
-        tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.strip("/"))
-        base = os.path.join(
-            tempfile.gettempdir(), f"k4cv_index_stream_{_ENGINE_V}", tag
-        )
+    def build(base: str) -> list:
         shutil.rmtree(base, ignore_errors=True)
         stage = os.path.join(base, "arrivals")
         os.makedirs(stage, exist_ok=True)
-        cfg = EngineConfig(n_term_buckets=2, n_salts=4)
         docs = _docs(spark, sf_dir)
         # two "crawl batches": parity halves, one single-file parquet each
         import glob as _glob
@@ -4111,7 +4096,7 @@ def q_bm25_stream_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def build_batch(batch_df, batch_id: int) -> None:
             gen_dir = os.path.join(base, f"gen{batch_id}")
-            build_index(spark, batch_df, gen_dir, cfg, url_col="source")
+            build_index(spark, batch_df, gen_dir, GEN_CFG, url_col="source")
             append_generation(spark, base, gen_dir)
 
         ckpt = os.path.join(base, "_ckpt")
@@ -4125,9 +4110,10 @@ def q_bm25_stream_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        _STREAM_IDX_CACHE[sf_dir] = (load_generations(spark, base), cfg)
-    gens, cfg = _STREAM_IDX_CACHE[sf_dir]
-    return bm25_wand_multi(spark, gens, cfg, TOP_K)
+        return load_generations(spark, base)
+
+    gens = _cached("stream", sf_dir, build)
+    return bm25_wand_multi(spark, gens, GEN_CFG, TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -4170,9 +4156,9 @@ def q_query_string_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the extended grammar in tests/test_query_parse.py."""
     from keywords4cv_spark.query.parse import search_query_strings_indexed
 
-    index, icfg = _index_for(spark, sf_dir)
+    index = _index_for(spark, sf_dir)
     return search_query_strings_indexed(
-        spark, index, _pos_index_for(spark, sf_dir), _QS_QUERIES, icfg, TOP_K
+        spark, index, _pos_index_for(spark, sf_dir), _QS_QUERIES, INDEX_CFG, TOP_K
     )
 
 
@@ -4180,58 +4166,25 @@ def q_query_string_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # long-session cache hygiene
 # ---------------------------------------------------------------------------
 
-_ALL_CACHES: list[dict] = [
-    _INDEX_CACHE,
-    _IVF_CENTS_CACHE,
-    _POS_INDEX_CACHE,
-    _POS_COMPACT_CACHE,
-    _GEN_CACHE,
-    _COMPACT_CACHE,
-    _RECRAWL_CACHE,
-    _RECRAWL_PURGED_CACHE,
-    _POS_RECRAWL_CACHE,
-    _STREAM_IDX_CACHE,
-]
-
 
 def release_caches(spark: SparkSession | None = None) -> None:
-    """Release every module-level cache and the executor storage behind
-    it — the explicit end-of-session lifecycle for a long-lived driver
-    (VERDICT r4 wrong #3 / next #8).
+    """Release the keyed cache and the executor storage behind it — the
+    explicit end-of-session lifecycle for a long-lived service that
+    runs many gates in one session (call it between tenants).
 
-    The registry queries are written for the driver's process model
-    (one session, sequential queries, caches reused within a gate run);
-    intermediates they persist() deliberately stay cached and
-    localCheckpointed frames (train_kmeans centroids) hold storage
-    blocks until their RDDs are garbage collected. A service driver
-    that runs many gates in one session calls this between tenants:
-    `catalog.clearCache()` drops every cache-manager entry in one call,
-    clearing the cache dicts drops the last references to the
-    localCheckpointed RDDs (Spark's ContextCleaner then frees their
-    blocks on the next JVM GC, which this nudges), and the /tmp index
-    trees stay on disk — reopening is a metadata read, not a rebuild.
+    Dropping the cache drops the last references to the cached index
+    handles and centroid frames; the /tmp index trees stay on disk, so
+    reopening is a metadata read, not a rebuild. With a session, every
+    cache-manager entry goes (`catalog.clearCache()`) and every
+    remaining persistent RDD is unpersisted explicitly: the
+    ContextCleaner frees localCheckpoint blocks only after a JVM GC of
+    RDD objects the py4j bridge can keep alive indefinitely. This
+    invalidates any DataFrame a caller still holds from an earlier
+    registry call (a LogicalRDD cannot recompute).
     """
-    for cache in _ALL_CACHES:
-        for v in cache.values():
-            df = v if isinstance(v, DataFrame) else None
-            if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        cache.clear()
+    _CACHE.clear()
+    _OWNED.clear()
     if spark is not None:
         spark.catalog.clearCache()
-        # localCheckpoint blocks are NOT cache-manager entries and the
-        # ContextCleaner only frees them after JVM GC of RDD objects the
-        # py4j bridge can keep alive indefinitely — so at this boundary
-        # the remaining persistent RDDs (all localCheckpoints: k-means
-        # centroid iterations, staged candidate sets) are unpersisted
-        # EXPLICITLY. This invalidates any DataFrame a caller still
-        # holds from an earlier registry call (a LogicalRDD cannot
-        # recompute); that is the release_caches contract — it is the
-        # end-of-tenant lifecycle, not a mid-query optimization.
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().toList().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
+        for rdd in persistent_rdds(spark).values():
+            rdd.unpersist(False)

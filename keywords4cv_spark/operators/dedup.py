@@ -108,7 +108,7 @@ def minhash_band_minima(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> 
     return _band_minima_from_tokens(tokenized_docs(docs, cfg).select("doc_id", "tokens"))
 
 
-def _pairs_from_band_minima(bm: DataFrame) -> DataFrame:
+def pairs_from_band_minima(bm: DataFrame) -> DataFrame:
     """Same-bucket candidate pairs from a (persisted) band-minima relation."""
     a = bm.alias("a")
     b = bm.alias("b")
@@ -133,7 +133,7 @@ def lsh_candidate_pairs(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> 
     scratch table instead of executor memory, same shape.
     """
     bm = minhash_band_minima(docs, cfg).persist()
-    return _pairs_from_band_minima(bm)
+    return pairs_from_band_minima(bm)
 
 
 def jaccard_verified_pairs(
@@ -160,7 +160,7 @@ def jaccard_verified_pairs(
     # eager candidate materialization (lineage truncated) lets the
     # band-minima cache release HERE instead of leaking for the
     # session's lifetime — bm has no consumer beyond the self-join
-    cand = _pairs_from_band_minima(bm).localCheckpoint()
+    cand = pairs_from_band_minima(bm).localCheckpoint()
     bm.unpersist()
     # verify-side pruning: only docs that appear in a candidate pair ship
     # their token set into the verify join — at web scale the candidate
@@ -355,7 +355,9 @@ def simhash_near_dups(
     """
     if max_hamming >= SIMHASH_BANDS:
         raise ValueError("banding is only lossless for max_hamming < n_bands")
-    sh = simhash64(docs, cfg).persist()
+    # a lazy checkpoint, not persist(): unpersisting its RDD frees it
+    # whole, with no cache-manager entry left behind
+    sh = simhash64(docs, cfg).localCheckpoint(eager=False)
     bands = sh.select(
         "doc_id",
         F.explode(

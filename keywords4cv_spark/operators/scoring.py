@@ -185,10 +185,12 @@ def reference_term_scores(
     # the JVM's threads (config.py)
     ensure_py_files(spark)
     tok = make_tokenize_udf(cfg.min_token_len, cfg.stopwords)
+    # a lazy checkpoint, not persist(): unpersisting its RDD frees it
+    # whole, with no cache-manager entry left behind
     toks = docs.select(
         "doc_id",
         F.array_distinct(tok(F.col("text"))).alias("toks"),
-    ).persist()
+    ).localCheckpoint(eager=False)
     orig = toks.select("doc_id", F.explode("toks").alias("term"))
     syn = local_rows(spark, expansion.SYNONYMS, "term string, synonym string")
     expanded = orig.join(F.broadcast(syn), "term").select(

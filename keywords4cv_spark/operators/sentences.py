@@ -187,15 +187,12 @@ def context_validated_terms(
     (RANGE frame over sent_idx — gap-safe) and mark valid iff the count
     reaches min_context_hits.
     """
-    hits = _sentence_skill_hits(spark, docs, cfg).persist()
-    stot = hits.groupBy("doc_id", "sent_idx").agg(F.sum("cnt").alias("s_tot"))
+    # RANGE frames over sent_idx: w_tot sums every whitelist hit within
+    # ±window sentences (all terms), w_term the keyword's own hits
     w_tot = (
         Window.partitionBy("doc_id")
         .orderBy("sent_idx")
         .rangeBetween(-window, window)
-    )
-    wtot = stot.withColumn("w_tot", F.sum("s_tot").over(w_tot)).select(
-        "doc_id", "sent_idx", "w_tot"
     )
     w_term = (
         Window.partitionBy("doc_id", "term")
@@ -203,8 +200,9 @@ def context_validated_terms(
         .rangeBetween(-window, window)
     )
     scored = (
-        hits.withColumn("w_term", F.sum("cnt").over(w_term))
-        .join(wtot, ["doc_id", "sent_idx"])
+        _sentence_skill_hits(spark, docs, cfg)
+        .withColumn("w_tot", F.sum("cnt").over(w_tot))
+        .withColumn("w_term", F.sum("cnt").over(w_term))
         .withColumn("n_context_other", (F.col("w_tot") - F.col("w_term")).cast("long"))
     )
     first = Window.partitionBy("doc_id", "term").orderBy("sent_idx")
@@ -254,7 +252,9 @@ def context_validated_semantic(
     """
     from keywords4cv_spark.operators.similarity import cosine_col
 
-    hits = _sentence_skill_hits(spark, docs, cfg).persist()
+    # a lazy checkpoint, not persist(): unpersisting its RDD frees it
+    # whole, with no cache-manager entry left behind
+    hits = _sentence_skill_hits(spark, docs, cfg).localCheckpoint(eager=False)
     skills = sorted({s_ for _, s_ in vocab.SKILLS})
     tv = local_rows(
         spark,

@@ -93,3 +93,22 @@ def local_rows(spark: SparkSession, rows, schema: str):
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema
     )
+
+
+def persistent_rdds(spark: SparkSession, since: int = 0) -> dict:
+    """id → JVM RDD for every persistent RDD in the context (cache-manager
+    buffers and localCheckpointed relations alike) whose id is at or
+    above ``since``, a ``next_rdd_id`` watermark."""
+    out = {}
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().toList().iterator()
+    while it.hasNext():
+        pair = it.next()
+        if int(pair._1()) >= since:
+            out[int(pair._1())] = pair._2()
+    return out
+
+
+def next_rdd_id(spark: SparkSession) -> int:
+    """An RDD-id watermark: RDD ids only grow, so every RDD created after
+    this call has an id at or above the returned one."""
+    return int(spark.sparkContext._jsc.sc().newRddId())

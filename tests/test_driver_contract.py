@@ -79,8 +79,8 @@ def test_entry_smoke(spark):
 
 def test_release_caches_returns_storage_to_baseline(spark):
     """Long-session hygiene (VERDICT r4 next #8): two cache-populating
-    query families through ONE session, then release_caches() — every
-    module cache empties and executor storage (cache-manager entries
+    query families through ONE session, then release_caches() — the
+    keyed cache empties and executor storage (cache-manager entries
     AND localCheckpointed k-means centroids) drops to zero persistent
     RDDs, synchronously (explicit unpersist, no GC dependence)."""
     from keywords4cv_spark import driver_queries as dq
@@ -92,11 +92,47 @@ def test_release_caches_returns_storage_to_baseline(spark):
 
     dq.QUERIES["ann_ivf_topk"](spark, SF01).count()  # localCheckpointed cents
     dq.QUERIES["bm25_wand_topk"](spark, SF01).count()  # index cache
-    assert any(len(c) for c in dq._ALL_CACHES)
+    assert dq._CACHE
     assert n_persistent() > 0  # the populated state holds storage
 
     dq.release_caches(spark)
-    assert not any(len(c) for c in dq._ALL_CACHES)
+    assert not dq._CACHE
     # release is explicit (clearCache + unpersist of localCheckpoint
     # leftovers) — the persistent-RDD map empties synchronously
     assert n_persistent() == 0, n_persistent()
+
+
+def test_registry_calls_leave_no_staged_rdds(spark, sf_dir):
+    """One sequential pass over every registry entry (call, then
+    collect). After each entry, every persistent RDD created since the
+    pass began is owned by the keyed cache or was created by the
+    current call: what earlier entries staged is gone. No entry leaves a
+    cache-manager entry behind other than the keyed cache's relations,
+    and release_caches ends the pass with zero persistent RDDs. A
+    failure names the entry that made the leftover RDDs."""
+    from keywords4cv_spark import driver_queries as dq
+    from keywords4cv_spark.session import next_rdd_id, persistent_rdds
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+
+    def n_unowned_entries() -> int:  # cache-manager entries _cached does not hold
+        held = sum(getattr(v, "is_cached", False) for v in dq._CACHE.values())
+        return cache_manager.numCachedEntries() - held
+
+    n_unowned = n_unowned_entries()
+    start = next_rdd_id(spark)
+    windows: dict[str, tuple[int, int]] = {}  # entry -> its RDD ids
+    leaks: dict[str, set[int]] = {}
+    for name in sorted(dq.QUERIES):
+        lo = next_rdd_id(spark)
+        dq.QUERIES[name](spark, sf_dir).collect()
+        windows[name] = (lo, next_rdd_id(spark))
+        left = set(persistent_rdds(spark, since=start)) - dq._OWNED
+        for rid in (r for r in left if r < lo):
+            maker = next(n for n, (a, b) in windows.items() if a <= rid < b)
+            leaks.setdefault(maker, set()).add(rid)
+    assert not leaks, sorted(leaks)
+    assert n_unowned_entries() <= n_unowned
+
+    dq.release_caches(spark)
+    assert not persistent_rdds(spark)

@@ -133,10 +133,9 @@ def test_postings_consumers_prune_buckets(spark, sf_dir, name, n_scans, monkeypa
     if name == "bm25_wand_topk":
         monkeypatch.setattr(dq, "CFG", replace(dq.CFG, wand_driver_max_postings=0))
     elif name == "bm25_recrawl_topk":
-        gens, cfg, base = dq._recrawl_family(spark, sf_dir)
-        monkeypatch.setitem(
-            dq._RECRAWL_CACHE, sf_dir,
-            (gens, replace(cfg, wand_driver_max_postings=0), base),
+        dq._recrawl_family(spark, sf_dir)  # build with the unpatched config
+        monkeypatch.setattr(
+            dq, "GEN_CFG", replace(dq.GEN_CFG, wand_driver_max_postings=0)
         )
     plan = explain_str(dq.QUERIES[name](spark, sf_dir))
     scans = [
@@ -156,12 +155,12 @@ def test_wand_driver_read_opens_only_query_buckets(spark, sf_dir, monkeypatch):
     import pyarrow.dataset as ds
 
     from keywords4cv_spark.driver_queries import CFG as QCFG
-    from keywords4cv_spark.driver_queries import _index_for
+    from keywords4cv_spark.driver_queries import INDEX_CFG, _index_for
     from keywords4cv_spark.index.build import term_bucket
     from keywords4cv_spark.query.fixtures import query_term_pairs
     from keywords4cv_spark.query.wand import bm25_wand
 
-    index, icfg = _index_for(spark, sf_dir)
+    index, icfg = _index_for(spark, sf_dir), INDEX_CFG
     pairs = [(q, t) for q, t in query_term_pairs() if q in (0, 1)]
     lut = index.lookup_terms([t for _, t in pairs])  # warm: dictionary read
     want = {term_bucket(tid, icfg.n_term_buckets) for tid, _ in lut.values()}
@@ -264,11 +263,11 @@ def test_prefix_query_plan_has_no_expansion_sized_in_list(spark, sf_dir):
     the match count (a short prefix on a web vocabulary expands to ~1e6
     terms — plan bloat, driver memory, codegen limits). The only In-list
     allowed in the plan is the bucket filter, bounded by n_term_buckets."""
-    from keywords4cv_spark.driver_queries import QUERIES, _index_for
+    from keywords4cv_spark.driver_queries import INDEX_CFG, QUERIES
 
     df = QUERIES["prefix_query"](spark, sf_dir)
     plan = explain_str(df)
-    _, icfg = _index_for(spark, sf_dir)
+    icfg = INDEX_CFG
     for m in re.finditer(r"(\w+)#\d+L? IN(?:SET)? \(?([^)\n]*)", plan):
         col, elems = m.group(1), m.group(2)
         width = len(elems.split(","))
@@ -355,10 +354,10 @@ def test_query_string_indexed_reads_postings_not_corpus(spark, sf_dir):
     expansion join (prefix/wildcard/regexp/fuzzy) broadcasts the
     query-bounded pattern table. Regexp clauses additionally carry the
     literal-prefix StartsWith pushdown next to the anchored RLIKE."""
-    from keywords4cv_spark.driver_queries import _index_for, _pos_index_for
+    from keywords4cv_spark.driver_queries import INDEX_CFG, _index_for, _pos_index_for
     from keywords4cv_spark.query.parse import search_query_strings_indexed
 
-    index, icfg = _index_for(spark, sf_dir)
+    index, icfg = _index_for(spark, sf_dir), INDEX_CFG
     pos_index = _pos_index_for(spark, sf_dir)
     qs = [(0, "merge +join -slow"), (1, "/m[ae]rge/ s*eam qurey~")]
     df = search_query_strings_indexed(spark, index, pos_index, qs, icfg)

@@ -20,6 +20,7 @@ from keywords4cv_spark.query.parse import (
     parse_query,
     search_query_strings_indexed,
 )
+from keywords4cv_spark.session import next_rdd_id, persistent_rdds
 
 # Hand-checkable docs, one group per semantic pinned below. The groups
 # share no token any of their queries reads, so one small positional
@@ -79,12 +80,13 @@ def _indexed_vs_oracle(spark, sf_dir, name, queries, **kw):
     from keywords4cv_spark.driver_queries import (
         _TF_CTES,
         _docs,
+        INDEX_CFG,
         _index_for,
         _pos_index_for,
     )
     from keywords4cv_spark.query.parse import query_string_oracle
 
-    index, icfg = _index_for(spark, sf_dir)
+    index, icfg = _index_for(spark, sf_dir), INDEX_CFG
     attrs = (
         _docs(spark, sf_dir)
         .filter(F.col("lang") == "en")
@@ -131,11 +133,12 @@ def _indexed_rank_identical(spark, sf_dir, relayout, queries, **kw):
     positions payload never change an answer."""
     from keywords4cv_spark.driver_queries import (
         _docs,
+        INDEX_CFG,
         _index_for,
         _pos_index_for,
     )
 
-    index, icfg = _index_for(spark, sf_dir)
+    index, icfg = _index_for(spark, sf_dir), INDEX_CFG
     attrs = (
         _docs(spark, sf_dir)
         .filter(F.col("lang") == "en")
@@ -230,6 +233,7 @@ def test_search_with_snippets_windows_exact(spark, sf_dir):
     from keywords4cv_spark.driver_queries import (
         _QS_QUERIES,
         _docs,
+        INDEX_CFG,
         _index_for,
         _pos_index_for,
     )
@@ -241,7 +245,7 @@ def test_search_with_snippets_windows_exact(spark, sf_dir):
     )
     from keywords4cv_spark.textprep.normalize import tokenize
 
-    index, icfg = _index_for(spark, sf_dir)
+    index, icfg = _index_for(spark, sf_dir), INDEX_CFG
     pos_index = _pos_index_for(spark, sf_dir)
     width = 8
     out = search_with_snippets(
@@ -424,20 +428,22 @@ def test_wand_fast_path_routing_and_identity(spark, sf_dir):
 @pytest.mark.parametrize("gate", [0, 2**31 - 2], ids=["spark", "driver"])
 def test_queries_release_their_caches(spark, sf_dir, gate):
     """A warm call of bm25_explain, query_string_search and
-    bm25_wand_topk leaves the JVM's persistent-RDD count where it found
-    it, on each side of the WAND driver gate."""
+    bm25_wand_topk leaves no persistent RDD it created behind, on each
+    side of the WAND driver gate. Compared by id, not by the JVM-wide
+    count: the ContextCleaner may drop older RDDs during the call."""
     from dataclasses import replace
 
     from keywords4cv_spark.driver_queries import (
         CFG as QCFG,
         _QS_QUERIES,
+        INDEX_CFG,
         _index_for,
         _pos_index_for,
     )
     from keywords4cv_spark.query.indexed import bm25_explain_indexed
     from keywords4cv_spark.query.wand import bm25_wand
 
-    index, icfg = _index_for(spark, sf_dir)
+    index, icfg = _index_for(spark, sf_dir), INDEX_CFG
     pos_index = _pos_index_for(spark, sf_dir)
     calls = {
         "bm25_explain": lambda: bm25_explain_indexed(spark, index, QCFG),
@@ -449,12 +455,11 @@ def test_queries_release_their_caches(spark, sf_dir, gate):
             spark, index, replace(QCFG, wand_driver_max_postings=gate)
         ),
     }
-    jsc = spark.sparkContext._jsc
     for name, call in calls.items():
         assert call().collect(), name  # warm
-        before = jsc.getPersistentRDDs().size()
+        lo = next_rdd_id(spark)
         call().collect()
-        assert jsc.getPersistentRDDs().size() == before, name
+        assert not persistent_rdds(spark, since=lo), name
 
 
 def test_explain_query_strings_decomposes_scores(spark, sf_dir):
@@ -464,6 +469,7 @@ def test_explain_query_strings_decomposes_scores(spark, sf_dir):
     hits (constant score 0) explain as zero rows."""
     from keywords4cv_spark.driver_queries import (
         _QS_QUERIES,
+        INDEX_CFG,
         _index_for,
         _pos_index_for,
     )
@@ -472,7 +478,7 @@ def test_explain_query_strings_decomposes_scores(spark, sf_dir):
         search_query_strings_indexed,
     )
 
-    index, icfg = _index_for(spark, sf_dir)
+    index, icfg = _index_for(spark, sf_dir), INDEX_CFG
     pos_index = _pos_index_for(spark, sf_dir)
     qs = _QS_QUERIES + [(10, "merge^3 join")]
     hits = search_query_strings_indexed(
@@ -635,13 +641,13 @@ def test_explain_includes_scored_phrases(spark, sf_dir):
     """With score_phrases, explain rows cover phrase clauses too (term
     = the phrase string, tf = occurrence count) and the per-hit
     contribution sum still reconstructs the ranked score exactly."""
-    from keywords4cv_spark.driver_queries import _index_for, _pos_index_for
+    from keywords4cv_spark.driver_queries import INDEX_CFG, _index_for, _pos_index_for
     from keywords4cv_spark.query.parse import (
         explain_query_strings,
         search_query_strings_indexed,
     )
 
-    index, icfg = _index_for(spark, sf_dir)
+    index, icfg = _index_for(spark, sf_dir), INDEX_CFG
     pos_index = _pos_index_for(spark, sf_dir)
     hits = search_query_strings_indexed(
         spark, index, pos_index, _PH_QUERIES, icfg, score_phrases=True

@@ -178,3 +178,37 @@ def test_staged_postings_equal_batch_tf(spark, tmp_path):
     want = term_frequencies(tokenized_docs(spark.read.parquet(path), CFG))
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+def test_stream_sessions_closed_reuses_one_slot(spark, sf_dir):
+    """Repeated stream_sessions_closed calls reuse one checkpoint dir and
+    one sess_* memory-sink view per sf_dir instead of leaving a new pair
+    behind on every call."""
+    import glob
+    import os
+    import re
+    import tempfile
+
+    from keywords4cv_spark import __version__
+    from keywords4cv_spark.driver_queries import QUERIES
+
+    tag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.strip("/"))
+
+    def slots():
+        ckpts = glob.glob(
+            os.path.join(tempfile.gettempdir(), f"k4cv_sess_ckpt_{__version__}_*")
+        )
+        views = [
+            t.name for t in spark.catalog.listTables()
+            if t.isTemporary and t.name.startswith("sess_")
+        ]
+        return sorted(ckpts), sorted(views)
+
+    run = QUERIES["stream_sessions_closed"]
+    first = sorted(run(spark, sf_dir).collect())
+    after_first = slots()
+    assert sorted(run(spark, sf_dir).collect()) == first
+    assert slots() == after_first
+    ckpts, views = after_first
+    assert len([c for c in ckpts if c.endswith(tag)]) == 1, ckpts
+    assert len([v for v in views if v.endswith(tag)]) == 1, views
