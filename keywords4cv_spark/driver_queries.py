@@ -12,18 +12,19 @@ identical.
 Staging lifecycle: a query may stage intermediates (persist(),
 localCheckpoint(): tokenized relations, band minima, candidate sets)
 that the DataFrame it returns still reads lazily. The ``register``
-wrapper owns that staging. When an outermost registry call starts, it
-unpersists every persistent RDD created since the previous outermost
-call started, except those the keyed cache (``_cached``) owns. So a
+wrapper owns that staging. When a registry call starts, it unpersists
+every persistent RDD created since the previous registry call started,
+except those the keyed cache (``_cached``) owns. No entry calls another
+through the registry, since the inner call would free what the outer
+one staged. So a
 returned DataFrame stays valid until the next registry call: consume it
 (collect, count, toPandas, write) first. Anything a caller stages
-between two registry calls is released by the second one too. A call
-made from inside another entry (top_terms calls term_dictionary) is
-nested and releases nothing. Built indexes, generation families,
-trained centroids and the corpus relations several entries share (term
-frequencies, MinHash band minima) live in the keyed cache for the life
-of the process; ``release_caches`` frees them and every other
-persistent RDD.
+between two registry calls is released by the second one too. Built
+indexes, generation families, trained centroids and the corpus
+relations entries reuse (term frequencies, MinHash band minima, SimHash
+signatures, the synthetic corpus's token sets) live in the keyed cache
+for the life of the process; ``release_caches`` frees them and every
+other persistent RDD.
 
 Fixture oracles (canonical_clusters) are materialized for the driver's
 fixed sf=0.01 gate; the Spark query runs at any sf, the oracle is only
@@ -70,12 +71,11 @@ CFG = DEFAULT_CONFIG
 from keywords4cv_spark import __version__ as _ENGINE_V  # noqa: E402
 
 
-_depth = 0  # registry-call nesting depth
-_since: int | None = None  # first RDD id of the last outermost call
+_since: int | None = None  # first RDD id of the last registry call
 
 
 def _release_staged(spark: SparkSession) -> None:
-    """Unpersist what the previous outermost call staged (and anything
+    """Unpersist what the previous registry call staged (and anything
     staged after it), keeping the keyed cache's RDDs."""
     global _since
     if _since is not None:
@@ -88,15 +88,9 @@ def _release_staged(spark: SparkSession) -> None:
 def register(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            global _depth
-            if _depth == 0:
-                _release_staged(spark)
-            _depth += 1
-            try:
-                ensure_py_files(spark)  # executors must import this package
-                return fn(spark, sf_dir)
-            finally:
-                _depth -= 1
+            _release_staged(spark)
+            ensure_py_files(spark)  # executors must import this package
+            return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
@@ -154,10 +148,9 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _materialized(df: DataFrame) -> DataFrame:
     """Persist ``df`` and fill its blocks now. Built inside ``_cached``,
-    a corpus relation several entries read is computed once: every
-    later plan that contains it (Spark's cache plan-matching) reads the
-    blocks, and they are cache-owned because they exist before the
-    build returns."""
+    a corpus relation entries reuse is computed once and passed to the
+    operators that read it; its blocks are cache-owned because they
+    exist before the build returns."""
     df = df.persist()
     df.count()
     return df
@@ -292,16 +285,20 @@ def q_bm25_page2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "term_dictionary",
-    f"WITH {_TF_CTES} SELECT term, df, cf FROM dict",
-)
-def q_term_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _term_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _corpus_tf(spark, sf_dir)
         .groupBy("term")
         .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
     )
+
+
+@register(
+    "term_dictionary",
+    f"WITH {_TF_CTES} SELECT term, df, cf FROM dict",
+)
+def q_term_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _term_dictionary(spark, sf_dir)
 
 
 @register(
@@ -331,7 +328,7 @@ SELECT term, df, cf FROM dict ORDER BY cf DESC, term LIMIT 20""",
 )
 def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        q_term_dictionary(spark, sf_dir)
+        _term_dictionary(spark, sf_dir)
         .orderBy(F.col("cf").desc(), F.col("term"))
         .limit(20)
     )
@@ -405,8 +402,9 @@ SELECT term, round(sum(score), 6) AS total_score,
 FROM scored GROUP BY term""",
 )
 def q_keyword_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _corpus_tf(spark, sf_dir)  # scored_postings' tf relation reads it
-    return scoring.keyword_summary(spark, _docs(spark, sf_dir), CFG)
+    return scoring.keyword_summary(
+        spark, _docs(spark, sf_dir), CFG, tf=_corpus_tf(spark, sf_dir)
+    )
 
 
 @register(
@@ -921,7 +919,9 @@ FROM bands a JOIN bands b
   ON a.band = b.band AND a.minhash = b.minhash AND a.doc_id < b.doc_id""",
 )
 def q_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.pairs_from_band_minima(_band_minima(spark, sf_dir))
+    return dedup.lsh_candidate_pairs(
+        _docs(spark, sf_dir), CFG, bm=_band_minima(spark, sf_dir)
+    )
 
 
 _JACCARD_CTES = f"""
@@ -1036,7 +1036,13 @@ def q_simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash signature (4×16-bit chunks) — the web-scale
     signature space (VERDICT r2 #2); simhash16 remains as the compact
     illustrative variant."""
-    return dedup.simhash64(_docs(spark, sf_dir), CFG)
+    return _simhash64(spark, sf_dir)
+
+
+def _simhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _cached("simhash64", sf_dir, lambda _: _materialized(
+        dedup.simhash64(_docs(spark, sf_dir), CFG)
+    ))
 
 
 _HAMMING64 = " + ".join(
@@ -1068,7 +1074,9 @@ def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs over the 64-bit signature: lossless banded
     candidates (hamming ≤ 3 ⇒ ≥1 identical 16-bit chunk of 4) +
     Σ bit_count(xor(chunk)) verification."""
-    return dedup.simhash_near_dups(_docs(spark, sf_dir), CFG)
+    return dedup.simhash_near_dups(
+        _docs(spark, sf_dir), CFG, sh=_simhash64(spark, sf_dir)
+    )
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2104,7 +2112,10 @@ def q_reference_scored_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     → whitelist boost → per-keyword section weight) end to end — the
     G3→A2 parity flagship, runnable only now that P8 keyword sections
     exist. See operators/scoring.reference_term_scores."""
-    return scoring.reference_term_scores(spark, _synth(spark), CFG)
+    toks = _cached("synth_token_sets", _SYNTH_PATH, lambda _: _materialized(
+        scoring.doc_token_sets(spark, _synth(spark), CFG)
+    ))
+    return scoring.reference_term_scores(spark, _synth(spark), CFG, toks=toks)
 
 
 # ---------------------------------------------------------------------------
@@ -2245,38 +2256,41 @@ WHERE q.quality >= {_CURATION_QUALITY_MIN}
                   WHERE c.doc_id = q.doc_id AND c.doc_id != c.rep_doc_id){extra_pred}"""
 
 
+def _curated(spark: SparkSession, sf_dir: str, clean: bool) -> DataFrame:
+    """Quality gate ∩ near-dup representatives, ∖ benchmark-contaminated
+    docs when ``clean``. One tokenize pass feeds every branch: the
+    persisted (doc_id, tokens) relation is passed explicitly to each
+    (plan-asserted in test_plans), and every branch is materialized
+    EAGERLY so the shared tokenize cache is released before returning —
+    long sessions running many curation calls would otherwise
+    accumulate leaked corpus-sized cache blocks (measured as
+    cross-query slowdown in the full bench)."""
+    docs = _docs(spark, sf_dir)
+    toks = tokenized_docs(docs, CFG).select("doc_id", "tokens").persist()
+    keep = (
+        textstats.quality_scores(docs, CFG, toks=toks)
+        .filter(F.col("quality") >= _CURATION_QUALITY_MIN)
+        .select("doc_id", "quality")
+        .localCheckpoint()
+    )
+    comp = dedup.dup_components(dedup.jaccard_verified_pairs(docs, CFG, toks=toks))
+    drops = [comp.filter(F.col("doc_id") != F.col("rep_doc_id")).select("doc_id")]
+    if clean:
+        drops.append(dedup.contaminated_docs(docs, CFG, toks=toks).select("doc_id"))
+    for drop in drops:
+        keep = keep.join(drop.localCheckpoint(), "doc_id", "left_anti")
+    toks.unpersist()
+    return keep
+
+
 @register("curated_corpus", _curated_oracle())
 def q_curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-data curation composition — THE canonical LLM-pipeline
     op: keep docs that (a) pass the quality gate and (b) are either
     unique or the REPRESENTATIVE of their near-duplicate component
     (candidate→verify LSH dedup + connected components + min-label
-    keep-one rule). One tokenize pass feeds both branches: the
-    persisted (doc_id, tokens) relation is passed explicitly to the
-    quality scorer and the dedup DAG (plan-asserted in test_plans),
-    and every branch is materialized EAGERLY so the shared tokenize
-    cache is released before returning — long sessions running many
-    curation calls would otherwise accumulate leaked corpus-sized
-    cache blocks (measured as cross-query slowdown in the full bench)."""
-    from keywords4cv_spark.index.build import tokenized_docs
-
-    docs = _docs(spark, sf_dir)
-    toks = tokenized_docs(docs, CFG).select("doc_id", "tokens").persist()
-    qual = (
-        textstats.quality_scores(docs, CFG, toks=toks)
-        .filter(F.col("quality") >= _CURATION_QUALITY_MIN)
-        .select("doc_id", "quality")
-        .localCheckpoint()
-    )
-    edges = dedup.jaccard_verified_pairs(docs, CFG, toks=toks)
-    comp = dedup.dup_components(edges)
-    non_reps = (
-        comp.filter(F.col("doc_id") != F.col("rep_doc_id"))
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    toks.unpersist()
-    return qual.join(non_reps, "doc_id", "left_anti")
+    keep-one rule), from one tokenize pass (see _curated)."""
+    return _curated(spark, sf_dir, clean=False)
 
 
 @register(
@@ -2292,36 +2306,8 @@ def q_curated_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality gate ∩ near-dup representatives ∖ benchmark-contaminated
     docs — the full curation pipeline a training run would ship. The
     contamination branch shares the SAME persisted tokenize pass as the
-    quality and dedup branches (one corpus scan feeds all three), and
-    all branches materialize eagerly so the cache is released before
-    returning (see q_curated_corpus)."""
-    from keywords4cv_spark.index.build import tokenized_docs
-
-    docs = _docs(spark, sf_dir)
-    toks = tokenized_docs(docs, CFG).select("doc_id", "tokens").persist()
-    qual = (
-        textstats.quality_scores(docs, CFG, toks=toks)
-        .filter(F.col("quality") >= _CURATION_QUALITY_MIN)
-        .select("doc_id", "quality")
-        .localCheckpoint()
-    )
-    edges = dedup.jaccard_verified_pairs(docs, CFG, toks=toks)
-    comp = dedup.dup_components(edges)
-    non_reps = (
-        comp.filter(F.col("doc_id") != F.col("rep_doc_id"))
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    contam = (
-        dedup.contaminated_docs(docs, CFG, toks=toks)
-        .select("doc_id")
-        .localCheckpoint()
-    )
-    toks.unpersist()
-    return (
-        qual.join(non_reps, "doc_id", "left_anti")
-        .join(contam, "doc_id", "left_anti")
-    )
+    quality and dedup branches (one corpus scan feeds all three)."""
+    return _curated(spark, sf_dir, clean=True)
 
 
 # disjunctive retrieval with exclusion: (query, should-terms, must-not-terms)

@@ -108,8 +108,8 @@ def minhash_band_minima(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> 
     return _band_minima_from_tokens(tokenized_docs(docs, cfg).select("doc_id", "tokens"))
 
 
-def pairs_from_band_minima(bm: DataFrame) -> DataFrame:
-    """Same-bucket candidate pairs from a (persisted) band-minima relation."""
+def _pairs_from_band_minima(bm: DataFrame) -> DataFrame:
+    """Same-bucket candidate pairs from a (staged) band-minima relation."""
     a = bm.alias("a")
     b = bm.alias("b")
     return (
@@ -124,16 +124,24 @@ def pairs_from_band_minima(bm: DataFrame) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
+def lsh_candidate_pairs(
+    docs: DataFrame,
+    cfg: EngineConfig = DEFAULT_CONFIG,
+    bm: DataFrame | None = None,
+) -> DataFrame:
     """(doc_a, doc_b) sharing at least one band bucket, doc_a < doc_b.
 
-    The band-minima relation is persisted before the self-join — without
+    The band-minima relation is staged before the self-join — without
     it, Spark recomputes the whole tokenize→shingle→min lineage once per
-    join side. At 100 TB the staged relation would be written to a
-    scratch table instead of executor memory, same shape.
+    join side. It is a lazy checkpoint, not persist(): unpersisting its
+    RDD frees it whole, with no cache-manager entry left behind. Pass
+    ``bm`` (a materialized minhash_band_minima relation of ``docs``) to
+    pair it directly. At 100 TB the staged relation would be written to
+    a scratch table instead of executor memory, same shape.
     """
-    bm = minhash_band_minima(docs, cfg).persist()
-    return pairs_from_band_minima(bm)
+    if bm is None:
+        bm = minhash_band_minima(docs, cfg).localCheckpoint(eager=False)
+    return _pairs_from_band_minima(bm)
 
 
 def jaccard_verified_pairs(
@@ -160,7 +168,7 @@ def jaccard_verified_pairs(
     # eager candidate materialization (lineage truncated) lets the
     # band-minima cache release HERE instead of leaking for the
     # session's lifetime — bm has no consumer beyond the self-join
-    cand = pairs_from_band_minima(bm).localCheckpoint()
+    cand = _pairs_from_band_minima(bm).localCheckpoint()
     bm.unpersist()
     # verify-side pruning: only docs that appear in a candidate pair ship
     # their token set into the verify join — at web scale the candidate
@@ -341,6 +349,7 @@ def simhash_near_dups(
     docs: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
     max_hamming: int = SIMHASH_MAX_HAMMING,
+    sh: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, hamming): SimHash near-duplicates via banded join.
 
@@ -351,13 +360,15 @@ def simhash_near_dups(
     cross product — and each band's bucket space is 2^16, so candidate
     volume stays ~n²/(4·65536) per band under uniform hashing instead
     of the ~n²/16 the 16-bit nibble banding allowed. Verification is
-    Σ bit_count(xor(chunk)) — pure codegen on both engines.
+    Σ bit_count(xor(chunk)) — pure codegen on both engines. Pass ``sh``
+    (a materialized simhash64 relation of ``docs``) to reuse it.
     """
     if max_hamming >= SIMHASH_BANDS:
         raise ValueError("banding is only lossless for max_hamming < n_bands")
-    # a lazy checkpoint, not persist(): unpersisting its RDD frees it
-    # whole, with no cache-manager entry left behind
-    sh = simhash64(docs, cfg).localCheckpoint(eager=False)
+    if sh is None:
+        # a lazy checkpoint, not persist(): unpersisting its RDD frees
+        # it whole, with no cache-manager entry left behind
+        sh = simhash64(docs, cfg).localCheckpoint(eager=False)
     bands = sh.select(
         "doc_id",
         F.explode(

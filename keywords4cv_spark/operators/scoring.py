@@ -41,16 +41,21 @@ from keywords4cv_spark.query.bm25 import bm25_score_col
 
 
 def scored_postings(
-    spark: SparkSession, docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
+    spark: SparkSession,
+    docs: DataFrame,
+    cfg: EngineConfig = DEFAULT_CONFIG,
+    tf: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, term, tf, dl, score) with boost/weights applied.
 
     The reference's per-(keyword, doc) detail relation
     (keywords4cv.py:3190-3198) re-expressed: BM25 contribution × O2
     whitelist boost × O3 field weight, minus P9 negative keywords.
+    Pass ``tf`` (a materialized term_frequencies relation of ``docs``)
+    to skip deriving it.
     """
     toks = tokenized_docs(docs, cfg)
-    tf_df = term_frequencies(toks)
+    tf_df = term_frequencies(toks) if tf is None else tf
     dict_df = tf_df.groupBy("term").agg(F.count("*").alias("df"))
     stats = corpus_stats(toks)
 
@@ -98,10 +103,13 @@ def scored_postings(
 
 
 def keyword_summary(
-    spark: SparkSession, docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
+    spark: SparkSession,
+    docs: DataFrame,
+    cfg: EngineConfig = DEFAULT_CONFIG,
+    tf: DataFrame | None = None,
 ) -> DataFrame:
     """A2/A3: per-term Total_Score / Avg_Score / Job_Count."""
-    sp = scored_postings(spark, docs, cfg)
+    sp = scored_postings(spark, docs, cfg, tf)
     return sp.groupBy("term").agg(
         F.round(F.sum("score"), 6).alias("total_score"),
         F.round(F.avg("score"), 6).alias("avg_score"),
@@ -151,8 +159,28 @@ def fuzzy_resolve(
     )
 
 
-def reference_term_scores(
+def doc_token_sets(
     spark: SparkSession, docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
+) -> DataFrame:
+    """(doc_id, toks): each document's distinct tokens, through the
+    parity-pinned Arrow tokenizer — JDK-17 regex serializes across the
+    JVM's threads (config.py)."""
+    from keywords4cv_spark.deploy import ensure_py_files
+    from keywords4cv_spark.textprep.udfs import make_tokenize_udf
+
+    ensure_py_files(spark)
+    tok = make_tokenize_udf(cfg.min_token_len, cfg.stopwords)
+    return docs.select(
+        "doc_id",
+        F.array_distinct(tok(F.col("text"))).alias("toks"),
+    )
+
+
+def reference_term_scores(
+    spark: SparkSession,
+    docs: DataFrame,
+    cfg: EngineConfig = DEFAULT_CONFIG,
+    toks: DataFrame | None = None,
 ) -> DataFrame:
     """The reference's LITERAL scoring chain, per (doc, term) — the full
     G3→A2 pipeline now that per-keyword sections (P8) exist:
@@ -170,27 +198,20 @@ def reference_term_scores(
       nearest preceding heading (:3214-3221 via _detect_keyword_section,
       'default' weight when the term never appears in the text).
 
-    Aggregated per term: (term, total_score, n_docs).
+    Aggregated per term: (term, total_score, n_docs). Pass ``toks`` (a
+    materialized doc_token_sets relation of ``docs``) to reuse it.
     """
-    from keywords4cv_spark.deploy import ensure_py_files
     from keywords4cv_spark.operators import expansion
     from keywords4cv_spark.operators.sections import (
         DEFAULT_WEIGHT,
         section_weight_col,
     )
     from keywords4cv_spark.operators.sentences import term_sections
-    from keywords4cv_spark.textprep.udfs import make_tokenize_udf
 
-    # parity-pinned Arrow tokenizer — JDK-17 regex serializes across
-    # the JVM's threads (config.py)
-    ensure_py_files(spark)
-    tok = make_tokenize_udf(cfg.min_token_len, cfg.stopwords)
-    # a lazy checkpoint, not persist(): unpersisting its RDD frees it
-    # whole, with no cache-manager entry left behind
-    toks = docs.select(
-        "doc_id",
-        F.array_distinct(tok(F.col("text"))).alias("toks"),
-    ).localCheckpoint(eager=False)
+    if toks is None:
+        # a lazy checkpoint, not persist(): unpersisting its RDD frees
+        # it whole, with no cache-manager entry left behind
+        toks = doc_token_sets(spark, docs, cfg).localCheckpoint(eager=False)
     orig = toks.select("doc_id", F.explode("toks").alias("term"))
     syn = local_rows(spark, expansion.SYNONYMS, "term string, synonym string")
     expanded = orig.join(F.broadcast(syn), "term").select(
