@@ -3057,6 +3057,14 @@ def _recrawl_family(spark: SparkSession, sf_dir: str) -> list:
     return _cached("recrawl", sf_dir, build)
 
 
+def _recrawl_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The recrawl family's tombstone set, derived once (a local
+    relation under GEN_CFG's driver gate)."""
+    return _cached("recrawl_tombstones", sf_dir, lambda _: superseded_docs(
+        _recrawl_family(spark, sf_dir), GEN_CFG
+    ))
+
+
 @register(
     "bm25_recrawl_topk",
     _bm25_oracle(
@@ -3070,9 +3078,9 @@ def q_bm25_recrawl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting them until compaction (Lucene deleted-docs semantics —
     the oracle scores over the union corpus and filters stale docs
     before ranking)."""
-    gens = _recrawl_family(spark, sf_dir)
     return bm25_wand_multi(
-        spark, gens, GEN_CFG, TOP_K, exclude=superseded_docs(gens)
+        spark, _recrawl_family(spark, sf_dir), GEN_CFG, TOP_K,
+        exclude=_recrawl_tombstones(spark, sf_dir),
     )
 
 
@@ -3086,9 +3094,9 @@ def q_bm25_recrawl_purged_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the compacted index matches the clean live-corpus oracle with
     NO query-time exclusion — deletes are gone, statistics restored."""
     def build(out: str):
-        gens = _recrawl_family(spark, sf_dir)
         return compact_generations(
-            spark, gens, out, GEN_CFG, superseded=superseded_docs(gens)
+            spark, _recrawl_family(spark, sf_dir), out, GEN_CFG,
+            superseded=_recrawl_tombstones(spark, sf_dir),
         )
 
     return bm25_wand(
@@ -3114,6 +3122,13 @@ def _pos_recrawl_index(spark: SparkSession, sf_dir: str):
     return _cached("posrecrawl", sf_dir, build)
 
 
+def _pos_recrawl_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The positional recrawl index's tombstone set, derived once."""
+    return _cached("posrecrawl_tombstones", sf_dir, lambda _: superseded_docs(
+        [_pos_recrawl_index(spark, sf_dir)], POS_CFG
+    ))
+
+
 @register(
     "phrase_query_recrawl",
     f"""
@@ -3135,9 +3150,9 @@ def q_phrase_query_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exclusion is a post-match anti-join: phrase counts are per-doc with
     no ranking interplay, so dropping tombstones after matching is
     exact (query/phrase.py)."""
-    idx = _pos_recrawl_index(spark, sf_dir)
     return proximity_search(
-        spark, idx, _PHRASES, slop=0, exclude=superseded_docs([idx])
+        spark, _pos_recrawl_index(spark, sf_dir), _PHRASES, slop=0,
+        exclude=_pos_recrawl_tombstones(spark, sf_dir),
     )
 
 
@@ -3153,10 +3168,9 @@ def q_snippet_windows_recrawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs' position streams (query/snippets.py exclude=)."""
     from keywords4cv_spark.query.snippets import snippet_windows
 
-    idx = _pos_recrawl_index(spark, sf_dir)
     return snippet_windows(
-        spark, idx, POS_CFG, k=TOP_K, width=_SNIPPET_WIDTH,
-        exclude=superseded_docs([idx]),
+        spark, _pos_recrawl_index(spark, sf_dir), POS_CFG, k=TOP_K,
+        width=_SNIPPET_WIDTH, exclude=_pos_recrawl_tombstones(spark, sf_dir),
     )
 
 

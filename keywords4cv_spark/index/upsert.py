@@ -26,11 +26,16 @@ do:
   corpus (tested), and the tombstone set resets to empty.
 
 Scale: the tombstone DERIVATION is one url-keyed shuffle over the
-docmeta tables (rows ∝ corpus, no window, no driver materialization).
-The QUERY-TIME exclusion depends on where the WAND batch runs
-(``EngineConfig.wand_driver_max_postings``): a batch served in the
-driver collects the tombstone set, capped at the gate — a larger set
-sends the batch to the Spark plan. There tombstones reach the scoring
+docmeta tables (rows ∝ corpus, no window). ``superseded_docs`` runs it
+once, when it is called, and keeps the set in the driver when it fits
+under ``EngineConfig.wand_driver_max_postings`` (the gate that already
+decides whether a WAND batch's tombstones fit in the driver): the
+result is then an Arrow local relation, so every later consumer reads
+it without a Spark job. A larger set is returned as the lazy
+derivation. The QUERY-TIME exclusion depends on where the WAND batch
+runs: a batch served in the driver collects the tombstone set (0 jobs
+from a local relation), capped at the same gate — a larger set sends
+the batch to the Spark plan. There tombstones reach the scoring
 tasks as extra rows unioned into the block scan, Spark-partitioned
 alongside the postings by the same (query, doc-band) keys, so the cost
 is |tombstones| × |queries| rows per query batch. Either way it is
@@ -43,11 +48,17 @@ generalizes that to per-document freshness at web scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from keywords4cv_spark.config import DEFAULT_CONFIG, EngineConfig
+
+_TOMB_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
 
 
-def superseded_docs(indexes: list) -> DataFrame:
+def superseded_docs(indexes: list, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     """Tombstone set across generations: (doc_id) of every doc whose url
     has a newer version in a LATER generation (or, within one
     generation, a higher doc_id — a same-batch crawl dup keeps the
@@ -60,8 +71,17 @@ def superseded_docs(indexes: list) -> DataFrame:
     One groupBy(url) shuffle + one url-keyed join; the winner per url is
     max(gen_seq, doc_id) — no window, no single-partition stage, and the
     output is exactly the upsert-shadowed rows (empty when no url ever
-    re-appeared).
+    re-appeared, or when ``indexes`` is empty).
+
+    The derivation runs when this is called. A set of at most
+    ``cfg.wand_driver_max_postings`` rows comes back as an Arrow local
+    relation: collecting it, or a WAND batch excluding it, runs no Spark
+    job. A larger set comes back as the lazy derivation. Either way the
+    result is a snapshot of the given generation handles, which are
+    immutable: derive it again after a generation is appended.
     """
+    if not indexes:
+        return _local_tombstones(SparkSession.active(), [])
     metas = None
     for seq, idx in enumerate(indexes):
         if "url" not in idx.docmeta.columns:
@@ -76,8 +96,22 @@ def superseded_docs(indexes: list) -> DataFrame:
     winners = metas.groupBy("url").agg(
         F.max(F.struct("gen_seq", "doc_id")).alias("w")
     )
-    return (
+    derivation = (
         metas.join(winners, "url")
         .filter(F.struct("gen_seq", "doc_id") != F.col("w"))
-        .select("doc_id")
+        .select(F.col("doc_id").cast("long"))
+    )
+    gate = cfg.wand_driver_max_postings
+    rows = derivation.limit(gate + 1).collect()
+    if len(rows) > gate:
+        return derivation
+    return _local_tombstones(metas.sparkSession, [r[0] for r in rows])
+
+
+def _local_tombstones(spark: SparkSession, doc_ids: list[int]) -> DataFrame:
+    """(doc_id long) as an Arrow local relation: collecting it runs no
+    Spark job, even when it is empty (``createDataFrame`` of a list or a
+    pandas frame plans a parallelize job)."""
+    return spark.createDataFrame(
+        pa.table({"doc_id": pa.array(doc_ids, pa.int64())}), _TOMB_SCHEMA
     )

@@ -21,7 +21,9 @@ block is read. Two shapes, one kernel (``_group_topk``):
   the bucket-directory and term_id pruned blocks
   (``IndexTables.postings_for(local=True)``) → the (query, band) groups
   scored in-process → rank-merge in Python → an Arrow local relation.
-  Zero Spark jobs without tombstones; the tombstone collect otherwise.
+  Zero Spark jobs, tombstones included: the batch collects the
+  ``exclude`` relation, which runs no job when it is the local relation
+  ``superseded_docs`` returns for a set under the gate.
   At serving scale a warm query's cost is the per-job scheduling floor
   of the Spark shape, not scoring work, so small batches stay here.
 - Spark (larger batches): per generation, the blocks from
@@ -392,11 +394,15 @@ def bm25_wand_multi(
     counting them (Lucene deleted-docs semantics; a purging compaction
     restores clean statistics). A batch served in the driver collects
     the tombstone set (at most ``cfg.wand_driver_max_postings`` rows;
-    a larger set sends the batch to the Spark shape). In the Spark
-    shape tombstones travel as marker rows unioned into the block scan,
-    partitioned to the same (query, doc-band) scoring tasks as the
-    postings, and all generations must share ``cfg.n_salts`` (the band
-    rule ``doc_id % n_salts`` is how a tombstone finds its scoring task).
+    a larger set sends the batch to the Spark shape): derive the set
+    once per generation list with ``superseded_docs`` and pass it to
+    every batch, so that collect reads a local relation and runs no
+    Spark job. An empty ``indexes`` list answers with an empty result.
+    In the Spark shape tombstones travel as marker rows unioned into the
+    block scan, partitioned to the same (query, doc-band) scoring tasks
+    as the postings, and all generations must share ``cfg.n_salts`` (the
+    band rule ``doc_id % n_salts`` is how a tombstone finds its scoring
+    task).
     """
     return _wand_topk(spark, indexes, cfg, k, queries, exclude=exclude)
 
@@ -497,8 +503,8 @@ def _wand_topk(
     n_docs = sum(int(r["n_docs"]) for r in srows)
     if stored_bounds:
         avgdl = float(srows[0]["avgdl"])
-    else:
-        avgdl = sum(int(r["sum_dl"]) for r in srows) / n_docs
+    else:  # no generation, no doc: nothing resolves, the result is empty
+        avgdl = sum(int(r["sum_dl"]) for r in srows) / n_docs if n_docs else 0.0
     sc = _Scoring(n_docs, avgdl, cfg.k1, cfg.b, stored_bounds, k, cfg.wand_taat_max_postings)
 
     # global df per term = Σ generation df (doc spaces are disjoint),

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
 import shutil
@@ -82,8 +83,9 @@ _GATE_OPEN = 2**31 - 2
 
 
 def _gate_sides(cfg):
-    """cfg with the WAND driver gate forced open (driver path) and shut
-    (Spark applyInPandas path)."""
+    """cfg with the driver gate forced open and shut: for WAND, the
+    driver path and the Spark applyInPandas path; for ``superseded_docs``,
+    a tombstone set held in the driver and the lazy derivation."""
     return {
         "driver": replace(cfg, wand_driver_max_postings=_GATE_OPEN),
         "spark": replace(cfg, wand_driver_max_postings=0),
@@ -95,6 +97,50 @@ def _both_sides(cfg, run):
     must be bit-identical: same (query_id, rank, doc_id) and the same
     double ``score`` (float ==). Returns the _collect dict."""
     got = {side: _collect(run(c)) for side, c in _gate_sides(cfg).items()}
+    assert got["driver"] == got["spark"]
+    return got["driver"]
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def _jobs(spark, run):
+    """(``run()``, the number of Spark jobs it submitted), counted by
+    job group as bench_extra.py does."""
+    sc = spark.sparkContext
+    grp = f"test-jobs-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(grp, grp)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(grp))
+
+
+def _is_local(df):
+    """True when ``df``'s optimized plan is a driver-held LocalRelation."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def _tombstone_sides(gens):
+    """``superseded_docs(gens)`` on each side of its driver gate: a
+    local relation (gate open) and the lazy derivation (gate shut). Both
+    sides must hold the same set. Returns ({side: relation}, the set)."""
+    from keywords4cv_spark.index.upsert import superseded_docs
+
+    sides = {side: superseded_docs(gens, c) for side, c in _gate_sides(CFG).items()}
+    assert _is_local(sides["driver"]) and not _is_local(sides["spark"])
+    sets = {side: {r.doc_id for r in t.collect()} for side, t in sides.items()}
+    assert sets["driver"] == sets["spark"]
+    return sides, sets["driver"]
+
+
+def _four_sides(tsides, run):
+    """``run(cfg, tombstones)`` for every (tombstone side × WAND side)
+    pair; the four answers must be bit-identical. Returns the _collect
+    dict."""
+    got = {ts: _both_sides(CFG, lambda c: run(c, t)) for ts, t in tsides.items()}
     assert got["driver"] == got["spark"]
     return got["driver"]
 
@@ -615,27 +661,35 @@ def _recrawl_split(docs, mod=5, off=1_000_000,
     return base, recrawled
 
 
-def test_recrawl_upsert_and_purging_compaction(spark, docs, tmp_path):
+@pytest.fixture(scope="module")
+def recrawl_gens(spark, docs, tmp_path_factory):
+    """(base, recrawled, [gen0, gen1]): the _recrawl_split corpus built
+    as two url-carrying generations."""
+    d = tmp_path_factory.mktemp("recrawl")
+    base, recrawled = _recrawl_split(docs)
+    g0 = build_index(spark, base, str(d / "u0"), CFG, url_col="url")
+    g1 = build_index(spark, recrawled, str(d / "u1"), CFG, url_col="url")
+    return base, recrawled, [g0, g1]
+
+
+def test_recrawl_upsert_and_purging_compaction(spark, recrawl_gens, tmp_path):
     """Recrawl upsert end-to-end (index/upsert.py):
     (a) superseded_docs tombstones exactly the stale originals of
-        re-crawled urls;
+        re-crawled urls, on both sides of its driver gate;
     (b) bm25_wand_multi(exclude=) drops them from every result while
         scoring with UNION statistics (Lucene deleted-docs semantics —
-        checked against the python oracle over the union corpus);
+        checked against the python oracle over the union corpus), with
+        bit-identical answers on every (tombstone side × WAND side);
     (c) the purging compaction equals a fresh build over the live corpus
         byte-for-byte and answers rank-identically with NO exclusion."""
     from keywords4cv_spark.index.compact import compact_generations
-    from keywords4cv_spark.index.upsert import superseded_docs
     from keywords4cv_spark.query.wand import bm25_wand_multi
 
     MOD = 5
-    base, recrawled = _recrawl_split(docs, mod=MOD)
-    g0 = build_index(spark, base, str(tmp_path / "u0"), CFG, url_col="url")
-    g1 = build_index(spark, recrawled, str(tmp_path / "u1"), CFG, url_col="url")
-    gens = [g0, g1]
+    base, recrawled, gens = recrawl_gens
 
     # (a) tombstones = the en originals of re-crawled urls, nothing else
-    tombs = {r.doc_id for r in superseded_docs(gens).collect()}
+    tsides, tombs = _tombstone_sides(gens)
     expected = {
         r.doc_id
         for r in base.filter(
@@ -656,9 +710,7 @@ def test_recrawl_upsert_and_purging_compaction(spark, docs, tmp_path):
         for qid, hits in oracle.items()
         for rank, doc, score in hits
     }
-    got = _both_sides(
-        CFG, lambda c: bm25_wand_multi(spark, gens, c, exclude=superseded_docs(gens))
-    )
+    got = _four_sides(tsides, lambda c, t: bm25_wand_multi(spark, gens, c, exclude=t))
     assert set(got) == set(want)
     for key in want:
         assert got[key][0] == want[key][0], key
@@ -670,7 +722,7 @@ def test_recrawl_upsert_and_purging_compaction(spark, docs, tmp_path):
     # (c) purging compaction == fresh build over the live corpus
     live = base.filter(F.col("doc_id") % MOD != 0).unionByName(recrawled)
     purged = compact_generations(
-        spark, gens, str(tmp_path / "up"), CFG, superseded=superseded_docs(gens)
+        spark, gens, str(tmp_path / "up"), CFG, superseded=tsides["driver"]
     )
     fresh = build_index(spark, live, str(tmp_path / "uf"), CFG, url_col="url")
     cols = [
@@ -849,8 +901,10 @@ def test_superseded_docs_within_generation_dup(spark, docs, tmp_path):
     """A url crawled twice in the SAME batch: the winner-per-url rule
     (max(gen_seq, doc_id)) keeps the newest capture (highest doc_id)
     and tombstones the earlier one — no cross-generation recrawl
-    needed."""
-    from keywords4cv_spark.index.upsert import superseded_docs
+    needed. Both sides of the tombstone gate hold that set, and the
+    excluding WAND answers agree on every (tombstone side × WAND
+    side)."""
+    from keywords4cv_spark.query.wand import bm25_wand_multi
 
     base = docs.withColumn(
         "url", F.concat_ws("/", F.col("source"), F.col("doc_id"))
@@ -862,12 +916,60 @@ def test_superseded_docs_within_generation_dup(spark, docs, tmp_path):
     )
     batch = base.unionByName(dups)
     g = build_index(spark, batch, str(tmp_path / "wg"), CFG, url_col="url")
-    tombs = {r.doc_id for r in superseded_docs([g]).collect()}
+    tsides, tombs = _tombstone_sides([g])
     originals = {
         r.doc_id for r in base.filter(F.col("lang") == "en")
         .orderBy("doc_id").limit(3).collect()
     }
     assert tombs == originals
+    got = _four_sides(tsides, lambda c, t: bm25_wand_multi(spark, [g], c, exclude=t))
+    assert got and not {doc for doc, _ in got.values()} & tombs
+
+
+def test_tombstones_in_the_driver_run_no_job(spark, recrawl_gens):
+    """superseded_docs derives once, when called: a set under the gate
+    is a local relation, so collecting it and a warm driver-path
+    bm25_wand_multi(exclude=...) collect submit no Spark job. An empty
+    set (no url re-crawled) is a 0-job local relation too. Jobs are
+    counted on collect(): a local relation's count() is a job."""
+    from keywords4cv_spark.index.upsert import superseded_docs
+    from keywords4cv_spark.query.wand import bm25_wand_multi
+
+    _, _, gens = recrawl_gens
+    tomb = superseded_docs(gens, CFG)
+    assert _is_local(tomb)
+    rows, n_jobs = _jobs(spark, tomb.collect)
+    assert rows and n_jobs == 0
+    drv = _gate_sides(CFG)["driver"]
+    warm = _collect(bm25_wand_multi(spark, gens, drv, exclude=tomb))
+    got, n_jobs = _jobs(spark, lambda: _collect(bm25_wand_multi(spark, gens, drv, exclude=tomb)))
+    assert got == warm and n_jobs == 0
+    # every url of one generation is distinct: nothing is superseded
+    for g in gens:
+        empty = superseded_docs([g], CFG)
+        assert _is_local(empty)
+        assert _jobs(spark, empty.collect) == ([], 0)
+
+
+def test_empty_generation_list_answers_empty(spark, tmp_path):
+    """A family with no committed generation loads as [] — the tombstone
+    set over it is an empty (doc_id long) relation and a multi-generation
+    query over it an empty result of the WAND schema, on both sides of
+    the driver gate."""
+    from keywords4cv_spark.index.manifest import load_generations
+    from keywords4cv_spark.index.upsert import superseded_docs
+    from keywords4cv_spark.query.wand import bm25_wand_multi
+
+    gens = load_generations(spark, str(tmp_path / "no_family"))
+    assert gens == []
+    tomb = superseded_docs(gens)
+    assert tomb.dtypes == [("doc_id", "bigint")] and tomb.collect() == []
+    want = [("query_id", "bigint"), ("rank", "int"), ("doc_id", "bigint"),
+            ("score", "double")]
+    for cfg in _gate_sides(CFG).values():
+        for exclude in (None, tomb):
+            df = bm25_wand_multi(spark, gens, cfg, exclude=exclude)
+            assert df.dtypes == want and df.collect() == []
 
 
 def test_manifest_compaction_lineage_and_fencing(spark, docs, tmp_path):

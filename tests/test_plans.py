@@ -133,7 +133,8 @@ def test_postings_consumers_prune_buckets(spark, sf_dir, name, n_scans, monkeypa
     if name == "bm25_wand_topk":
         monkeypatch.setattr(dq, "CFG", replace(dq.CFG, wand_driver_max_postings=0))
     elif name == "bm25_recrawl_topk":
-        dq._recrawl_family(spark, sf_dir)  # build with the unpatched config
+        # build the family and its tombstones with the unpatched config
+        dq._recrawl_tombstones(spark, sf_dir)
         monkeypatch.setattr(
             dq, "GEN_CFG", replace(dq.GEN_CFG, wand_driver_max_postings=0)
         )
