@@ -15,8 +15,10 @@ DTM build) into a distributed Spark build:
      the doc space shared by all terms — so query-time WAND/phrase can
      run per (query, segment) band in parallel and rank-merge exactly
      (a doc's postings for every query term share one band)
-   → repartition(term_id, segment) → applyInPandas encode blocks
-     (delta-gap + varbyte + exact per-block max BM25 contribution)
+   → repartition(term_id, segment) → per bucket, sortWithinPartitions
+     (term_id, segment) → mapInArrow encode, a partition at a time
+     (block_encoder: each Arrow batch split into (term_id, segment) runs;
+     delta-gap + varbyte + exact per-block max BM25 contribution)
    → parquet tables: dictionary / postings / docmeta / stats / _lineage
 
 Checkpoint-resume (north_rule): postings are built per term bucket
@@ -46,10 +48,12 @@ Scale notes (1000-executor / 10^12-doc design point):
   the ~1e8-1e9-term web vocabulary.
 - postings join dictionary on term: Spark/AQE picks broadcast when the
   dictionary is small, sort-merge otherwise; head-term skew in THIS
-  join is handled by AQE skewJoin, while the groupBy-encode skew is
-  handled by our explicit salting (AQE cannot split a groupBy group).
-- each (term_id, segment) group is bounded by the salt factor, so
-  applyInPandas groups fit in executor memory by construction.
+  join is handled by AQE skewJoin, while the encode skew is handled
+  by our explicit salting (AQE cannot split a (term_id, segment) run,
+  which must stay in one task).
+- each (term_id, segment) run is bounded by the salt factor, so the
+  one run the encoder holds across Arrow batches fits in executor
+  memory by construction.
 """
 
 from __future__ import annotations
@@ -69,7 +73,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from keywords4cv_spark.config import DEFAULT_CONFIG, EngineConfig
-from keywords4cv_spark.index.codec import encode_postings
+from keywords4cv_spark.index.codec import decode_blocks, encode_postings
 from keywords4cv_spark.session import local_rows
 from keywords4cv_spark.textprep.spark_exprs import ngrams_col
 
@@ -451,59 +455,112 @@ def corpus_stats(toks: DataFrame, *extra: Column) -> DataFrame:
     )
 
 
-def encode_step(cfg: EngineConfig, n_docs: int, avgdl: float):
-    """The one encode step of every index writer: a (term_id, segment)
-    group's frame (its first row gives term_id, segment and df) plus its
-    doc_id/tf/dl arrays and optional per-doc positions → that run's
-    posting blocks as POSTINGS_SCHEMA rows, scored against (n_docs,
-    avgdl). encode_postings sorts the run by doc_id (stable) and
-    reorders the positions with the same permutation."""
-    k1, b, block_size = cfg.k1, cfg.b, cfg.block_size
+def _posting_columns(batch: pa.RecordBatch, positional: bool, blocks: bool):
+    """One Arrow batch as numpy columns [term_id, segment, df, doc_id,
+    tf, dl, positions], one entry per posting; positions is a list of
+    one array per posting (None unless ``positional``). With ``blocks``
+    the batch holds posting blocks (first_doc, n, payload), decoded here
+    with their keys repeated per posting."""
+    import numpy as np
 
-    def encode(pdf: pd.DataFrame, doc_ids, tfs, dls, positions=None) -> pd.DataFrame:
-        import numpy as np
+    def col(name):
+        return batch.column(name).to_numpy()
 
-        df_val = int(pdf["df"].iloc[0])
-        idf = float(np.log(1.0 + (n_docs - df_val + 0.5) / (df_val + 0.5)))
-        out = pd.DataFrame(
-            encode_postings(
-                doc_ids, tfs, dls, idf, k1, b, avgdl, block_size, positions=positions
-            )
+    keys = [col("term_id"), col("segment"), col("df")]
+    if blocks:
+        sizes = col("n").astype(np.int64)
+        rows = decode_blocks(
+            batch.column("payload").to_pylist(), sizes, col("first_doc"), positional
         )
-        out.insert(0, "segment", int(pdf["segment"].iloc[0]))
-        out.insert(0, "term_id", int(pdf["term_id"].iloc[0]))
-        return out
+        return [np.repeat(k, sizes) for k in keys] + list(rows)
+    positions = None
+    if positional:
+        pos = batch.column("positions")
+        off = pos.offsets.to_numpy()
+        positions = np.split(pos.flatten().to_numpy(), off[1:-1] - off[0])
+    return keys + [col("doc_id"), col("tf"), col("dl"), positions]
+
+
+def block_encoder(cfg: EngineConfig, n_docs: int, avgdl: float, blocks: bool = False):
+    """The encode function of every index writer, for ``mapInArrow``
+    over partitions sorted by (term_id, segment): Arrow batches of
+    posting rows (term_id, segment, df, doc_id, tf, dl[, positions]) →
+    POSTINGS_SCHEMA batches, one per input batch, scored against
+    (n_docs, avgdl). With ``blocks`` the input rows are posting blocks
+    (term_id, segment, df, first_doc, n, payload), decoded first.
+
+    Each batch is split into (term_id, segment) runs with numpy and each
+    run goes through ``encode_postings``, the one encode kernel, which
+    sorts it by doc_id (stable, positions follow). A run is encoded when
+    the next key appears, so a run crossing a batch boundary is carried
+    as a list of chunks, never re-scanned. The input is sorted by key,
+    so the output comes out in (term_id, segment, block_id) order."""
+    k1, b, block_size, positional = cfg.k1, cfg.b, cfg.block_size, cfg.store_positions
+
+    def encode(batches):
+        import numpy as np
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(POSTINGS_SCHEMA)
+        key, df_val, chunks = None, 0, []  # the open run
+
+        def flush(out: list) -> None:
+            doc_ids, tfs, dls = (np.concatenate([c[i] for c in chunks]) for i in range(3))
+            positions = [p for c in chunks for p in c[3]] if positional else None
+            idf = float(np.log(1.0 + (n_docs - df_val + 0.5) / (df_val + 0.5)))
+            for blk in encode_postings(
+                doc_ids, tfs, dls, idf, k1, b, avgdl, block_size, positions=positions
+            ):
+                out.append((*key, *blk.values()))  # dict rows in schema order
+
+        def emit(out: list) -> pa.RecordBatch:
+            return pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(zip(*out), schema)], schema=schema
+            )
+
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            tid, seg, df, doc, tf, dl, pos = _posting_columns(batch, positional, blocks)
+            cut = np.flatnonzero((tid[1:] != tid[:-1]) | (seg[1:] != seg[:-1])) + 1
+            bounds = [0, *cut.tolist(), tid.size]
+            out: list = []
+            for lo, hi in zip(bounds, bounds[1:]):
+                run = (int(tid[lo]), int(seg[lo]))
+                if run != key:
+                    if chunks:
+                        flush(out)
+                    key, df_val, chunks = run, int(df[lo]), []
+                chunks.append(
+                    (doc[lo:hi], tf[lo:hi], dl[lo:hi], pos[lo:hi] if positional else None)
+                )
+            if out:
+                yield emit(out)
+        if chunks:
+            out = []
+            flush(out)
+            yield emit(out)
 
     return encode
 
 
-def row_encoder(cfg: EngineConfig):
-    """Group-function factory of the build (and of the purging
-    compaction): (n_docs, avgdl) → the encoder of a (term_id, segment)
-    group of posting rows (doc_id, tf, dl[, positions])."""
-
-    def make(n_docs: int, avgdl: float):
-        encode = encode_step(cfg, n_docs, avgdl)
-
-        def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            positions = (
-                [np.asarray(p, dtype=np.int64) for p in pdf["positions"]]
-                if "positions" in pdf.columns
-                else None
-            )
-            return encode(
-                pdf,
-                pdf["doc_id"].to_numpy(),
-                pdf["tf"].to_numpy(),
-                pdf["dl"].to_numpy(),
-                positions,
-            )
-
-        return encode_group
-
-    return make
+def bucket_blocks(
+    posted: DataFrame, bucket: int, cfg: EngineConfig, n_docs: int, avgdl: float
+) -> DataFrame:
+    """One term bucket's posting blocks (POSTINGS_SCHEMA) from
+    ``posted`` (see ``write_index``): its rows, sorted within each
+    partition by (term_id, segment) and encoded a partition at a time
+    by ``block_encoder``. posted's hash partitioning on (term_id,
+    segment) keeps every run inside one partition, and filter and sort
+    keep that partitioning: no exchange (asserted in test_plans)."""
+    return (
+        posted.filter(F.col("bucket") == bucket)
+        .sortWithinPartitions("term_id", "segment")
+        .mapInArrow(
+            block_encoder(cfg, n_docs, avgdl, blocks="payload" in posted.columns),
+            POSTINGS_SCHEMA,
+        )
+    )
 
 
 def build_index(
@@ -551,7 +608,7 @@ def build_index(
     # as FIXED-WIDTH rows (the term string is dropped after the join —
     # term_id carries it). Each bucket job then filters this cache with
     # zero additional exchange: filter preserves the hash partitioning,
-    # so the per-bucket groupBy(term_id, segment) reuses it instead of
+    # so the per-bucket encode (bucket_blocks) reuses it instead of
     # re-scanning the string-heavy tf cache + re-probing the dictionary +
     # re-shuffling per bucket (the r4 layout did all three n_bucket
     # times — measured redundant DRAM traffic on a bandwidth-bound job).
@@ -606,7 +663,7 @@ def build_index(
     )
     try:
         return write_index(
-            spark, index_dir, cfg, dictionary, docmeta, posted, row_encoder(cfg),
+            spark, index_dir, cfg, dictionary, docmeta, posted,
             hashes=hashes, resume=resume,
         )
     finally:
@@ -620,7 +677,6 @@ def write_index(
     dictionary: DataFrame,
     docmeta: DataFrame,
     posted: DataFrame,
-    make_group_fn,
     hashes: dict[int, int] | None = None,
     resume: bool = False,
 ) -> IndexTables:
@@ -633,9 +689,12 @@ def write_index(
       columns;
     - ``docmeta``: (doc_id[, url], dl), one row per indexed doc;
     - ``posted``: hash-partitioned on (term_id, segment), carrying a
-      ``bucket`` column (``term_bucket`` of term_id);
-    - ``make_group_fn(n_docs, avgdl)``: the per-(term_id, segment) group
-      function that turns a group of ``posted`` into POSTINGS_SCHEMA rows;
+      ``bucket`` column (``term_bucket`` of term_id) and ``df``, and
+      either posting rows (doc_id, tf, dl[, positions]: the build, the
+      purging compaction) or posting blocks (first_doc, n, payload: the
+      block merge). Each bucket's blocks are ``bucket_blocks``: one
+      ``block_encoder`` pass per partition, scored against the written
+      stats;
     - ``hashes``: bucket → term-content hash (the build's; a compaction
       has none and never resumes).
 
@@ -694,24 +753,15 @@ def write_index(
         # overwrite is idempotent
         prev = _lineage_hashes(spark, index_dir) if committed else {}
         todo = [b for b in range(nb) if not (b in committed and prev.get(b) == want[b])]
-        group_fn = make_group_fn(n_docs, avgdl)
 
         def write_bucket(bucket: int) -> None:
             started = time.time()
-            # filter preserves posted's (term_id, segment) hash
-            # partitioning, so this groupBy plans with NO exchange
-            # (asserted in test_plans)
-            blocks = (
-                posted.filter(F.col("bucket") == bucket)
-                .groupBy("term_id", "segment")
-                .applyInPandas(group_fn, POSTINGS_SCHEMA)
-            )
             # the parquet _SUCCESS marker of this bucket dir IS the atomic
             # per-partition commit (Iceberg-snapshot analog); resume keys
-            # on it. sortWithinPartitions gives each file tight term_id
-            # min/max stats → query-time rowgroup pruning on top of the
-            # bucket-dir pruning
-            blocks.sortWithinPartitions("term_id", "segment", "block_id").write.mode(
+            # on it. The blocks come out in (term_id, segment, block_id)
+            # order, which gives each file tight term_id min/max stats →
+            # query-time rowgroup pruning on top of the bucket-dir pruning
+            bucket_blocks(posted, bucket, cfg, n_docs, avgdl).write.mode(
                 "overwrite"
             ).parquet(f"{index_dir}/postings/bucket={bucket}")
             # read-back metrics + the bucket's own lineage commit. These

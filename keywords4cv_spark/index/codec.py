@@ -19,8 +19,11 @@ doc_ids strictly ascending):
   its per-doc lengths are exactly the tfs, so no extra framing is
   needed. Non-positional readers just ignore the tail.
 
-Everything here is plain numpy on contiguous arrays — it runs inside
-Arrow-batched `applyInPandas` groups, never per-row Python in Spark.
+Everything here is plain numpy on contiguous arrays. The index writer
+(index/build.py ``block_encoder``) calls ``encode_postings`` once per
+(term, segment) run, inside a ``mapInArrow`` task that splits each
+Arrow batch of a sorted partition into runs — never per-row Python in
+Spark.
 """
 
 from __future__ import annotations
@@ -167,3 +170,26 @@ def decode_block_positions(payload: bytes, n: int, first_doc: int):
         positions.append(np.cumsum(deltas))
         off += t
     return doc_ids, tfs, dls, positions
+
+
+def decode_blocks(payloads, ns, first_docs, positional: bool = False):
+    """A sequence of posting blocks (payload, n, first_doc per block),
+    decoded and concatenated in block order → (doc_ids, tfs, dls,
+    positions), positions being one array per doc (None unless
+    ``positional``). Block i contributes ``ns[i]`` docs."""
+    docs, tfs, dls, positions = [], [], [], []
+    for payload, n, first_doc in zip(payloads, ns, first_docs):
+        if positional:
+            d, t, ln, pos = decode_block_positions(payload, int(n), int(first_doc))
+            positions.extend(pos)
+        else:
+            d, t, ln = decode_block(payload, int(n), int(first_doc))
+        docs.append(d)
+        tfs.append(t)
+        dls.append(ln)
+    return (
+        np.concatenate(docs),
+        np.concatenate(tfs),
+        np.concatenate(dls),
+        positions if positional else None,
+    )

@@ -11,23 +11,25 @@ generations pile up this operator compacts them:
   (assign_term_ids);
 - docmeta: union of the generations' docmeta; stats are the build's
   aggregate over it (n_docs/sum_dl sums, avgdl exact);
-- postings: per (term, doc-band) group across all generations, decode
-  the blocks, concatenate (disjoint doc ids), re-encode through the
-  build's own encode step with the COMBINED statistics — block-max
-  scores are exact again, not the conservative tf-only bounds a
-  multi-generation WAND query must use. Positional payloads
-  (store_positions generations) merge too: the per-doc position streams
-  are decoded, carried through the doc-id sort and re-encoded, so phrase
-  search works unchanged on the compacted index;
+- postings: every generation's blocks, hash-partitioned on (term,
+  doc-band) and sorted by it, go through the build's own per-partition
+  encoder (build.block_encoder) in blocks mode: each Arrow batch of
+  blocks is decoded to rows, split into (term, band) runs (disjoint doc
+  ids across generations) and each run re-encoded with the COMBINED
+  statistics — block-max scores are exact again, not the conservative
+  tf-only bounds a multi-generation WAND query must use. Positional
+  payloads (store_positions generations) merge too: the per-doc
+  position streams are decoded, carried through the doc-id sort and
+  re-encoded, so phrase search works unchanged on the compacted index;
 - the compacted tree is committed by build.write_index, the build's own
   writer: same layout, and each term bucket commits on its own
   (postings/bucket=N with its _SUCCESS, then its _lineage row), so
   load_index / bm25_wand / proximity_search work unchanged. A
   compaction never resumes: every bucket is rewritten.
 
-Scale: one dictionary-aggregate shuffle + one (term, band) group-merge
-shuffle over compressed blocks. Payload bytes move exactly once; the
-corpus text is never touched.
+Scale: one dictionary-aggregate shuffle + one (term, band) shuffle over
+compressed blocks. Payload bytes move exactly once; the corpus text is
+never touched.
 """
 
 from __future__ import annotations
@@ -43,52 +45,10 @@ from keywords4cv_spark.config import DEFAULT_CONFIG, EngineConfig
 from keywords4cv_spark.index.build import (
     IndexTables,
     assign_term_ids,
-    encode_step,
-    row_encoder,
     term_bucket,
     write_index,
 )
-from keywords4cv_spark.index.codec import decode_block, decode_block_positions
-
-
-def decode_blocks(pdf: pd.DataFrame, positional: bool):
-    """The posting blocks of a frame (payload, n, first_doc columns),
-    decoded and concatenated in row order → (doc_ids, tfs, dls,
-    positions), positions being one array per doc (None unless
-    ``positional``). Block i contributes ``n[i]`` docs."""
-    docs, tfs, dls, positions = [], [], [], []
-    for payload, n, first_doc in zip(pdf["payload"], pdf["n"], pdf["first_doc"]):
-        if positional:
-            d, t, ln, pos = decode_block_positions(payload, int(n), int(first_doc))
-            positions.extend(pos)
-        else:
-            d, t, ln = decode_block(payload, int(n), int(first_doc))
-        docs.append(d)
-        tfs.append(t)
-        dls.append(ln)
-    return (
-        np.concatenate(docs),
-        np.concatenate(tfs),
-        np.concatenate(dls),
-        positions if positional else None,
-    )
-
-
-def _block_merger(cfg: EngineConfig):
-    """Group-function factory of the block merge: (n_docs, avgdl) → the
-    merge of one (term_id, segment) group's blocks from every generation
-    (decode, then the build's encode step)."""
-
-    def make(n_docs: int, avgdl: float):
-        encode = encode_step(cfg, n_docs, avgdl)
-        positional = cfg.store_positions
-
-        def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            return encode(pdf, *decode_blocks(pdf, positional))
-
-        return merge_group
-
-    return make
+from keywords4cv_spark.index.codec import decode_blocks
 
 
 def compact_generations(
@@ -138,7 +98,7 @@ def compact_generations(
 
     live = None
     if superseded is None:
-        # block merge: old blocks → (term, band) groups → re-encode
+        # block merge: old blocks → (term, band) runs → re-encode
         alldicts = None
         for idx in indexes:
             d = idx.dictionary.select("term", "df", "cf")
@@ -146,12 +106,11 @@ def compact_generations(
         newdict = assign_term_ids(
             alldicts.groupBy("term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
         ).persist()
-        posted, make_group_fn, docmeta = allblocks, _block_merger(cfg), allmeta
+        posted, docmeta = allblocks, allmeta
     else:
         tomb = superseded.select(F.col("doc_id").cast("long")).distinct()
         live, newdict = _live_rows(allblocks, tomb, store_positions)
-        posted, make_group_fn = live, row_encoder(cfg)
-        docmeta = allmeta.join(tomb, "doc_id", "left_anti")
+        posted, docmeta = live, allmeta.join(tomb, "doc_id", "left_anti")
     posted = (
         posted.join(newdict.select("term", "term_id", "df"), "term")
         .drop("term")
@@ -165,7 +124,7 @@ def compact_generations(
         # re-reads those and shuffles only its own bucket
         posted = posted.persist()
     try:
-        return write_index(spark, out_dir, cfg, newdict, docmeta, posted, make_group_fn)
+        return write_index(spark, out_dir, cfg, newdict, docmeta, posted)
     finally:
         if live is not None:
             live.unpersist()
@@ -177,10 +136,12 @@ def _live_rows(allblocks: DataFrame, tomb: DataFrame, positional: bool):
     (``tomb``, distinct doc_ids), persisted, and the dictionary over
     those survivors.
 
-    Unlike the block merge (which moves payload bytes once and never
-    expands them), purging MUST look inside every block — a block may
-    interleave live and dead docs — so the merge runs through the
-    decoded row representation and the standard build encoder. The
+    Unlike the block merge (which moves payload bytes once and decodes
+    them only inside the encoder's task), purging MUST drop docs before
+    any statistic is counted — a block may interleave live and dead
+    docs — so the merge runs through the decoded row representation,
+    and write_index encodes those rows with the build's per-partition
+    encoder (build.block_encoder), exactly as it encodes a build's. The
     result is identical to a fresh ``build_index`` over the live corpus
     (same doc_ids/tf/dl, same term ranks over the surviving vocabulary,
     same statistics → byte-identical payloads; tested), which is the
@@ -202,7 +163,9 @@ def _live_rows(allblocks: DataFrame, tomb: DataFrame, positional: bool):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            doc_ids, tfs, dls, positions = decode_blocks(pdf, positional)
+            doc_ids, tfs, dls, positions = decode_blocks(
+                pdf["payload"], pdf["n"], pdf["first_doc"], positional
+            )
             sizes = pdf["n"].to_numpy(np.int64)
             o = pd.DataFrame(
                 {

@@ -33,9 +33,9 @@ decides whether a WAND batch's tombstones fit in the driver): the
 result is then an Arrow local relation, so every later consumer reads
 it without a Spark job. A larger set is returned as the lazy
 derivation. The QUERY-TIME exclusion depends on where the WAND batch
-runs: a batch served in the driver collects the tombstone set (0 jobs
-from a local relation), capped at the same gate — a larger set sends
-the batch to the Spark plan. There tombstones reach the scoring
+runs: a batch served in the driver reads the ids a local relation
+carries, or else collects the tombstone set, capped at the same gate —
+a larger set sends the batch to the Spark plan. There tombstones reach the scoring
 tasks as extra rows unioned into the block scan, Spark-partitioned
 alongside the postings by the same (query, doc-band) keys, so the cost
 is |tombstones| × |queries| rows per query batch. Either way it is
@@ -111,7 +111,11 @@ def superseded_docs(indexes: list, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFr
 def _local_tombstones(spark: SparkSession, doc_ids: list[int]) -> DataFrame:
     """(doc_id long) as an Arrow local relation: collecting it runs no
     Spark job, even when it is empty (``createDataFrame`` of a list or a
-    pandas frame plans a parallelize job)."""
-    return spark.createDataFrame(
+    pandas frame plans a parallelize job). The relation carries the ids
+    themselves in ``._k4cv_doc_ids`` (a frozenset), so a driver-path
+    WAND batch excluding it skips even the py4j collect."""
+    out = spark.createDataFrame(
         pa.table({"doc_id": pa.array(doc_ids, pa.int64())}), _TOMB_SCHEMA
     )
+    out._k4cv_doc_ids = frozenset(doc_ids)
+    return out

@@ -21,9 +21,10 @@ block is read. Two shapes, one kernel (``_group_topk``):
   the bucket-directory and term_id pruned blocks
   (``IndexTables.postings_for(local=True)``) → the (query, band) groups
   scored in-process → rank-merge in Python → an Arrow local relation.
-  Zero Spark jobs, tombstones included: the batch collects the
-  ``exclude`` relation, which runs no job when it is the local relation
-  ``superseded_docs`` returns for a set under the gate.
+  Zero Spark jobs, tombstones included: the batch reads the ids that
+  the local relation ``superseded_docs`` returns for a set under the
+  gate carries with it (no collect at all), and collects any other
+  ``exclude`` relation.
   At serving scale a warm query's cost is the per-job scheduling floor
   of the Spark shape, not scoring work, so small batches stay here.
 - Spark (larger batches): per generation, the blocks from
@@ -392,12 +393,13 @@ def bm25_wand_multi(
     superseded recrawl versions from ``index/upsert.py:superseded_docs``.
     Excluded docs are dropped from every result while statistics keep
     counting them (Lucene deleted-docs semantics; a purging compaction
-    restores clean statistics). A batch served in the driver collects
-    the tombstone set (at most ``cfg.wand_driver_max_postings`` rows;
-    a larger set sends the batch to the Spark shape): derive the set
-    once per generation list with ``superseded_docs`` and pass it to
-    every batch, so that collect reads a local relation and runs no
-    Spark job. An empty ``indexes`` list answers with an empty result.
+    restores clean statistics). A batch served in the driver needs
+    the tombstone set in the driver (at most
+    ``cfg.wand_driver_max_postings`` rows; a larger set sends the batch
+    to the Spark shape): derive the set once per generation list with
+    ``superseded_docs`` and pass it to every batch — its local relation
+    carries the ids, so the batch neither collects nor runs a Spark
+    job. Any other relation is collected per batch. An empty ``indexes`` list answers with an empty result.
     In the Spark shape tombstones travel as marker rows unioned into the
     block scan, partitioned to the same (query, doc-band) scoring tasks
     as the postings, and all generations must share ``cfg.n_salts`` (the
@@ -520,11 +522,17 @@ def _wand_topk(
     gate = cfg.wand_driver_max_postings
     n_postings = sum(lut[t][1] for lut in luts for t, *_ in qrows if t in lut)
     if n_postings <= gate:  # always so when no term resolves
-        excluded: list[int] = []
+        excluded: frozenset[int] = frozenset()
         if exclude is not None and qrows:
-            excluded = [int(r[0]) for r in exclude.select("doc_id").limit(gate + 1).collect()]
+            # superseded_docs' local relation carries its ids
+            # (upsert._local_tombstones): no py4j collect per batch
+            excluded = getattr(exclude, "_k4cv_doc_ids", None)
+            if excluded is None:
+                excluded = frozenset(
+                    int(r[0]) for r in exclude.select("doc_id").limit(gate + 1).collect()
+                )
         if len(excluded) <= gate:
-            return _driver_topk(spark, indexes, qrows, sc, after or {}, frozenset(excluded))
+            return _driver_topk(spark, indexes, qrows, sc, after or {}, excluded)
     return _spark_topk(spark, indexes, qrows, sc, cfg.n_salts, after or {}, exclude)
 
 

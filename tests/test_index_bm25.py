@@ -462,6 +462,118 @@ def test_empty_corpus_raises_cleanly(spark, docs, tmp_path):
         )
 
 
+_ENCODE_CASES = {
+    # (store_positions, spark.sql.execution.arrow.maxRecordsPerBatch);
+    # 7-row batches make (term, segment) runs cross batch boundaries
+    "plain": (False, None),
+    "plain-batch7": (False, 7),
+    "positional": (True, None),
+    "positional-batch7": (True, 7),
+}
+
+
+def _encoded_runs(tf, n_docs, avgdl, cfg):
+    """POSTINGS_SCHEMA tuples of ``encode_postings`` over each (term_id,
+    segment) run of the tf rows ``tf`` (pandas: term_id, segment, df,
+    doc_id, tf, dl[, positions]), sorted."""
+    from keywords4cv_spark.index.codec import encode_postings
+
+    out = []
+    for (tid, seg), run in tf.groupby(["term_id", "segment"]):
+        df_val = int(run["df"].iloc[0])
+        idf = float(np.log(1.0 + (n_docs - df_val + 0.5) / (df_val + 0.5)))
+        positions = list(run["positions"]) if "positions" in run.columns else None
+        for blk in encode_postings(
+            run["doc_id"].to_numpy(), run["tf"].to_numpy(), run["dl"].to_numpy(),
+            idf, cfg.k1, cfg.b, avgdl, cfg.block_size, positions=positions,
+        ):
+            out.append((int(tid), int(seg), *blk.values()))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("case", list(_ENCODE_CASES))
+def test_block_encoder_equals_encode_postings_per_run(spark, docs, tmp_path, case):
+    """The build's per-partition encoder (build.block_encoder under
+    mapInArrow) writes, for every (term, segment) run, exactly the blocks
+    encode_postings makes of that run's tf rows, whatever the Arrow batch
+    size; and every postings file is in (term_id, segment, block_id)
+    order."""
+    import pyarrow.parquet as pq
+
+    from keywords4cv_spark.index.build import term_frequencies_fused
+
+    positional, batch = _ENCODE_CASES[case]
+    cfg = replace(CFG, store_positions=positional)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if batch:
+        spark.conf.set(key, str(batch))
+    try:
+        idx = build_index(spark, docs, str(tmp_path / "enc"), cfg, url_col="source")
+    finally:
+        spark.conf.set(key, old)
+    srow = idx.stats_row()
+    tf = (
+        term_frequencies_fused(docs, cfg, with_positions=positional)
+        .join(idx.dictionary.select("term", "term_id", "df"), "term")
+        .withColumn("segment", F.col("doc_id") % cfg.n_salts)
+        .toPandas()
+    )
+    want = _encoded_runs(tf, int(srow["n_docs"]), float(srow["avgdl"]), cfg)
+    got = sorted(tuple(r) for r in idx.postings.select(*_POSTINGS_COLS).collect())
+    assert got == want and len({r[:2] for r in got}) > 100
+    for f in sorted((tmp_path / "enc" / "postings").glob("bucket=*/*.parquet")):
+        t = pq.read_table(f, columns=["term_id", "segment", "block_id"])
+        keys = list(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+        assert keys == sorted(keys), f
+
+
+def test_block_encoder_is_batch_split_invariant():
+    """block_encoder over one sorted partition gives the same blocks
+    however its Arrow batches split the (term, segment) runs — one row
+    per batch, 7 rows, or the whole partition — in rows mode and in
+    blocks mode (the block merge), plain and positional; no run is lost
+    or split at a batch boundary."""
+    import pyarrow as pa
+
+    from keywords4cv_spark.index.build import block_encoder
+
+    rng = np.random.default_rng(7)
+    keys = sorted({(int(t), int(s)) for t, s in rng.integers(1, 40, (120, 2))})
+    rows = []
+    for tid, seg in keys:
+        docs_ = np.sort(rng.choice(5000, int(rng.integers(1, 300)), replace=False))
+        for d in docs_:
+            tf = int(rng.integers(1, 5))
+            rows.append((tid, seg, 7, int(d), tf, int(rng.integers(tf, 90)),
+                         sorted(rng.choice(90, tf, replace=False).tolist())))
+    names = ["term_id", "segment", "df", "doc_id", "tf", "dl", "positions"]
+    table = pa.table(dict(zip(names, map(list, zip(*rows)))))
+
+    def run(tbl, cfg, size, blocks=False):
+        fn = block_encoder(cfg, 5000, 40.0, blocks=blocks)
+        out = pa.Table.from_batches(list(fn(iter(tbl.to_batches(max_chunksize=size)))))
+        return list(zip(*(out.column(c).to_pylist() for c in out.column_names)))
+
+    for positional in (False, True):
+        cfg = EngineConfig(block_size=16, store_positions=positional)
+        tbl = table if positional else table.drop_columns(["positions"])
+        want = run(tbl, cfg, len(rows))
+        assert [r[:3] for r in want] == sorted(r[:3] for r in want)
+        assert sum(r[5] for r in want) == len(rows)
+        for size in (1, 7):
+            assert run(tbl, cfg, size) == want
+        # blocks mode: the written blocks, decoded and re-encoded, are
+        # the same blocks again
+        blk = pa.table({
+            "term_id": [r[0] for r in want], "segment": [r[1] for r in want],
+            "df": [7] * len(want), "first_doc": [r[3] for r in want],
+            "n": [r[5] for r in want], "payload": [r[8] for r in want],
+        })
+        for size in (1, 7, len(want)):
+            assert run(blk, cfg, size, blocks=True) == want
+
+
 def test_compaction_equals_full_rebuild(spark, docs, tmp_path):
     """Block-level compaction of two generations must produce byte-level
     the same postings as one full build over the union: same n_salts →
@@ -949,6 +1061,29 @@ def test_tombstones_in_the_driver_run_no_job(spark, recrawl_gens):
         empty = superseded_docs([g], CFG)
         assert _is_local(empty)
         assert _jobs(spark, empty.collect) == ([], 0)
+
+
+def test_driver_wand_reads_tombstone_ids_without_collect(spark, recrawl_gens, monkeypatch):
+    """The local relation superseded_docs returns carries its ids, and a
+    driver-path bm25_wand_multi(exclude=...) uses them: with
+    DataFrame.collect made to raise, the batch still gives the same
+    answer."""
+    from keywords4cv_spark.index.upsert import superseded_docs
+    from keywords4cv_spark.query.wand import bm25_wand_multi
+
+    _, _, gens = recrawl_gens
+    drv = _gate_sides(CFG)["driver"]
+    tomb = superseded_docs(gens, CFG)
+    assert tomb._k4cv_doc_ids == {r.doc_id for r in tomb.collect()}
+    want = _collect(bm25_wand_multi(spark, gens, drv, exclude=tomb))
+
+    def no_collect(self):
+        raise AssertionError("exclude relation collected")
+
+    with monkeypatch.context() as m:
+        m.setattr(type(tomb), "collect", no_collect)
+        got = bm25_wand_multi(spark, gens, drv, exclude=tomb)
+    assert _collect(got) == want and want
 
 
 def test_empty_generation_list_answers_empty(spark, tmp_path):

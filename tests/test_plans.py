@@ -329,12 +329,18 @@ def test_centroid_assignment_has_no_window_or_explosion(spark, sf_dir):
 
 def test_bucket_encode_reuses_cached_partitioning(spark, sf_dir):
     """The SPIMI encode cache (build_index's `posted`) is repartitioned
-    on (term_id, segment) ONCE and persisted; every per-bucket encode job
-    must plan its groupBy(term_id, segment) with NO new Exchange above
-    the cache scan — the r4 layout re-scanned the string-heavy tf cache,
-    re-probed the dictionary, and re-shuffled once per bucket (redundant
-    DRAM traffic on a bandwidth-bound build)."""
-    from keywords4cv_spark.index.build import build_dictionary, term_frequencies
+    on (term_id, segment) ONCE and persisted; every per-bucket encode
+    (build.bucket_blocks, which write_index writes) must plan with NO
+    new Exchange above the cache scan — the r4 layout re-scanned the
+    string-heavy tf cache, re-probed the dictionary, and re-shuffled
+    once per bucket (redundant DRAM traffic on a bandwidth-bound build).
+    The encode is one mapInArrow pass per partition, not a per-group
+    FlatMapGroupsInPandas."""
+    from keywords4cv_spark.index.build import (
+        bucket_blocks,
+        build_dictionary,
+        term_frequencies,
+    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     with without_aqe(spark):
@@ -351,12 +357,9 @@ def test_bucket_encode_reuses_cached_partitioning(spark, sf_dir):
             .persist()
         )
         try:
-            per_bucket = (
-                posted.filter(F.col("bucket") == 0)
-                .groupBy("term_id", "segment")
-                .agg(F.count("*").alias("n"))
+            plan = explain_str(
+                bucket_blocks(posted, 0, CFG, n_docs=100, avgdl=10.0), mode="simple"
             )
-            plan = explain_str(per_bucket, mode="simple")
         finally:
             posted.unpersist()
             staged = getattr(dictionary, "_k4cv_staged", None)
@@ -368,6 +371,8 @@ def test_bucket_encode_reuses_cached_partitioning(spark, sf_dir):
     above_cache = plan.split("InMemoryRelation", 1)[0]
     assert "InMemoryTableScan" in plan, plan
     assert "Exchange" not in above_cache, above_cache
+    assert "MapInArrow" in above_cache, above_cache
+    assert "FlatMapGroupsInPandas" not in plan, plan
 
 
 def test_query_string_indexed_reads_postings_not_corpus(spark, sf_dir):
