@@ -34,11 +34,12 @@ result is then an Arrow local relation, so every later consumer reads
 it without a Spark job. A larger set is returned as the lazy
 derivation. The QUERY-TIME exclusion depends on where the WAND batch
 runs: a batch served in the driver reads the ids a local relation
-carries, or else collects the tombstone set, capped at the same gate —
-a larger set sends the batch to the Spark plan. There tombstones reach the scoring
-tasks as extra rows unioned into the block scan, Spark-partitioned
-alongside the postings by the same (query, doc-band) keys, so the cost
-is |tombstones| × |queries| rows per query batch. Either way it is
+carries, or else collects the tombstone set, capped at the same
+gate — a larger set sends the batch to the Spark plan. There
+tombstones reach the scoring tasks as extra rows unioned into the
+block scan, Spark-partitioned alongside the postings by the same
+(query, doc-band) keys, so the cost is |tombstones| × |queries| rows
+per query batch. Either way it is
 bounded by the recrawl volume of the compaction cycle (the LSM
 contract: compaction keeps the live tombstone set small). Reference
 parity: the reference engine rebuilds its cache wholesale on input

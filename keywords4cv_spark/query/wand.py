@@ -399,7 +399,8 @@ def bm25_wand_multi(
     to the Spark shape): derive the set once per generation list with
     ``superseded_docs`` and pass it to every batch — its local relation
     carries the ids, so the batch neither collects nor runs a Spark
-    job. Any other relation is collected per batch. An empty ``indexes`` list answers with an empty result.
+    job. Any other relation is collected per batch. An empty
+    ``indexes`` list answers with an empty result.
     In the Spark shape tombstones travel as marker rows unioned into the
     block scan, partitioned to the same (query, doc-band) scoring tasks
     as the postings, and all generations must share ``cfg.n_salts`` (the
